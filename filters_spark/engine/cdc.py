@@ -46,11 +46,14 @@ from typing import Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import BooleanType, IntegerType, StructType
 
 from filters_spark.engine.evolution import SpecRegistry
+from filters_spark.engine.local import (
+    PASSTHROUGH, apply_local, local_batch_schema, parquet_footers,
+)
+from filters_spark.lake.fileio import write_parquet_local
 from filters_spark.lake.table import LakeTable, WATERMARK_ZERO, bucket_expr, lww_merge, watermark_str
-
-PASSTHROUGH = ["commit", "event_seq", "op", "schema_version"]
 
 
 @dataclass(frozen=True)
@@ -297,6 +300,14 @@ class CDCEngine:
         os.environ.get("FILTERS_SPARK_FOLD_ROWS_PER_PARTITION", "200000")
     )
 
+    # Merge-on-read batches up to this many input rows (counted from
+    # the parquet footers) apply on the driver (engine/local.py): below
+    # it the Spark path's fixed per-batch cost outweighs running the
+    # kernels in one Python process. Measured on a 4-core local[4]
+    # host, the driver path is faster up to ~40k rows (README.md,
+    # "Small batches on the driver"); the constant sits at half that.
+    LOCAL_MAX_ROWS = 20_000
+
     def _fold_partitions(self, rows_est: int) -> int:
         floor = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
         return max(floor, min(rows_est // self.FOLD_ROWS_PER_PARTITION + 1, 4096))
@@ -338,13 +349,6 @@ class CDCEngine:
         sv = F.col("schema_version")
         known_cond = sv.isin(known)
 
-        def src_name(field: str, v: int) -> str | None:
-            incoming = field
-            for old, new in self.registry.get(v).renames.items():
-                if new == field:
-                    incoming = old
-            return incoming if incoming in events.columns else None
-
         empty_errs = F.array().cast(ERRORS_DDL)
         field_values: dict[str, F.Column] = {}
         field_raws: dict[str, F.Column] = {}
@@ -360,17 +364,9 @@ class CDCEngine:
         # twice, so CollapseProject keeps the two projections apart and
         # the chain runs once.
         part_cols: list[F.Column] = []
-        for field in self.registry.canonical_columns:
-            groups: dict[str, list[int]] = {}
-            for v in known:
-                chain = self.registry.get(v).field_specs.get(field)
-                key = json.dumps([chain, src_name(field, v)], sort_keys=True, default=repr)
-                groups.setdefault(key, []).append(v)
-
+        for field, groups in self._validation_groups(events.columns).items():
             value_expr, err_expr, raw_expr = None, None, None
-            for gi, vs in enumerate(groups.values()):
-                chain_spec = self.registry.get(vs[0]).field_specs.get(field)
-                src = src_name(field, vs[0])
+            for gi, (vs, chain_spec, src) in enumerate(groups):
                 # WAL payload contract: field chains consume STRING
                 # payloads (binlog/WAL values arrive serialized). A
                 # non-string source column is therefore cast to string
@@ -384,7 +380,7 @@ class CDCEngine:
                 # kernels (Int etc.) re-cast the cleaned value to its
                 # target dtype, so outputs are unchanged (pinned
                 # byte-exact vs the pandas oracle).
-                if src is not None and src in events.columns and (
+                if src is not None and (
                     events.schema[src].dataType.simpleString() != "string"
                 ):
                     in_col = F.col(src).cast("string")
@@ -452,6 +448,30 @@ class CDCEngine:
         projection.append(all_errs.alias(ERRORS_COL))
         base = events.select("*", *part_cols) if part_cols else events
         return base.select(*projection)
+
+    def _validation_groups(self, columns: list[str]) -> dict[str, list[tuple]]:
+        """The validation plan both validators run: per canonical field,
+        the registered versions grouped by (chain spec, source column
+        after rename) as ``(versions, chain_spec, src)`` — each distinct
+        chain runs once over the rows of its versions. ``src`` is None
+        when the versions' incoming column is absent from ``columns``."""
+        def src_name(field: str, v: int) -> str | None:
+            incoming = field
+            for old, new in self.registry.get(v).renames.items():
+                if new == field:
+                    incoming = old
+            return incoming if incoming in columns else None
+
+        plan: dict[str, list[tuple]] = {}
+        for field in self.registry.canonical_columns:
+            groups: dict[str, tuple] = {}
+            for v in sorted(self.registry.versions):
+                chain = self.registry.get(v).field_specs.get(field)
+                src = src_name(field, v)
+                key = json.dumps([chain, src], sort_keys=True, default=repr)
+                groups.setdefault(key, ([], chain, src))[0].append(v)
+            plan[field] = list(groups.values())
+        return plan
 
     @staticmethod
     def _null_clean_raws(out: DataFrame) -> DataFrame:
@@ -592,6 +612,20 @@ class CDCEngine:
         finally:
             self._SCAN_SPLITS_LOCK.release()
 
+    def _staged_frame(self, events: DataFrame, snap: dict) -> DataFrame:
+        """The validated, bucketed batch as staging writes it (before the
+        partition columns): passthrough, per-field value and raw,
+        ``_errors``, ``_bucket``, ``_wm``, ``_dead``."""
+        validated = self._validated(events)
+        if self.ref_checks or self.check_constraints:
+            validated = self._ref_checked(validated)
+        validated = self._null_clean_raws(validated)
+        validated = validated.withColumn(
+            "_bucket",
+            bucket_expr(F.col("repo"), F.col("path"), snap["num_buckets"], snap["path_salt"]),
+        ).withColumn("_wm", watermark_str(F.col("commit"), F.col("event_seq")))
+        return validated.withColumn("_dead", F.size(F.col("_errors")) > 0)
+
     def _stage(
         self,
         events: DataFrame,
@@ -599,7 +633,7 @@ class CDCEngine:
         batch_col: F.Column | None = None,
         prefix: str = "batch",
         scratch_dir: str | None = None,
-    ) -> str:
+    ) -> tuple[str, StructType]:
         """Validate + bucket the stream and stage it to scratch parquet,
         partitioned by (_batch?, _dead).
 
@@ -617,26 +651,33 @@ class CDCEngine:
         recompute-per-consumer (3x kernel + scan) and .persist()
         (JavaSerializer spill dominated). On a cluster the scratch dir
         is the job's DFS staging location — bounded by the staged input
-        size, cleaned after the last commit."""
-        validated = self._validated(events)
-        if self.ref_checks or self.check_constraints:
-            validated = self._ref_checked(validated)
-        validated = self._null_clean_raws(validated)
-        validated = validated.withColumn(
-            "_bucket",
-            bucket_expr(F.col("repo"), F.col("path"), snap["num_buckets"], snap["path_salt"]),
-        ).withColumn("_wm", watermark_str(F.col("commit"), F.col("event_seq")))
-        staged = validated.withColumn("_dead", F.size(F.col("_errors")) > 0)
+        size, cleaned after the last commit.
+
+        Returns the scratch dir and the schema to read it back with
+        (:meth:`_read_staged`): the staged columns with the partition
+        columns last, ``_batch`` int and ``_dead`` boolean — a declared
+        schema spares the read-back a footer-inference job."""
+        staged = self._staged_frame(events, snap)
         parts = ["_dead"]
         if batch_col is not None:
-            staged = staged.withColumn("_batch", batch_col)
+            staged = staged.withColumn("_batch", batch_col.cast("int"))
             parts = ["_batch", "_dead"]
         scratch = scratch_dir or os.path.join(
             self.table.root, "_staging", f"{prefix}-{uuid.uuid4().hex}"
         )
         with self._scan_splits(events):
             staged.write.partitionBy(*parts).parquet(scratch)
-        return scratch
+        return scratch, self._read_schema(staged.schema, batch_col is not None)
+
+    @staticmethod
+    def _read_schema(staged: StructType, batched: bool) -> StructType:
+        out = StructType([f for f in staged.fields if f.name not in ("_batch", "_dead")])
+        if batched:
+            out = out.add("_batch", IntegerType())
+        return out.add("_dead", BooleanType())
+
+    def _read_staged(self, scratch: str, schema: StructType) -> DataFrame:
+        return self.spark.read.schema(schema).option("basePath", scratch).parquet(scratch)
 
     def apply_batch(self, events: DataFrame, audit_fn=None) -> dict:
         """Apply one event batch; returns metrics. Idempotent: replaying
@@ -650,24 +691,24 @@ class CDCEngine:
         (or an exception) abandons the stage: the table head, the
         watermarks and the dead-letter table are all untouched, so
         re-applying the batch after fixing the producer is NOT treated
-        as a replay. Metrics gain ``"audit": "published"|"rejected"``."""
+        as a replay. Metrics gain ``"audit": "published"|"rejected"``.
+
+        A merge-on-read batch of at most ``LOCAL_MAX_ROWS`` parquet rows
+        (and no ``audit_fn``) applies on the driver instead of through
+        Spark staging — same results, one Spark job (engine/local.py)."""
         t0 = time.time()
         snap = self.table.current()
-        scratch = self._stage(events, snap)
+        if audit_fn is None:
+            schema = local_batch_schema(self, events, snap)
+            if schema is not None:
+                return apply_local(self, events, snap, schema, t0)
+        scratch, schema = self._stage(events, snap)
         try:
             if not self.io.tree_has_suffix(scratch, ".parquet"):  # empty input
-                return {
-                    "events_in": 0, "applied": 0, "dead_lettered": 0,
-                    "skipped_replays": 0,
-                    "snapshot_id": snap["snapshot_id"], "seconds": time.time() - t0,
-                }
-            staged = (
-                self.spark.read.option("basePath", scratch).parquet(scratch)
-                # partition-column inference yields STRING for booleans
-                .withColumn("_dead", F.col("_dead").cast("boolean"))
-            )
+                return self._untouched_metrics(self._batch_stats([]), snap, t0)
             return self._apply_staged(
-                staged, os.path.join(scratch, "_dead=true"), os.path.basename(scratch), t0,
+                self._read_staged(scratch, schema),
+                os.path.join(scratch, "_dead=true"), os.path.basename(scratch), t0,
                 audit_fn=audit_fn,
             )
         finally:
@@ -868,16 +909,17 @@ class CDCEngine:
             # leaves a partial tree), the job-commit _SUCCESS marker is.
             # A crash in the final cleanup window (all chunks done,
             # scratch already removed) must NOT re-stage.
+            schema = None
             if len(set(state["chunks_done"])) < num_chunks and not self.io.exists(
                 success_marker
             ):
                 if self.io.isdir(scratch):
                     self.io.rmtree(scratch)
-                self._stage_bootstrap(rows, num_chunks, snap, scratch)
+                schema = self._stage_bootstrap(rows, num_chunks, snap, scratch)
         else:
             if self.io.isdir(scratch):  # stale partial stage, no state
                 self.io.rmtree(scratch)
-            self._stage_bootstrap(rows, num_chunks, snap, scratch)
+            schema = self._stage_bootstrap(rows, num_chunks, snap, scratch)
             state = {
                 "replay_from": low, "num_chunks": num_chunks, "chunks_done": [],
                 "head": self.table.current_snapshot_id(),
@@ -893,10 +935,9 @@ class CDCEngine:
         totals = dict(state["totals"])
         done = set(state["chunks_done"])
         if done != set(range(num_chunks)) and self.io.tree_has_suffix(scratch, ".parquet"):
-            staged_all = (
-                self.spark.read.option("basePath", scratch).parquet(scratch)
-                .withColumn("_dead", F.col("_dead").cast("boolean"))
-            )
+            if schema is None:  # resuming onto an earlier call's complete stage
+                schema = self._read_schema(self._staged_frame(rows, snap).schema, True)
+            staged_all = self._read_staged(scratch, schema)
             for i in range(num_chunks):
                 if i in done:
                     continue
@@ -932,12 +973,12 @@ class CDCEngine:
 
     def _stage_bootstrap(
         self, rows: DataFrame, num_chunks: int, snap: dict, scratch: str
-    ) -> None:
+    ) -> StructType:
         chunk = F.pmod(
             bucket_expr(F.col("repo"), F.col("path"), snap["num_buckets"], snap["path_salt"]),
             F.lit(num_chunks),
-        ).cast("int")
-        self._stage(rows, snap, batch_col=chunk, scratch_dir=scratch)
+        )
+        return self._stage(rows, snap, batch_col=chunk, scratch_dir=scratch)[1]
 
     def stage_batch(self, events: DataFrame, wap_id: str) -> StagedBatch:
         """:meth:`apply_batch` halted at the commit point: validate,
@@ -959,7 +1000,7 @@ class CDCEngine:
         stager's in-flight scratch."""
         t0 = time.time()
         snap = self.table.current()
-        scratch = self._stage(events, snap, prefix="txn")
+        scratch, schema = self._stage(events, snap, prefix="txn")
         try:
             if not self.io.tree_has_suffix(scratch, ".parquet"):  # empty input
                 self.io.rmtree(scratch)
@@ -970,12 +1011,8 @@ class CDCEngine:
                     n_dead=0, events_in=0, applied=0, skipped=0,
                     bucket_stats=[], t0=t0,
                 )
-            staged = (
-                self.spark.read.option("basePath", scratch).parquet(scratch)
-                .withColumn("_dead", F.col("_dead").cast("boolean"))
-            )
             handle = self._apply_staged(
-                staged, os.path.join(scratch, "_dead=true"),
+                self._read_staged(scratch, schema), os.path.join(scratch, "_dead=true"),
                 os.path.basename(scratch), t0, stage_only_wap=wap_id,
             )
             handle.scratch = scratch
@@ -1042,18 +1079,11 @@ class CDCEngine:
                 .agg(F.max("_wm").alias("wm"), F.count("*").alias("n"))
                 .collect()
             )
-        events_in = int(sum(r["n"] for r in stats_rows))
-        n_dead = int(sum(r["n"] for r in stats_rows if r["_dead"] and r["_survives"]))
-        skipped = int(sum(r["n"] for r in stats_rows if not r["_survives"]))
-        bucket_stats = [r for r in stats_rows if not r["_dead"] and r["_survives"]]
+        p = self._batch_stats(stats_rows)
+        events_in, n_dead, skipped = p["events_in"], p["n_dead"], p["skipped"]
+        bucket_stats, touched, new_wms = p["bucket_stats"], p["touched"], p["new_wms"]
+        applied_events = p["applied"]
         clean = staged.filter(~F.col("_dead") & F.col("_survives")).drop("_dead", "_survives")
-
-        # a NULL key can't be merged; key-less clean rows are dead-lettered upstream
-        # by the 'required' chain on path, so clean rows always have keys.
-
-        touched = sorted({int(r["_bucket"]) for r in bucket_stats})
-        new_wms = {int(r["_bucket"]): r["wm"] for r in bucket_stats}
-        applied_events = int(sum(r["n"] for r in bucket_stats))
 
         if not touched:
             if stage_only_wap is not None:
@@ -1067,11 +1097,7 @@ class CDCEngine:
                     skipped=skipped, bucket_stats=[], t0=t0,
                 )
             self._adopt_dead_letters(dead_src, adopt_name, n_dead)
-            return {
-                "events_in": events_in, "applied": 0, "dead_lettered": n_dead,
-                "skipped_replays": skipped,
-                "snapshot_id": snap["snapshot_id"], "seconds": time.time() - t0,
-            }
+            return self._untouched_metrics(p, snap, t0)
 
         # 6. merge. ev_cols carry everything the LWW fold needs; clean
         # rows always have keys (the 'required' chain on path dead-
@@ -1134,9 +1160,6 @@ class CDCEngine:
                 new_snap = self._audit_publish(audit_fn, wap_id)
                 if new_snap is None:
                     return self._rejected_metrics(events_in, skipped, snap, t0)
-            ripe = self.table.buckets_needing_compaction(self.compact_after)
-            if ripe:
-                self.table.compact(ripe)
         else:
             # copy-on-write: current state of touched buckets + batch
             # events through ONE shuffle keyed on _bucket (== the
@@ -1190,35 +1213,58 @@ class CDCEngine:
         # scan never races the move): adopt the staged _dead=true
         # files AS the dead-letter table — a metadata move, not
         # another Spark job over the batch.
-        self._adopt_dead_letters(dead_src, adopt_name, n_dead)
+        out = self._after_commit(
+            new_snap, p, lambda: self._adopt_dead_letters(dead_src, adopt_name, n_dead),
+            t0, lineage_sink,
+        )
+        if wap_id is not None:
+            out["audit"] = "published"
+        return out
 
+    def _after_commit(self, new_snap: dict, p: dict, adopt_dead, t0: float,
+                      lineage_sink: list | None = None) -> dict:
+        """The side effects after a batch's commit, shared by the Spark
+        and driver-side paths: threshold compaction (MoR), dead-letter
+        adoption (``adopt_dead``), lineage rows. Returns the metrics."""
+        if self.write_mode == "mor":
+            ripe = self.table.buckets_needing_compaction(self.compact_after)
+            if ripe:
+                self.table.compact(ripe)
+        adopt_dead()
         # 8. lineage — metadata-scale rows; inside replay() they buffer
         # into one write per replay (a per-batch single-task write job
         # was a measurable slice of the serial fraction)
         lineage_rows = [
             (
                 new_snap["snapshot_id"], int(r["_bucket"]), r["wm"], int(r["n"]),
-                n_dead, int(time.time() * 1000),
+                p["n_dead"], int(time.time() * 1000),
             )
-            for r in bucket_stats
+            for r in p["bucket_stats"]
         ]
         if lineage_sink is not None:
             lineage_sink.extend(lineage_rows)
         else:
             self._write_lineage(lineage_rows)
-
-        out = {
-            "events_in": events_in,
-            "applied": applied_events,
-            "dead_lettered": n_dead,
-            "skipped_replays": skipped,
-            "touched_buckets": len(touched),
+        return {
+            "events_in": p["events_in"],
+            "applied": p["applied"],
+            "dead_lettered": p["n_dead"],
+            "skipped_replays": p["skipped"],
+            "touched_buckets": len(p["touched"]),
             "snapshot_id": new_snap["snapshot_id"],
             "seconds": time.time() - t0,
         }
-        if wap_id is not None:
-            out["audit"] = "published"
-        return out
+
+    @staticmethod
+    def _untouched_metrics(p: dict, snap: dict, t0: float) -> dict:
+        """Metrics of a batch that touched no bucket (empty input, or
+        empty after dead-lettering and the watermark gate): the head
+        did not move."""
+        return {
+            "events_in": p["events_in"], "applied": 0, "dead_lettered": p["n_dead"],
+            "skipped_replays": p["skipped"],
+            "snapshot_id": snap["snapshot_id"], "seconds": time.time() - t0,
+        }
 
     def _audit_publish(self, audit_fn, wap_id: str):
         """Run the write-audit-publish gate over a staged commit: True
@@ -1266,7 +1312,11 @@ class CDCEngine:
             "skipped": int(sum(r["n"] for r in rows if not r["_survives"])),
             "bucket_stats": bucket_stats,
             "touched": sorted({int(r["_bucket"]) for r in bucket_stats}),
-            "new_wms": {int(r["_bucket"]): r["wm"] for r in bucket_stats},
+            # a bucket whose applied events all lack an order position
+            # (NULL commit or seq) keeps its watermark
+            "new_wms": {
+                int(r["_bucket"]): r["wm"] for r in bucket_stats if r["wm"] is not None
+            },
             "applied": int(sum(r["n"] for r in bucket_stats)),
         }
 
@@ -1386,13 +1436,7 @@ class CDCEngine:
                 adopt_name = f"{os.path.basename(scratch)}-b{i}"
                 if not p["touched"]:
                     self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"])
-                    metrics.append({
-                        "events_in": p["events_in"], "applied": 0,
-                        "dead_lettered": p["n_dead"],
-                        "skipped_replays": p["skipped"],
-                        "snapshot_id": self.table.current()["snapshot_id"],
-                        "seconds": time.time() - t0,
-                    })
+                    metrics.append(self._untouched_metrics(p, self.table.current(), t0))
                     continue
                 sid = sid_of[i]
                 src_dir = os.path.join(group_out, f"_snap={sid}")
@@ -1440,24 +1484,13 @@ class CDCEngine:
                         basis["deltas"][bs] = new_raw["deltas"][bs]
                     else:
                         basis["deltas"].pop(bs, None)
-                self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"])
-                lineage_rows.extend(
-                    (
-                        sid, int(r["_bucket"]), r["wm"], int(r["n"]),
-                        p["n_dead"], int(time.time() * 1000),
-                    )
-                    for r in p["bucket_stats"]
+                m = self._after_commit(
+                    new_snap, p,
+                    lambda: self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"]),
+                    t0, lineage_rows,
                 )
-                metrics.append({
-                    "events_in": p["events_in"],
-                    "applied": p["applied"],
-                    "dead_lettered": p["n_dead"],
-                    "skipped_replays": p["skipped"],
-                    "touched_buckets": len(p["touched"]),
-                    "snapshot_id": sid,
-                    # the shared merge job's wall, apportioned equally
-                    "seconds": (time.time() - t0) + merge_share,
-                })
+                m["seconds"] += merge_share  # the shared merge job's wall, apportioned
+                metrics.append(m)
         finally:
             self.io.rmtree(group_out)
         return metrics
@@ -1532,13 +1565,7 @@ class CDCEngine:
                 adopt_name = f"{os.path.basename(scratch)}-b{i}"
                 if not p["touched"]:
                     self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"])
-                    metrics.append({
-                        "events_in": p["events_in"], "applied": 0,
-                        "dead_lettered": p["n_dead"],
-                        "skipped_replays": p["skipped"],
-                        "snapshot_id": self.table.current()["snapshot_id"],
-                        "seconds": time.time() - t0,
-                    })
+                    metrics.append(self._untouched_metrics(p, self.table.current(), t0))
                     continue
                 sid = self.table.current()["snapshot_id"] + 1
                 src_dir = os.path.join(group_out, f"_batch={i}")
@@ -1568,26 +1595,13 @@ class CDCEngine:
                     schema_version=self.registry.latest,
                     columns=self.registry.canonical_columns,
                 )
-                ripe = self.table.buckets_needing_compaction(self.compact_after)
-                if ripe:
-                    self.table.compact(ripe)
-                self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"])
-                lineage_rows.extend(
-                    (
-                        new_snap["snapshot_id"], int(r["_bucket"]), r["wm"], int(r["n"]),
-                        p["n_dead"], int(time.time() * 1000),
-                    )
-                    for r in p["bucket_stats"]
+                m = self._after_commit(
+                    new_snap, p,
+                    lambda: self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"]),
+                    t0, lineage_rows,
                 )
-                metrics.append({
-                    "events_in": p["events_in"],
-                    "applied": p["applied"],
-                    "dead_lettered": p["n_dead"],
-                    "skipped_replays": p["skipped"],
-                    "touched_buckets": len(p["touched"]),
-                    "snapshot_id": new_snap["snapshot_id"],
-                    "seconds": (time.time() - t0) + merge_share,
-                })
+                m["seconds"] += merge_share
+                metrics.append(m)
         finally:
             self.io.rmtree(group_out)
         return metrics
@@ -1610,21 +1624,12 @@ class CDCEngine:
         """Append the lineage rows as one parquet file written directly
         from the driver (pyarrow), skipping the ~1s createDataFrame +
         single-task write Spark job — a fixed serial term paid once per
-        replay/apply for a handful of metadata-scale rows. Local
-        FileIO only (pyarrow cannot target the Hadoop gateway);
-        schema matches LINEAGE_DDL's parquet layout exactly, so
-        Spark-written and driver-written files coexist in one read.
-        Write-to-temp + atomic rename keeps concurrent lineage()
-        readers from seeing a partial file."""
-        from filters_spark.lake.fileio import LocalFileIO
+        replay/apply for a handful of metadata-scale rows. False (and
+        nothing written) when ``lineage_dir`` has a URI scheme; schema
+        matches LINEAGE_DDL's parquet layout exactly, so Spark-written
+        and driver-written files coexist in one read."""
+        import pyarrow as pa
 
-        if not isinstance(self.io, LocalFileIO):
-            return False
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except ImportError:
-            return False
         schema = pa.schema([
             ("snapshot_id", pa.int64()),
             ("bucket", pa.int32()),
@@ -1633,16 +1638,10 @@ class CDCEngine:
             ("batch_dead_lettered", pa.int64()),
             ("ts_ms", pa.int64()),
         ])
-        cols = list(zip(*rows))
         tbl = pa.table(
-            {f.name: list(c) for f, c in zip(schema, cols)}, schema=schema
+            {f.name: list(c) for f, c in zip(schema, zip(*rows))}, schema=schema
         )
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}-driver.parquet"
-        tmp = os.path.join(self.lineage_dir, f".{name}.tmp")
-        pq.write_table(tbl, tmp, compression="snappy")
-        os.replace(tmp, os.path.join(self.lineage_dir, name))
-        return True
+        return write_parquet_local(tbl, self.lineage_dir) is not None
 
     def _adopt_dead_letters(self, dead_src: str, adopt_name: str, n_dead: int) -> None:
         if n_dead and self.io.isdir(dead_src):
@@ -1675,31 +1674,15 @@ class CDCEngine:
         return bounds
 
     def _footer_commit_bounds(self, events: DataFrame) -> tuple[int, int] | None:
+        footers = parquet_footers(events)
+        if footers is None:
+            return None
         try:
-            files = events.inputFiles()
+            footers = list(footers)
         except Exception:
             return None
-        if not files:
-            return None
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            return None
         lo = hi = None
-        for uri in files:
-            if uri.startswith("file:"):
-                path = uri[len("file:"):]
-                # file:///x and file:/x both mean /x
-                while path.startswith("//"):
-                    path = path[1:]
-            elif "://" not in uri:
-                path = uri
-            else:
-                return None  # non-local FS: use the scan
-            try:
-                md = pq.ParquetFile(path).metadata
-            except Exception:
-                return None
+        for md in footers:
             for rg in range(md.num_row_groups):
                 row_group = md.row_group(rg)
                 for ci in range(row_group.num_columns):
@@ -1760,7 +1743,7 @@ class CDCEngine:
                 part = events.filter(
                     (commit_long >= F.lit(lo + g_lo * span)) & upper
                 )
-            scratch = self._stage(part, snap0, batch_col=batch_id)
+            scratch, schema = self._stage(part, snap0, batch_col=batch_id)
             lineage_rows: list = []
             try:
                 if not self.io.tree_has_suffix(scratch, ".parquet"):
@@ -1772,10 +1755,7 @@ class CDCEngine:
                         for _ in range(g_lo, g_hi)
                     )
                     continue
-                staged_all = (
-                    self.spark.read.option("basePath", scratch).parquet(scratch)
-                    .withColumn("_dead", F.col("_dead").cast("boolean"))
-                )
+                staged_all = self._read_staged(scratch, schema)
                 # ONE stats job for the whole group, survival evaluated
                 # against the pre-replay watermarks (valid for every
                 # batch: ranges ascend, see _apply_staged docstring) —
@@ -1928,16 +1908,12 @@ class CDCEngine:
             if canonical in events.columns:
                 events = events.withColumnRenamed(canonical, incoming)
         snap = self.table.current()
-        scratch = self._stage(events, snap)
+        scratch, schema = self._stage(events, snap)
         try:
             if not self.io.tree_has_suffix(scratch, ".parquet"):
                 return zeros
-            staged = (
-                self.spark.read.option("basePath", scratch).parquet(scratch)
-                .withColumn("_dead", F.col("_dead").cast("boolean"))
-            )
             metrics = self._apply_staged(
-                staged, os.path.join(scratch, "_dead=true"),
+                self._read_staged(scratch, schema), os.path.join(scratch, "_dead=true"),
                 f"retry-{os.path.basename(scratch)}", t0, wm_map={},
             )
         finally:

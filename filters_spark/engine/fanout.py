@@ -312,25 +312,36 @@ def _apply_routes(parsed, matches, routes, report) -> dict:
     # route carries a caller audit_fn (caller code of unknown thread
     # safety) — ledger stamping below is always sequential in route
     # order either way.
+    #
+    # A failed route does not stop its siblings: every route's outcome
+    # is collected, the routes that committed are stamped, and only
+    # then is the first error raised — a re-delivery must find the
+    # committed routes' ledgers at their new position, or it could not
+    # tell their applied batch from a gap.
     pre_sids = [r.engine.table.current_snapshot_id() for r in routes]
+
+    def apply(r, m):
+        return r.engine.apply_batch(_route_slice(parsed, r, m), audit_fn=r.audit_fn)
+
+    def settle(call):
+        try:
+            return call()
+        except BaseException as exc:
+            return exc
+
     if len(routes) > 1 and all(r.audit_fn is None for r in routes):
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=min(3, len(routes))) as pool:
-            futs = [
-                pool.submit(
-                    r.engine.apply_batch, _route_slice(parsed, r, m),
-                    audit_fn=r.audit_fn,
-                )
-                for r, m in zip(routes, matches)
-            ]
-            all_metrics = [f.result() for f in futs]
+            futs = [pool.submit(apply, r, m) for r, m in zip(routes, matches)]
+            outcomes = [settle(f.result) for f in futs]
     else:
-        all_metrics = [
-            r.engine.apply_batch(_route_slice(parsed, r, m), audit_fn=r.audit_fn)
-            for r, m in zip(routes, matches)
-        ]
-    for r, pre_sid, metrics in zip(routes, pre_sids, all_metrics):
+        outcomes = [settle(lambda r=r, m=m: apply(r, m)) for r, m in zip(routes, matches)]
+    first_err = None
+    for r, pre_sid, metrics in zip(routes, pre_sids, outcomes):
+        if isinstance(metrics, BaseException):
+            first_err = first_err or metrics
+            continue
         report["tables"][route_key(r)] = metrics
         if report["feed_to"] is not None:
             if metrics.get("audit") == "rejected":
@@ -348,6 +359,8 @@ def _apply_routes(parsed, matches, routes, report) -> dict:
                     feed_from=report["feed_from"],
                     pre_sid=pre_sid,
                 )
+    if first_err is not None:
+        raise first_err
     return report
 
 

@@ -327,6 +327,33 @@ def _scheme(path: str) -> str | None:
     return None
 
 
+def write_parquet_local(tbl, directory: str) -> str | None:
+    """Write the Arrow table ``tbl`` as one new snappy parquet file in
+    ``directory`` from the driver and return its path — or None, writing
+    nothing, when ``directory`` carries a URI scheme: pyarrow reaches
+    only the local filesystem, so the caller must write through Spark.
+
+    Write-to-temp + atomic rename keeps concurrent readers from seeing a
+    partial file (the dot-prefixed temp name is hidden from Spark
+    listings); a failed write or rename removes the temp file."""
+    if _scheme(directory) is not None:
+        return None
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}-driver.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    path = os.path.join(directory, name)
+    try:
+        pq.write_table(tbl, tmp, compression="snappy", store_schema=False)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return path
+
+
 def fileio_for(spark, path: str) -> FileIO:
     """LocalFileIO for bare paths; HadoopFileIO for ANY URI scheme —
     including ``file:``, whose URIs would otherwise reach LocalFileIO's

@@ -95,14 +95,16 @@ def xxh64_long(value: int, seed: int = SPARK_SEED) -> int:
     return xxh64(struct.pack("<q", value), seed)
 
 
-def bucket_of(repo: str, path: str, num_buckets: int, path_salt: int = 16) -> int:
+def bucket_of(repo: str | None, path: str | None, num_buckets: int, path_salt: int = 16) -> int:
     """Pure-Python twin of :func:`filters_spark.lake.table.bucket_expr`.
 
     Python's ``%`` on a signed int with a positive modulus IS Spark's
-    ``pmod`` (both floor toward the modulus sign)."""
-    salt = xxh64(path.encode("utf-8"), SPARK_SEED) % path_salt
-    h = xxh64_long(salt, seed=xxh64(repo.encode("utf-8"), SPARK_SEED))
-    return h % num_buckets
+    ``pmod`` (both floor toward the modulus sign). A None part hashes
+    as Spark's NULL child does: it is skipped, so the running seed
+    passes through unchanged."""
+    salt = (SPARK_SEED if path is None else xxh64(path.encode("utf-8"), SPARK_SEED)) % path_salt
+    seed = SPARK_SEED if repo is None else xxh64(repo.encode("utf-8"), SPARK_SEED)
+    return xxh64_long(salt, seed=seed) % num_buckets
 
 
 def buckets_for_repo(repo: str, num_buckets: int, path_salt: int = 16) -> list[int]:

@@ -77,17 +77,13 @@ def _coerce_for_arrow(v: Any, dtype: str) -> Any:
     return v
 
 
-def _kernel_udf(field: str, spec: FieldSpec, with_skip: bool = False):
-    """Build a scalar pandas UDF: raw col -> struct(value, errors).
-
-    ``with_skip``: the UDF takes a second boolean column; rows where it
-    is True are identity-guarded (see compile_field) — the chain never
-    runs for them and they return (NULL, []) placeholders the JVM side
-    discards. Their payload bytes were already masked to NULL before
-    the Arrow boundary, so a guarded row costs one null bit each way."""
+def kernel_runner(field: str, spec: FieldSpec):
+    """The fused chain as a pandas function: raw values -> DataFrame of
+    ``value`` (coerced to ``spec.dtype``) and ``errors`` (list of
+    key/code/message dicts). The pandas UDF body, and the engine's
+    driver-side batch path runs the same function on the same values."""
     chain = compile_chain(spec.chain_spec)
     dtype = spec.dtype
-    ret_ddl = f"struct<value:{dtype},errors:{ERRORS_DDL}>"
 
     def run(vals: pd.Series) -> pd.DataFrame:
         out, errs = chain.apply(vals)
@@ -101,6 +97,20 @@ def _kernel_udf(field: str, spec: FieldSpec, with_skip: bool = False):
             ]
         return pd.DataFrame({"value": out, "errors": errs.map(fmt)})
 
+    return run
+
+
+def _kernel_udf(field: str, spec: FieldSpec, with_skip: bool = False):
+    """Build a scalar pandas UDF: raw col -> struct(value, errors).
+
+    ``with_skip``: the UDF takes a second boolean column; rows where it
+    is True are identity-guarded (see compile_field) — the chain never
+    runs for them and they return (NULL, []) placeholders the JVM side
+    discards. Their payload bytes were already masked to NULL before
+    the Arrow boundary, so a guarded row costs one null bit each way."""
+    run = kernel_runner(field, spec)
+    ret_ddl = f"struct<value:{spec.dtype},errors:{ERRORS_DDL}>"
+
     if not with_skip:
         @pandas_udf(ret_ddl)
         def udf(vals: pd.Series) -> pd.DataFrame:
@@ -112,7 +122,7 @@ def _kernel_udf(field: str, spec: FieldSpec, with_skip: bool = False):
     # projection can branch on it without re-evaluating the guard
     # expression (a second evaluation happens in a different codegen
     # stage, where common-subexpression elimination cannot reach)
-    ret_skip_ddl = f"struct<value:{dtype},errors:{ERRORS_DDL},skipped:boolean>"
+    ret_skip_ddl = f"struct<value:{spec.dtype},errors:{ERRORS_DDL},skipped:boolean>"
 
     @pandas_udf(ret_skip_ddl)
     def udf_skip(vals: pd.Series, skip: pd.Series) -> pd.DataFrame:

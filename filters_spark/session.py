@@ -17,6 +17,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``FILTERS_SPARK_DRIVER_MEM`` is unset: a
+    quarter of physical RAM, rounded to whole GiB (at least 1), capped
+    at 48g. In local mode the driver JVM hosts every executor thread,
+    so it gets the largest share — but a fixed 48g gets the JVM killed
+    on a 16 GB host, where this gives 4g."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, round(ram / 4 / 2**30)))}g"
+
+
 def get_spark(
     app_name: str = "filters_spark",
     master: str | None = None,
@@ -44,10 +54,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # local mode: the driver JVM hosts all 32 executor threads; an
+        # local mode: the driver JVM hosts all executor threads; an
         # undersized heap turns cache-build + Arrow batches into a GC
         # storm (measured: 146s GC in one 150k-row stage at 8g)
-        .config("spark.driver.memory", os.environ.get("FILTERS_SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("FILTERS_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # Parquet scan parallelism: at 100 TB this is governed by file
         # splits; 128 MiB keeps partitions executor-memory friendly.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

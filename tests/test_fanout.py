@@ -559,3 +559,29 @@ def test_feed_state_reads_legacy_list_format(spark, tmp_path):
     eng.io.write_text_atomic(p, '[{"feed_to": "0000x:1", "snapshot_id": 1}]')
     assert feed_positions(eng.table) == [{"feed_to": "0000x:1", "snapshot_id": 1}]
     assert feed_hole(eng.table) is None
+
+
+def test_failed_route_keeps_sibling_stamps(spark, tmp_path):
+    """Route 2 of 3 fails: the other two still commit, their ledgers are
+    stamped at the batch's feed position, the failed route's ledger is
+    not, and the route's error is raised after the stamping."""
+    streams = [events_df(spark, n_events=300, seed=s, dirty_frac=0.05) for s in (11, 23, 37)]
+    names = ["repos", "users", "orgs"]
+    mixed = envelopes(streams[0], table=names[0])
+    for ev, name in zip(streams[1:], names[1:]):
+        mixed = mixed.unionAll(envelopes(ev, table=name))
+    engines = [make_engine(spark, str(tmp_path / n)) for n in names]
+
+    def fail(*a, **kw):
+        raise RuntimeError("route 2 down")
+
+    engines[1].apply_batch = fail
+    routes = [TableRoute(n, e) for n, e in zip(names, engines)]
+    with pytest.raises(RuntimeError, match="route 2 down"):
+        fan_out_debezium(mixed, routes, seq_expr=SEQ)
+    stamped = [feed_positions(e.table) for e in engines]
+    assert stamped[1] == []
+    assert len(stamped[0]) == len(stamped[2]) == 1
+    assert stamped[0][0]["feed_to"] == stamped[2][0]["feed_to"]
+    for i in (0, 2):
+        assert final_state(engines[i]) == _direct(spark, tmp_path, streams[i], f"d{i}")

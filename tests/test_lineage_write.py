@@ -5,6 +5,8 @@ values, and the two file flavors must coexist in one lineage read
 
 import os
 
+import pytest
+
 from filters_spark.engine.cdc import CDCEngine
 from filters_spark.engine.defaults import default_registry
 from filters_spark.lake.table import LakeTable
@@ -57,3 +59,34 @@ def test_write_lineage_empty_is_noop(spark, tmp_path):
     engine = make_engine(spark, str(tmp_path))
     engine._write_lineage([])
     assert engine.lineage() is None
+
+
+def test_schemed_lineage_dir_writes_through_spark(spark, tmp_path):
+    """A URI-schemed lineage_dir is not a local path: the driver-side
+    write declines (nothing lands under a literal 'file:' directory)
+    and the Spark writer resolves the URI."""
+    table = LakeTable.create(
+        spark, os.path.join(str(tmp_path), "lake"), key_cols=["repo", "path"],
+    )
+    lineage = f"file://{tmp_path}/lin"
+    engine = CDCEngine(spark, table, default_registry(), lineage_dir=lineage)
+    assert engine._write_lineage_driver_side(ROWS_A) is False
+    assert not os.path.exists("file:")
+    engine._write_lineage(ROWS_A)
+    assert [tuple(r) for r in spark.read.parquet(lineage).collect()] == ROWS_A
+    assert os.path.isdir(os.path.join(str(tmp_path), "lin"))
+
+
+@pytest.mark.parametrize("failing", ["write_table", "replace"])
+def test_failed_driver_write_leaves_no_temp_file(spark, tmp_path, monkeypatch, failing):
+    import pyarrow.parquet as pq
+
+    engine = make_engine(spark, str(tmp_path))
+
+    def boom(*a, **kw):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq if failing == "write_table" else os, failing, boom)
+    with pytest.raises(OSError, match="disk full"):
+        engine._write_lineage(ROWS_A)
+    assert os.listdir(engine.lineage_dir) == []

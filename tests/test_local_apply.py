@@ -1,0 +1,305 @@
+"""Driver-side merge-on-read applies (engine/local.py) against the Spark
+path they replace: every fixture is applied once through each path to
+twin tables, and everything a caller can observe must be identical —
+read(), changes(), watermarks, dead letters (errors included), lineage
+rows and the returned metrics."""
+
+import json
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
+
+import filters_spark.engine.cdc as cdc
+from filters_spark.engine.cdc import CDCEngine
+from filters_spark.engine.defaults import default_registry
+from filters_spark.engine.evolution import VersionSpec
+from filters_spark.lake.table import LakeTable
+from filters_spark.sources.datagen import gen_events
+
+DDL = (
+    "commit string, event_seq long, op string, schema_version int, "
+    "repo string, path string, lang string, language string, content string"
+)
+
+
+def c(n: int) -> str:
+    return f"{n:012x}"
+
+
+def ev(n, seq, repo, path, lang="py", content="x = 1", op="U", v=1, language=None):
+    return (c(n) if n is not None else None, seq, op, v, repo, path, lang, language, content)
+
+
+@pytest.fixture
+def counted(monkeypatch):
+    """Counts the applies that took the driver path."""
+    calls = []
+    real = cdc.apply_local
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(cdc, "apply_local", spy)
+    return calls
+
+
+def parquet(spark, tmp, name, rows, ddl=DDL):
+    """``rows`` as one parquet file of schema ``ddl``, read back by Spark
+    (written with pyarrow: a Spark write job per fixture batch costs
+    more than the apply under test)."""
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    path = os.path.join(tmp, "in", name)
+    os.makedirs(path)
+    cols = list(zip(*rows))
+    pq.write_table(
+        pa.table([pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema),
+        os.path.join(path, "part-0.parquet"),
+    )
+    return spark.read.parquet(path)
+
+
+def twins(spark, tmp, registry=default_registry, num_buckets=4):
+    out = {}
+    for mode in ("spark", "local"):
+        table = LakeTable.create(
+            spark, os.path.join(tmp, mode), key_cols=["repo", "path"],
+            num_buckets=num_buckets, path_salt=4,
+        )
+        out[mode] = CDCEngine(spark, table, registry(), write_mode="mor", compact_after=3)
+    out["spark"].LOCAL_MAX_ROWS = 0  # instance override: always stage through Spark
+    return out
+
+
+def observe(engine, metrics) -> dict:
+    t = engine.table
+    cols = ["repo", "path", "commit", "event_seq", "lang", "content", "content_sha"]
+    df = t.read()
+    first = t.snapshots()[0]
+    ch = t.changes(first)
+    dl = engine.dead_letters(distinct=False)
+    lin = engine.lineage()
+    return {
+        "read": sorted(map(tuple, df.select(*cols).collect())) if df is not None else [],
+        "changes": sorted(map(tuple, ch.collect())) if ch is not None else [],
+        "watermarks": t.watermarks(),
+        "snapshot": t.current_snapshot_id(),
+        "dead": sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True) for r in dl.collect()
+        ) if dl is not None else [],
+        "lineage": sorted(tuple(r)[:5] for r in lin.collect()) if lin is not None else [],
+        "metrics": [{k: v for k, v in m.items() if k != "seconds"} for m in metrics],
+    }
+
+
+def assert_parity(spark, tmp, batches, counted, registry=default_registry, ddl=DDL,
+                  num_buckets=4):
+    frames = [
+        b if not isinstance(b, list) else parquet(spark, tmp, f"b{i}", b, ddl)
+        for i, b in enumerate(batches)
+    ]
+    eng = twins(spark, tmp, registry, num_buckets)
+    got = {}
+    for mode, e in eng.items():
+        before = len(counted)
+        metrics = [e.apply_batch(f) for f in frames]
+        assert len(counted) - before == (len(frames) if mode == "local" else 0)
+        got[mode] = observe(e, metrics)
+    for k in got["spark"]:
+        assert got["local"][k] == got["spark"][k], k
+    return got["local"]
+
+
+def test_all_registry_versions_and_rename(spark, tmp_path, counted):
+    rows = [
+        ev(1, 0, "r1", "a.py", lang="py"),
+        ev(1, 1, "r1", "b.go", lang=" Python ", v=0),       # v0: no choice gate
+        ev(1, 2, "r2", "c.go", lang=None, language="GO", v=2),
+        ev(1, 3, "r2", "d.go", lang="go", language="cobol", v=2),  # rename wins
+        ev(1, 4, "r3", "e.rs", lang="cobol"),                 # dead: choice
+        ev(2, 0, "r1", "a.py", content="y = 2"),
+    ]
+    got = assert_parity(spark, str(tmp_path), [rows], counted)
+    assert got["metrics"][0]["dead_lettered"] == 2
+
+
+def test_unknown_and_null_schema_version(spark, tmp_path, counted):
+    rows = [
+        ev(1, 0, "r1", "a.py"),
+        ev(1, 1, "r1", "b.py", v=9),
+        ev(1, 2, "r2", "c.py", v=None),
+    ]
+    got = assert_parity(spark, str(tmp_path), [rows], counted)
+    codes = [json.loads(d)["first_code"] for d in got["dead"]]
+    assert codes == ["unknown_schema_version"] * 2
+
+
+def test_non_string_source_columns(spark, tmp_path, counted):
+    ddl = (
+        "commit string, event_seq int, op string, schema_version bigint, "
+        "repo string, path string, lang boolean, content bigint"
+    )
+    rows = [
+        (c(1), 0, "I", 1, "r1", "a.py", None, 12345),
+        (c(1), 1, "I", 1, "r1", "b.py", True, -7),
+        (c(1), 2, "I", 1, "r2", "c.py", None, None),
+    ]
+    got = assert_parity(spark, str(tmp_path), [rows], counted, ddl=ddl)
+    assert ("r1", "a.py") in {r[:2] for r in got["read"]}
+
+
+def test_null_empty_and_whitespace_keys(spark, tmp_path, counted):
+    rows = [
+        ev(1, 0, None, "a.py"), ev(1, 1, "", "a.py"), ev(1, 2, "  ", "a.py"),
+        ev(1, 3, "r1", None), ev(1, 4, "r1", ""), ev(1, 5, "r1", " \t "),
+        ev(1, 6, None, None), ev(1, 7, "r1", "ok.py"),
+    ]
+    assert_parity(spark, str(tmp_path), [rows], counted)
+
+
+def test_null_commit_and_seq_three_valued_survival(spark, tmp_path, counted):
+    first = [ev(5, i, f"r{i}", f"p{i}.py") for i in range(3)]
+    second = [
+        ev(None, 0, "r0", "p0.py"),            # watermarked bucket: survives NULL
+        ev(6, None, "r1", "p1.py", lang="cobol"),  # dead with NULL _wm
+        ev(None, 1, "n1", "fresh1.py"),        # buckets without a watermark
+        ev(None, 2, "n2", "fresh2.py"),
+        ev(None, 3, "n3", "fresh3.py", op="D"),
+        ev(7, 0, "r2", "p2.py", content="new"),
+    ]
+    got = assert_parity(spark, str(tmp_path), [first, second], counted, num_buckets=8)
+    assert len(got["watermarks"]) < 8  # some NULL-_wm rows met no watermark
+
+
+def test_deletes_and_in_batch_duplicates(spark, tmp_path, counted):
+    b1 = [
+        ev(1, 0, "r1", "k1.py", op="I", content="v0"),
+        ev(1, 1, "r1", "k1.py", content="v1"),
+        ev(1, 2, "r1", "k1.py", op="D"),
+        ev(1, 3, "r1", "k2.py", op="I", content="dup"),
+        ev(1, 3, "r1", "k2.py", op="I", content="dup"),
+        ev(1, 4, "r1", "k3.py", op="D"),
+        ev(1, 5, "r2", "k4.py", content="keep"),
+    ]
+    b2 = [ev(2, 0, "r1", "k1.py", op="I", content="back"), ev(2, 1, "r2", "k4.py", op="D")]
+    got = assert_parity(spark, str(tmp_path), [b1, b2], counted)
+    assert {r[:2] for r in got["read"]} == {("r1", "k1.py"), ("r1", "k2.py")}
+
+
+def test_replayed_batch(spark, tmp_path, counted):
+    rows = [ev(1, i, f"r{i % 3}", f"p{i}.py") for i in range(8)] + [
+        ev(1, 9, "r1", "bad.py", lang="cobol"),
+    ]
+    got = assert_parity(spark, str(tmp_path), [rows, rows], counted)
+    assert got["metrics"][1]["applied"] == 0
+    assert got["metrics"][1]["skipped_replays"] > 0
+
+
+def test_datagen_unicode_hazards(spark, tmp_path, counted):
+    path = os.path.join(str(tmp_path), "in", "gen")
+    gen_events(
+        spark, n_events=900, n_repos=10, n_paths=60, events_per_commit=20,
+        hot_frac=0.2, dirty_frac=0.2, unicode_hazards=True, seed=5,
+    ).write.parquet(path)
+    wal = spark.read.parquet(path)
+    mids = [c(16), c(31)]
+    batches = [
+        wal.filter(wal.commit <= mids[0]),
+        wal.filter((wal.commit > mids[0]) & (wal.commit <= mids[1])),
+        wal.filter(wal.commit > mids[1]),
+    ]
+    got = assert_parity(spark, str(tmp_path), batches, counted)
+    assert got["dead"] and got["read"]
+
+
+def test_mixed_dead_letters_read_and_retry_as_one_table(spark, tmp_path, counted):
+    tmp = str(tmp_path)
+    table = LakeTable.create(
+        spark, os.path.join(tmp, "t"), key_cols=["repo", "path"], num_buckets=4,
+    )
+    eng = CDCEngine(spark, table, default_registry(), write_mode="mor", compact_after=3)
+    eng.LOCAL_MAX_ROWS = 0
+    eng.apply_batch(parquet(spark, tmp, "a", [ev(1, 0, "r1", "a.py", lang="cobol")]))
+    del eng.LOCAL_MAX_ROWS
+    eng.apply_batch(parquet(spark, tmp, "b", [ev(2, 0, "r2", "b.py", lang="fortran")]))
+    assert len(counted) == 1
+    dl = eng.dead_letters()
+    assert sorted(r.lang for r in dl.collect()) == ["cobol", "fortran"]
+    # widen the choice set: retry drains both batches' dead letters
+    reg = eng.registry
+    spec = dict(reg.get(reg.latest).field_specs)
+    spec["lang"] = {"chain": ["strip", "ascii_lower"]}
+    reg.register(VersionSpec(reg.latest + 1, spec))
+    m = eng.retry_dead_letters()
+    assert m["applied"] == 2 and m["dead_lettered"] == 0
+    assert eng.dead_letters() is None
+    got = {(r.repo, r.path, r.lang) for r in table.read().collect()}
+    assert got == {("r1", "a.py", "cobol"), ("r2", "b.py", "fortran")}
+
+
+def _jobs(spark, fn):
+    sc = spark.sparkContext
+    group = f"local-apply-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_mor_batch_runs_at_most_one_job(spark, tmp_path, monkeypatch, counted):
+    """~800 parquet rows, no compaction: the driver path collects the
+    batch once and runs no other Spark job. The same batch through the
+    Spark path (threshold 0) lands in the same state."""
+    path = os.path.join(str(tmp_path), "in", "tail")
+    gen_events(
+        spark, n_events=800, n_repos=50, n_paths=400, events_per_commit=20,
+        hot_frac=0.15, dirty_frac=0.05, unicode_hazards=True, seed=3,
+    ).write.parquet(path)
+    states = []
+    for threshold in (CDCEngine.LOCAL_MAX_ROWS, 0):
+        monkeypatch.setattr(CDCEngine, "LOCAL_MAX_ROWS", threshold)
+        table = LakeTable.create(
+            spark, os.path.join(str(tmp_path), f"t{threshold}"),
+            key_cols=["repo", "path"], num_buckets=4,
+        )
+        eng = CDCEngine(spark, table, default_registry(), write_mode="mor", compact_after=8)
+        batch = spark.read.parquet(path)
+        m, jobs = _jobs(spark, lambda: eng.apply_batch(batch))
+        assert m["events_in"] == 800
+        if threshold:
+            assert jobs <= 1, jobs
+        else:
+            assert jobs > 1
+        states.append(sorted(map(tuple, table.read().collect())))
+    assert len(counted) == 1
+    assert states[0] == states[1]
+
+
+def test_ineligible_batches_stay_on_spark(spark, tmp_path, monkeypatch, counted):
+    """Each ineligible batch reaches Spark staging (stopped there: the
+    Spark apply itself is covered by every other engine test)."""
+    class Staged(Exception):
+        pass
+
+    def stage(*a, **kw):
+        raise Staged
+
+    monkeypatch.setattr(CDCEngine, "_stage", stage)
+    tmp = str(tmp_path)
+    rows = [ev(1, 0, "r1", "a.py")]
+    table = LakeTable.create(spark, os.path.join(tmp, "cow"), key_cols=["repo", "path"])
+    with pytest.raises(Staged):
+        CDCEngine(spark, table, default_registry()).apply_batch(parquet(spark, tmp, "a", rows))
+    table = LakeTable.create(spark, os.path.join(tmp, "mor"), key_cols=["repo", "path"])
+    eng = CDCEngine(spark, table, default_registry(), write_mode="mor")
+    with pytest.raises(Staged):
+        eng.apply_batch(spark.createDataFrame(rows, DDL))            # no parquet files
+    with pytest.raises(Staged):
+        eng.apply_batch(parquet(spark, tmp, "b", rows), audit_fn=lambda t, w: True)
+    assert counted == []

@@ -206,3 +206,14 @@ def test_read_repo_absent_repo_with_empty_candidate_buckets(spark, tmp_path):
     t2 = LakeTable.create(spark, str(tmp_path / "l2"), ["repo", "path"],
                           num_buckets=B, path_salt=S)
     assert t2.read_repo(probe) is None
+
+
+def test_bucket_of_null_parts_match_bucket_expr(spark):
+    """Spark's xxhash64 skips NULL children; the twin must too (the
+    driver-side apply buckets key-less dead letters with it)."""
+    keys = [(None, "a.py"), ("r", None), (None, None), ("", None)]
+    df = spark.createDataFrame(keys, "repo string, path string").select(
+        "repo", "path", bucket_expr(F.col("repo"), F.col("path"), 7, 3).alias("b"),
+    )
+    for r in df.collect():
+        assert r["b"] == bucket_of(r["repo"], r["path"], 7, 3), (r["repo"], r["path"])
