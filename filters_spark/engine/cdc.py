@@ -50,7 +50,7 @@ from pyspark.sql.types import BooleanType, IntegerType, StructType
 
 from filters_spark.engine.evolution import SpecRegistry
 from filters_spark.engine.local import (
-    PASSTHROUGH, apply_local, local_batch_schema, parquet_footers,
+    PASSTHROUGH, apply_local, local_batch_plan, parquet_footers,
 )
 from filters_spark.lake.fileio import write_parquet_local
 from filters_spark.lake.table import LakeTable, WATERMARK_ZERO, bucket_expr, lww_merge, watermark_str
@@ -300,9 +300,9 @@ class CDCEngine:
         os.environ.get("FILTERS_SPARK_FOLD_ROWS_PER_PARTITION", "200000")
     )
 
-    # Merge-on-read batches up to this many input rows (counted from
-    # the parquet footers) apply on the driver (engine/local.py): below
-    # it the Spark path's fixed per-batch cost outweighs running the
+    # Batches up to this many input rows (counted from the parquet
+    # footers) apply and stage on the driver (engine/local.py): below it
+    # the Spark path's fixed per-batch cost outweighs running the
     # kernels in one Python process. Measured on a 4-core local[4]
     # host, the driver path is faster up to ~40k rows (README.md,
     # "Small batches on the driver"); the constant sits at half that.
@@ -693,15 +693,15 @@ class CDCEngine:
         re-applying the batch after fixing the producer is NOT treated
         as a replay. Metrics gain ``"audit": "published"|"rejected"``.
 
-        A merge-on-read batch of at most ``LOCAL_MAX_ROWS`` parquet rows
-        (and no ``audit_fn``) applies on the driver instead of through
-        Spark staging — same results, one Spark job (engine/local.py)."""
+        A batch of at most ``LOCAL_MAX_ROWS`` parquet rows (and no
+        ``audit_fn``) applies on the driver instead of through Spark
+        staging — same results, one Spark job (engine/local.py)."""
         t0 = time.time()
         snap = self.table.current()
         if audit_fn is None:
-            schema = local_batch_schema(self, events, snap)
-            if schema is not None:
-                return apply_local(self, events, snap, schema, t0)
+            plan = local_batch_plan(self, events, snap)
+            if plan is not None:
+                return apply_local(self, events, snap, plan, t0)
         scratch, schema = self._stage(events, snap)
         try:
             if not self.io.tree_has_suffix(scratch, ".parquet"):  # empty input
@@ -997,20 +997,19 @@ class CDCEngine:
         The scratch dir carries the ``txn-`` prefix (vs ``batch-`` for
         the in-call applies) so recover_fanout's orphan sweep can
         target fan-out stages without touching a concurrent plain
-        stager's in-flight scratch."""
+        stager's in-flight scratch. A batch of at most
+        ``LOCAL_MAX_ROWS`` parquet rows stages on the driver
+        (engine/local.py) with the same handle and scratch layout."""
         t0 = time.time()
         snap = self.table.current()
+        plan = local_batch_plan(self, events, snap)
+        if plan is not None:
+            return apply_local(self, events, snap, plan, t0, wap_id=wap_id)
         scratch, schema = self._stage(events, snap, prefix="txn")
         try:
             if not self.io.tree_has_suffix(scratch, ".parquet"):  # empty input
                 self.io.rmtree(scratch)
-                return StagedBatch(
-                    engine=self, wap_id=None,
-                    parent_sid=snap["snapshot_id"], staged_sid=None,
-                    scratch=None, dead_src=None, adopt_name=None,
-                    n_dead=0, events_in=0, applied=0, skipped=0,
-                    bucket_stats=[], t0=t0,
-                )
+                return self._empty_stage(snap, t0)
             handle = self._apply_staged(
                 self._read_staged(scratch, schema), os.path.join(scratch, "_dead=true"),
                 os.path.basename(scratch), t0, stage_only_wap=wap_id,
@@ -1022,19 +1021,25 @@ class CDCEngine:
             raise
 
     def _staged_handle(self, wap_id, snap, staged_header, dead_src, adopt_name,
-                       n_dead, events_in, applied, skipped, bucket_stats, t0):
+                       p, t0, scratch=None):
+        """The :class:`StagedBatch` of a batch with stats ``p``
+        (:meth:`_batch_stats`); ``wap_id``/``staged_header`` are None
+        when it touched no bucket."""
         return StagedBatch(
             engine=self, wap_id=wap_id,
             parent_sid=snap["snapshot_id"],
-            staged_sid=staged_header["snapshot_id"],
-            scratch=None,  # filled by stage_batch (it owns the dir)
-            dead_src=dead_src, adopt_name=adopt_name, n_dead=n_dead,
-            events_in=events_in, applied=applied, skipped=skipped,
+            staged_sid=staged_header["snapshot_id"] if staged_header else None,
+            scratch=scratch, dead_src=dead_src, adopt_name=adopt_name,
+            n_dead=p["n_dead"], events_in=p["events_in"], applied=p["applied"],
+            skipped=p["skipped"],
             bucket_stats=[
-                (int(r["_bucket"]), r["wm"], int(r["n"])) for r in bucket_stats
+                (int(r["_bucket"]), r["wm"], int(r["n"])) for r in p["bucket_stats"]
             ],
             t0=t0,
         )
+
+    def _empty_stage(self, snap: dict, t0: float) -> StagedBatch:
+        return self._staged_handle(None, snap, None, None, None, self._batch_stats([]), t0)
 
     def _with_survives(self, staged: DataFrame, wm_map: Mapping) -> DataFrame:
         """Flag replays: events at or below their bucket's committed
@@ -1081,7 +1086,7 @@ class CDCEngine:
             )
         p = self._batch_stats(stats_rows)
         events_in, n_dead, skipped = p["events_in"], p["n_dead"], p["skipped"]
-        bucket_stats, touched, new_wms = p["bucket_stats"], p["touched"], p["new_wms"]
+        touched, new_wms = p["touched"], p["new_wms"]
         applied_events = p["applied"]
         clean = staged.filter(~F.col("_dead") & F.col("_survives")).drop("_dead", "_survives")
 
@@ -1089,13 +1094,7 @@ class CDCEngine:
             if stage_only_wap is not None:
                 # nothing to merge — the "stage" is just the retained
                 # scratch; publish adopts dead letters, abandon drops them
-                return StagedBatch(
-                    engine=self, wap_id=None,
-                    parent_sid=snap["snapshot_id"], staged_sid=None,
-                    scratch=None, dead_src=dead_src, adopt_name=adopt_name,
-                    n_dead=n_dead, events_in=events_in, applied=0,
-                    skipped=skipped, bucket_stats=[], t0=t0,
-                )
+                return self._staged_handle(None, snap, None, dead_src, adopt_name, p, t0)
             self._adopt_dead_letters(dead_src, adopt_name, n_dead)
             return self._untouched_metrics(p, snap, t0)
 
@@ -1153,9 +1152,7 @@ class CDCEngine:
                 )
                 if stage_only_wap is not None:
                     return self._staged_handle(
-                        wap_id, snap, staged_header, dead_src, adopt_name,
-                        n_dead, events_in, applied_events, skipped,
-                        bucket_stats, t0,
+                        wap_id, snap, staged_header, dead_src, adopt_name, p, t0
                     )
                 new_snap = self._audit_publish(audit_fn, wap_id)
                 if new_snap is None:
@@ -1201,9 +1198,7 @@ class CDCEngine:
                 )
                 if stage_only_wap is not None:
                     return self._staged_handle(
-                        wap_id, snap, staged_header, dead_src, adopt_name,
-                        n_dead, events_in, applied_events, skipped,
-                        bucket_stats, t0,
+                        wap_id, snap, staged_header, dead_src, adopt_name, p, t0
                     )
                 new_snap = self._audit_publish(audit_fn, wap_id)
                 if new_snap is None:

@@ -10,9 +10,13 @@ a mixed envelope frame to per-table engines in ONE parse pass.
 
 Scale shape: the raw JSON is decoded ONCE (``parse_debezium`` with
 ``include_source=True`` — map-only native ``from_json``, union of all
-routes' payload fields) and the decoded frame is materialized once;
-each route's slice is then a cheap filter on ``_src_table`` over the
-materialized columns, never a re-parse of the JSON. Per-table applies
+routes' payload fields) and written once to a parquet scratch
+partitioned by route index (``_route=i``; unrouted rows ``_route=-1``).
+The same write observes the batch's feed bounds and unrouted count
+(``DataFrame.observe``), so the gate runs no job of its own. Each
+route's slice is a read of its own partition directory, never a
+re-parse of the JSON, and its footers count its rows — a small slice
+then applies or stages on the driver (engine/local.py). Per-table applies
 are independent engines over independent tables — their watermarks,
 dead letters and commit chains never interact, so exactly-once holds
 per table exactly as in the single-table path (pinned in
@@ -22,9 +26,11 @@ Unrouted tables are a silent-data-loss hazard (a typo'd route name
 drops a whole table's changes), but "capture everything, ingest some"
 is also the normal production setup — so the default COUNTS unrouted
 events per source table into the report and leaves policy to the
-caller; ``unrouted="raise"`` hard-fails, ``"ignore"`` skips the count
-job on streams known to be pre-filtered (Debezium's
-``table.include.list``).
+caller; ``unrouted="raise"`` hard-fails, ``"ignore"`` skips the
+per-table count on streams known to be pre-filtered (Debezium's
+``table.include.list``). The per-table count is a job over the
+``_route=-1`` partition only, and runs only when the observed unrouted
+count is non-zero.
 
 The reference library has no table or stream layer; this is north-rule
 engine surface (binlog tail → lake ingest).
@@ -38,9 +44,11 @@ from dataclasses import dataclass
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql.types import StructType
 
 from filters_spark.engine.cdc import CDCEngine
+from filters_spark.lake.table import watermark_str
 
 __all__ = [
     "TableRoute",
@@ -284,28 +292,28 @@ def fan_out_debezium(
     it.
 
     ``track_feed``: stamp each routed table's feed-position ledger with
-    the batch's global max watermark after its apply (one tiny agg job
-    per batch), enabling :func:`consistent_cut` reads across the
-    topology's tables. The same agg REFUSES envelopes whose ordering
+    the batch's global max watermark after its apply (observed by the
+    parse write), enabling :func:`consistent_cut` reads across the
+    topology's tables. The same observation REFUSES envelopes whose ordering
     can't be derived (NULL commit/seq after ``commit_expr``/
     ``seq_expr``) — applying unorderable events would corrupt both the
     ledger and the engines' watermark dedupe.
     """
-    parsed, matches, report, scratch = _parse_and_gate(
+    slices, report, scratch = _parse_and_gate(
         raw, routes, value_col, commit_expr, seq_expr, unrouted, track_feed
     )
     try:
-        return _apply_routes(parsed, matches, routes, report)
+        return _apply_routes(slices, routes, report)
     finally:
         routes[0].engine.io.rmtree(scratch)
 
 
-def _apply_routes(parsed, matches, routes, report) -> dict:
-    # Per-route applies are INDEPENDENT Spark jobs over independent
-    # tables (own watermarks, scratch, dead letters, commit chain), and
-    # each has serial driver phases (stats collect, commit finalize)
-    # that leave the cluster idle — overlap them from a small thread
-    # pool so one route's tail back-fills with the next route's tasks.
+def _apply_routes(slices, routes, report) -> dict:
+    # Per-route applies are INDEPENDENT over independent tables (own
+    # watermarks, scratch, dead letters, commit chain). A Spark apply
+    # has serial driver phases (stats collect, commit finalize) that
+    # leave the cluster idle — overlap them from a small thread pool so
+    # one route's tail back-fills with the next route's tasks.
     # Session-conf safety: the per-stage scan-split scoping takes a
     # non-blocking lock (engine/cdc.py _scan_splits), so concurrent
     # stagers never interleave set/restore. Sequential fallback when any
@@ -320,8 +328,8 @@ def _apply_routes(parsed, matches, routes, report) -> dict:
     # tell their applied batch from a gap.
     pre_sids = [r.engine.table.current_snapshot_id() for r in routes]
 
-    def apply(r, m):
-        return r.engine.apply_batch(_route_slice(parsed, r, m), audit_fn=r.audit_fn)
+    def apply(r, events):
+        return r.engine.apply_batch(events, audit_fn=r.audit_fn)
 
     def settle(call):
         try:
@@ -333,10 +341,10 @@ def _apply_routes(parsed, matches, routes, report) -> dict:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=min(3, len(routes))) as pool:
-            futs = [pool.submit(apply, r, m) for r, m in zip(routes, matches)]
+            futs = [pool.submit(apply, r, e) for r, e in zip(routes, slices)]
             outcomes = [settle(f.result) for f in futs]
     else:
-        outcomes = [settle(lambda r=r, m=m: apply(r, m)) for r, m in zip(routes, matches)]
+        outcomes = [settle(lambda r=r, e=e: apply(r, e)) for r, e in zip(routes, slices)]
     first_err = None
     for r, pre_sid, metrics in zip(routes, pre_sids, outcomes):
         if isinstance(metrics, BaseException):
@@ -409,27 +417,64 @@ def _parse_and_gate(
     track_feed: bool,
 ):
     """The shared front half of every fan-out flavor: validate the
-    route topology, decode the mixed envelope stream ONCE (materialized
-    — each route's slice is a column filter, never a re-parse), refuse
-    unorderable envelopes, and count/raise on unrouted tables. Returns
-    ``(parsed, matches, report, scratch)`` with ``report["tables"]``
-    empty; the caller removes ``scratch`` (the materialized decode)
-    after the last apply."""
+    route topology, decode the mixed envelope stream ONCE into a
+    route-partitioned parquet scratch, refuse unorderable envelopes,
+    and count/raise on unrouted tables. Returns ``(slices, report,
+    scratch)``: one frame per route (a read of its ``_route=i``
+    partition) and the report with ``report["tables"]`` empty; the
+    caller removes ``scratch`` after the last apply."""
     if unrouted not in ("count", "raise", "ignore"):
         raise ValueError(
             f"unrouted must be 'count', 'raise' or 'ignore', got {unrouted!r}"
         )
     _check_routes(routes)
+    plan = _route_partitioned(raw, routes, value_col, commit_expr, seq_expr)
+    # Barrier = a parquet scratch write, NOT localCheckpoint: block-store
+    # materialization of the payload-bearing frame measured ~1.5x slower
+    # than the columnar write, and the partition directories give each
+    # route's slice its own files (and footer row counts). The gate's
+    # numbers are observed by the same write: NULL-op rows (the parse's
+    # deferred op filter) land in the NULL partition and count nowhere.
+    # The dir lives on the first route's table FileIO (DFS-safe).
+    kept = F.col("op").isNotNull()
+    wm = watermark_str(F.col("commit"), F.col("event_seq"))
+    gate = Observation("fanout-gate")
+    observed = plan.observe(
+        gate,
+        F.max(F.when(kept, wm)).alias("wm"),
+        F.min(F.when(kept, wm)).alias("wm_min"),
+        F.count_if(kept).alias("n"),
+        F.count_if(kept & (F.col("commit").isNull() | F.col("event_seq").isNull()))
+        .alias("n_unordered"),
+        F.count_if(F.col("_route") == -1).alias("n_unrouted"),
+    )
+    import uuid as _uuid
+
+    io = routes[0].engine.io
+    scratch = os.path.join(
+        routes[0].engine.table.root, "_staging",
+        f"fanout-parse-{_uuid.uuid4().hex}",
+    )
+    observed.write.partitionBy("_route").parquet(scratch)
+    try:
+        return (*_gate(raw, routes, scratch, plan, gate.get, unrouted, track_feed), scratch)
+    except BaseException:
+        io.rmtree(scratch)
+        raise
+
+
+def _route_partitioned(raw, routes, value_col, commit_expr, seq_expr) -> DataFrame:
+    """The decoded envelope frame plus ``_route``: the index of the
+    route whose predicate matches, -1 for unrouted rows, NULL for
+    NULL-op rows. The op filter of ``parse_debezium`` is deferred to
+    the partition column: a filter above the parse is pushed below it
+    by alias substitution and re-lexes every row a second time, so the
+    write's plan evaluates ``from_json`` exactly once per envelope. The
+    value-notnull prefilter (Kafka compaction tombstones) IS pushable
+    for free — it lands in the source scan."""
     from filters_spark.sources.debezium import parse_debezium
 
     union_fields = sorted({f for r in routes for f in r.fields})
-    # deferred op filter: the scratch write's plan then evaluates
-    # from_json exactly once per envelope (a filter above the parse is
-    # pushed below it by alias substitution and re-lexes every row a
-    # second time); the read-back in _gate applies the equivalent
-    # ``op IS NOT NULL`` on the materialized column, pushed into the
-    # columnar scan. The value-notnull prefilter (Kafka compaction
-    # tombstones) IS pushable for free — it lands in the source scan.
     plan = parse_debezium(
         raw.filter(F.col(value_col).isNotNull()),
         union_fields,
@@ -439,99 +484,60 @@ def _parse_and_gate(
         include_source=True,
         _defer_op_filter=True,
     )
-    # The decode is materialized ONCE so each route's slice is a column
-    # filter, never a re-parse. Barrier = a parquet scratch write +
-    # read-back, NOT localCheckpoint: block-store materialization of the
-    # payload-bearing frame measured ~1.5x slower than the columnar
-    # write (Java-object storage + heap pressure the applies then
-    # compete with), and the scratch gives the feed/unrouted/slice
-    # consumers column pruning. The dir lives on the first route's
-    # table FileIO (DFS-safe) and is removed by the fan-out wrappers
-    # after the last apply.
-    import uuid as _uuid
+    route = F.when(F.col("op").isNull(), F.lit(None))
+    for i, m in enumerate(_route_matches(routes)):
+        route = route.when(m, F.lit(i))
+    return plan.withColumn("_route", route.otherwise(F.lit(-1)).cast("int"))
 
+
+def _gate(raw, routes, scratch, plan, seen, unrouted, track_feed):
+    """Act on the observed gate numbers ``seen``; returns the route
+    slices and the report. Every route partition is read with the
+    parse's schema — an explicit schema, because a route without rows
+    gets an empty directory and a schema-less read of it would fail."""
+    spark = raw.sparkSession
+    schema = StructType([f for f in plan.schema.fields if f.name != "_route"])
     io = routes[0].engine.io
-    scratch = os.path.join(
-        routes[0].engine.table.root, "_staging",
-        f"fanout-parse-{_uuid.uuid4().hex}",
-    )
-    plan.write.parquet(scratch)
-    try:
-        return (*_gate(raw, routes, scratch, plan, unrouted, track_feed), scratch)
-    except BaseException:
-        io.rmtree(scratch)
-        raise
 
-
-def _gate(raw, routes, scratch, plan, unrouted, track_feed):
-    # explicit schema: an all-dropped batch writes no part files and a
-    # schema-less read of the empty dir would fail. The op filter the
-    # parse deferred (see _parse_and_gate) is applied here, pushed into
-    # the columnar scan — every consumer below (feed aggregate,
-    # unrouted gate, route slices) sees exactly the rows the eager
-    # filter produced.
-    parsed = (
-        raw.sparkSession.read.schema(plan.schema).parquet(scratch)
-        .filter(F.col("op").isNotNull())
-    )
-    matches = _route_matches(routes)
+    def part(i: int) -> DataFrame:
+        d = os.path.join(scratch, f"_route={i}")
+        if not io.isdir(d):
+            io.makedirs(d)
+        return spark.read.schema(schema).parquet(d)
 
     report: dict = {"tables": {}, "unrouted": {}, "feed_to": None, "feed_from": None}
     if track_feed:
-        from filters_spark.lake.table import watermark_str
-
-        row = parsed.agg(
-            F.max(
-                watermark_str(F.col("commit"), F.col("event_seq"))
-            ).alias("wm"),
-            F.min(
-                watermark_str(F.col("commit"), F.col("event_seq"))
-            ).alias("wm_min"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (F.col("commit").isNull() | F.col("event_seq").isNull())
-                .cast("long")
-            ).alias("n_unordered"),
-        ).collect()[0]
-        if row["n_unordered"]:
+        if seen["n_unordered"]:
             raise ValueError(
-                f"{row['n_unordered']} of {row['n']} envelopes have no "
+                f"{seen['n_unordered']} of {seen['n']} envelopes have no "
                 "derivable (commit, event_seq) ordering — fix the feed "
                 "or supply commit_expr/seq_expr for its ordering scheme"
             )
-        report["feed_to"] = row["wm"]  # None on an empty batch
-        report["feed_from"] = row["wm_min"]
-    if unrouted != "ignore":
-        any_route = None
-        for m in matches:
-            any_route = m if any_route is None else any_route | m
-        misses = (
-            parsed.filter(~F.coalesce(any_route, F.lit(False)))
-            .groupBy("_src_db", "_src_table")
-            .count()
-            .collect()
-        )
+        report["feed_to"] = seen["wm"]  # None on an empty batch
+        report["feed_from"] = seen["wm_min"]
+    if unrouted != "ignore" and seen["n_unrouted"]:
+        misses = part(-1).groupBy("_src_db", "_src_table").count().collect()
         report["unrouted"] = {
             f"{row['_src_db'] or ''}.{row['_src_table'] or ''}": row["count"]
             for row in misses
         }
-        if report["unrouted"] and unrouted == "raise":
+        if unrouted == "raise":
             raise ValueError(
                 f"unrouted source tables in the batch: {report['unrouted']} "
                 "— add routes, or pass unrouted='count'/'ignore' if the "
                 "drop is intended"
             )
-    return parsed, matches, report
-
-
-def _route_slice(parsed: DataFrame, r: TableRoute, m) -> DataFrame:
-    return parsed.filter(m).select(
-        "commit",
-        "event_seq",
-        "op",
-        *r.fields,
-        F.lit(r.schema_version).alias("schema_version"),
-    )
+    slices = [
+        part(i).select(
+            "commit",
+            "event_seq",
+            "op",
+            *r.fields,
+            F.lit(r.schema_version).alias("schema_version"),
+        )
+        for i, r in enumerate(routes)
+    ]
+    return slices, report
 
 
 def start_fanout_stream(

@@ -30,6 +30,13 @@ in-flight batch; stages share manifests with their parent snapshots
 (O(touched buckets) metadata), so the protocol adds no data-scale work
 over the non-atomic path — the merges are the same jobs.
 
+Spark jobs per call: the shared front half (fanout._parse_and_gate)
+writes the decode once, partitioned by route, and observes the feed
+bounds and unrouted count in that write; a route slice of at most
+``CDCEngine.LOCAL_MAX_ROWS`` rows then stages on the driver with one
+``toArrow()`` (engine/local.py). A two-route batch of small slices
+runs three jobs; decide and publish are metadata-only.
+
 Assumptions (documented, checked where cheap):
 
 - **Single writer per table.** A concurrent commit between stage and
@@ -64,7 +71,6 @@ from filters_spark.engine.fanout import (
     TableRoute,
     _parse_and_gate,
     _record_feed_position,
-    _route_slice,
     route_key,
 )
 
@@ -120,7 +126,7 @@ def fan_out_atomic(
     io = routes[0].engine.io
     txn_id = txn_id or uuid.uuid4().hex[:16]
     wap_id = f"txn-{txn_id}"
-    parsed, matches, report, parse_scratch = _parse_and_gate(
+    slices, report, parse_scratch = _parse_and_gate(
         raw, routes, value_col, commit_expr, seq_expr, unrouted, track_feed=True
     )
 
@@ -136,20 +142,18 @@ def fan_out_atomic(
 
     try:
         # stage the routes CONCURRENTLY: stages are independent
-        # data-heavy jobs over independent tables (the decision and the
-        # publishes stay strictly sequential below), and each stage has
-        # serial driver phases that would otherwise leave the cluster
-        # idle. The parsed frame is a materialized checkpoint, so the
-        # per-stage scan-split conf scoping is a no-op across threads.
+        # jobs over independent tables (the decision and the publishes
+        # stay strictly sequential below). A small route slice stages on
+        # the driver (one toArrow() of its _route=i partition); a large
+        # one runs its Spark stage, whose serial driver phases the
+        # sibling route's stage back-fills.
         if len(routes) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(3, len(routes))) as pool:
                 futs = [
-                    pool.submit(
-                        r.engine.stage_batch, _route_slice(parsed, r, m), wap_id
-                    )
-                    for r, m in zip(routes, matches)
+                    pool.submit(r.engine.stage_batch, events, wap_id)
+                    for r, events in zip(routes, slices)
                 ]
                 first_err = None
                 for r, f in zip(routes, futs):
@@ -163,12 +167,10 @@ def fan_out_atomic(
                 if first_err is not None:
                     raise first_err
         else:
-            for r, m in zip(routes, matches):
-                handles.append(
-                    (r, r.engine.stage_batch(_route_slice(parsed, r, m), wap_id))
-                )
+            for r, events in zip(routes, slices):
+                handles.append((r, r.engine.stage_batch(events, wap_id)))
         # every route is staged (own copies under its table); the
-        # materialized decode is no longer read by audit/decide/publish
+        # parse scratch is no longer read by audit/decide/publish
         io.rmtree(parse_scratch)
         for r, h in handles:
             if r.audit_fn is None or h.wap_id is None:

@@ -345,13 +345,38 @@ def write_parquet_local(tbl, directory: str) -> str | None:
     tmp = os.path.join(directory, f".{name}.tmp")
     path = os.path.join(directory, name)
     try:
-        pq.write_table(tbl, tmp, compression="snappy", store_schema=False)
+        pq.write_table(tbl, tmp, compression="snappy", store_schema=False,
+                       use_dictionary=_dictionary_columns(tbl))
         os.replace(tmp, path)
     except BaseException:
         if os.path.exists(tmp):
             os.remove(tmp)
         raise
     return path
+
+
+def _dictionary_columns(tbl) -> list[str]:
+    """Leaf columns to dictionary-encode, as Spark's parquet writer ends
+    up encoding them: it falls back to plain encoding when a dictionary
+    does not shrink the column, which near-unique columns (content,
+    hashes, paths) never do; pyarrow would keep their dictionaries."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def leaves(name, t):
+        if pa.types.is_struct(t):
+            return [p for f in t for p in leaves(f"{name}.{f.name}", f.type)]
+        if pa.types.is_list(t):
+            return leaves(f"{name}.list.element", t.value_type)
+        return [name]
+
+    out = []
+    for f in tbl.schema:
+        if pa.types.is_nested(f.type):
+            out += leaves(f.name, f.type)
+        elif 2 * pc.count_distinct(tbl.column(f.name)).as_py() <= tbl.num_rows:
+            out.append(f.name)
+    return out
 
 
 def fileio_for(spark, path: str) -> FileIO:

@@ -3077,6 +3077,11 @@ class LakeTable:
         self._name_by_list.clear()
         return header
 
+    def _check_new_wap(self, wap_id: str) -> None:
+        self._check_wap_id(wap_id)
+        if self.io.exists(self._wap_path(wap_id)):
+            raise ValueError(f"staged commit {wap_id!r} already exists")
+
     def stage_buckets(
         self,
         df: DataFrame,
@@ -3092,18 +3097,39 @@ class LakeTable:
         bucket rewrite's data files (under ``data/wap-<id>``) and a
         staged header; the table head does not move until
         :meth:`publish_wap`."""
-        self._check_wap_id(wap_id)
-        if self.io.exists(self._wap_path(wap_id)):
-            raise ValueError(f"staged commit {wap_id!r} already exists")
+        self._check_new_wap(wap_id)
         prev = self.current()
-        out_dir = self._fresh_stage_dir(f"wap-{wap_id}")
         new_files = self._write_bucket_data(
-            df, out_dir, touched_buckets, prev.get("sort_cols")
+            df, self._fresh_stage_dir(f"wap-{wap_id}"), touched_buckets,
+            prev.get("sort_cols"),
         )
+        return self.stage_bucket_files(
+            new_files, new_watermarks, wap_id, stats=stats,
+            schema_version=schema_version, columns=columns, operation=operation,
+            basis_snapshot_id=prev["snapshot_id"],
+        )
+
+    def stage_bucket_files(
+        self,
+        new_files: dict[str, list[str]],
+        new_watermarks: dict[int, str],
+        wap_id: str,
+        stats: dict | None = None,
+        schema_version: int | None = None,
+        columns: list[str] | None = None,
+        operation: str = "overwrite",
+        basis_snapshot_id: int | None = None,
+    ) -> dict:
+        """Metadata-only half of :meth:`stage_buckets`: stage
+        ALREADY-WRITTEN data files (``{bucket: [paths]}``, as for
+        :meth:`commit_bucket_files`) as a header on top of
+        ``basis_snapshot_id`` (default: the head). :meth:`publish_wap`
+        refuses it if the head is no longer that snapshot."""
+        self._check_new_wap(wap_id)
         snapshot = self._next_bucket_snapshot(
             new_files, new_watermarks, stats=stats,
             schema_version=schema_version, columns=columns, operation=operation,
-            prev=prev,
+            prev=self.snapshot(basis_snapshot_id),
         )
         self._write_wap_header(snapshot, wap_id)
         return snapshot
@@ -3132,14 +3158,33 @@ class LakeTable:
     ) -> dict:
         """:meth:`commit_deltas` with the publish withheld (see
         :meth:`stage_buckets`)."""
-        self._check_wap_id(wap_id)
-        if self.io.exists(self._wap_path(wap_id)):
-            raise ValueError(f"staged commit {wap_id!r} already exists")
-        out_dir = self._fresh_stage_dir(f"wap-delta-{wap_id}")
-        new_files = self._write_delta_data(df, out_dir, touched_buckets)
+        self._check_new_wap(wap_id)
+        sid = self.current_snapshot_id()
+        new_files = self._write_delta_data(
+            df, self._fresh_stage_dir(f"wap-delta-{wap_id}"), touched_buckets
+        )
+        return self.stage_delta_files(
+            new_files, new_watermarks, wap_id, stats=stats,
+            schema_version=schema_version, columns=columns, basis_snapshot_id=sid,
+        )
+
+    def stage_delta_files(
+        self,
+        new_files: dict[str, list[str]],
+        new_watermarks: dict[int, str],
+        wap_id: str,
+        stats: dict | None = None,
+        schema_version: int | None = None,
+        columns: list[str] | None = None,
+        basis_snapshot_id: int | None = None,
+    ) -> dict:
+        """Metadata-only half of :meth:`stage_deltas` (see
+        :meth:`stage_bucket_files`)."""
+        self._check_new_wap(wap_id)
         snapshot = self._next_delta_snapshot(
             new_files, new_watermarks, stats=stats,
             schema_version=schema_version, columns=columns,
+            prev=self.snapshot(basis_snapshot_id),
         )
         self._write_wap_header(snapshot, wap_id)
         return snapshot

@@ -21,6 +21,7 @@ tests/test_xxh_twin.py over ASCII/unicode/empty/long inputs.
 from __future__ import annotations
 
 import struct
+from functools import lru_cache
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -102,9 +103,21 @@ def bucket_of(repo: str | None, path: str | None, num_buckets: int, path_salt: i
     ``pmod`` (both floor toward the modulus sign). A None part hashes
     as Spark's NULL child does: it is skipped, so the running seed
     passes through unchanged."""
-    salt = (SPARK_SEED if path is None else xxh64(path.encode("utf-8"), SPARK_SEED)) % path_salt
-    seed = SPARK_SEED if repo is None else xxh64(repo.encode("utf-8"), SPARK_SEED)
-    return xxh64_long(salt, seed=seed) % num_buckets
+    salt = (SPARK_SEED if path is None else _str_hash(path)) % path_salt
+    seed = SPARK_SEED if repo is None else _str_hash(repo)
+    return _salted(salt, seed) % num_buckets
+
+
+# a batch's keys repeat repos and paths (and a repo meets at most
+# path_salt salts), so the driver-side apply hashes each distinct part once
+@lru_cache(maxsize=1 << 16)
+def _str_hash(s: str) -> int:
+    return xxh64(s.encode("utf-8"), SPARK_SEED)
+
+
+@lru_cache(maxsize=1 << 16)
+def _salted(salt: int, seed: int) -> int:
+    return xxh64_long(salt, seed=seed)
 
 
 def buckets_for_repo(repo: str, num_buckets: int, path_salt: int = 16) -> list[int]:

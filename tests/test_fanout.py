@@ -276,25 +276,36 @@ def test_consistent_cut_requires_full_ledgers(spark, tmp_path):
         consistent_cut({"users": eng_b.table, "other": eng_c.table})
 
 
-def test_route_slices_never_reparse_the_json(spark):
-    """The module's scale claim: the raw JSON is decoded ONCE and each
-    route's slice filters the MATERIALIZED columns — a per-route
-    re-parse would multiply the most expensive stage by the route
-    count. Pin it on the exact composition fan_out_debezium builds:
-    the sliced plan must scan the checkpoint, not JsonToStructs."""
-    from filters_spark.operators.materialize import materialize
-    from filters_spark.sources.debezium import parse_debezium
+def test_route_slices_never_reparse_the_json(spark, tmp_path):
+    """The module's scale claim: the raw JSON is decoded ONCE, by the
+    route-partitioned scratch write, and each route's slice reads only
+    its own ``_route=i`` partition — a per-route re-parse would
+    multiply the most expensive stage by the route count. Pinned on
+    the exact frames fan-out builds."""
+    from filters_spark.engine.fanout import _gate, _route_partitioned
 
-    ev = events_df(spark, n_events=50, seed=7, dirty_frac=0.0)
-    parsed = materialize(parse_debezium(
-        envelopes(ev, table="repos"),
-        ["repo", "path", "lang", "content"],
-        seq_expr=SEQ, include_source=True,
-    ))
-    sliced = parsed.filter(F.col("_src_table") == "repos")
-    plan = sliced._jdf.queryExecution().executedPlan().toString()
-    assert "from_json" not in plan and "JsonToStructs" not in plan
-    assert sliced.count() == 50
+    ev_a = events_df(spark, n_events=50, seed=7, dirty_frac=0.0)
+    ev_b = events_df(spark, n_events=30, seed=8, dirty_frac=0.0)
+    wire = str(tmp_path / "wire")
+    envelopes(ev_a, table="repos").unionAll(envelopes(ev_b, table="users")).write.parquet(wire)
+    raw = spark.read.parquet(wire)
+    routes = [
+        TableRoute("repos", make_engine(spark, str(tmp_path / "a"))),
+        TableRoute("users", make_engine(spark, str(tmp_path / "b"))),
+    ]
+    plan = _route_partitioned(raw, routes, "value", None, SEQ)
+    written = plan._jdf.queryExecution().executedPlan().toString()
+    assert written.count("from_json") + written.count("JsonToStructs") == 1
+    scratch = str(tmp_path / "scratch")
+    plan.write.partitionBy("_route").parquet(scratch)
+    seen = {"n_unordered": 0, "n_unrouted": 0, "wm": None, "wm_min": None, "n": 80}
+    slices, _ = _gate(raw, routes, scratch, plan, seen, "count", True)
+    for i, (sliced, n) in enumerate(zip(slices, (50, 30))):
+        scan = sliced._jdf.queryExecution().executedPlan().toString()
+        assert "from_json" not in scan and "JsonToStructs" not in scan
+        files = sliced.inputFiles()
+        assert files and all(f"/_route={i}/" in f for f in files)
+        assert sliced.count() == n
 
 
 def test_streaming_fanout_end_to_end(spark, tmp_path):

@@ -1,8 +1,9 @@
-"""Driver-side merge-on-read applies (engine/local.py) against the Spark
+"""Driver-side applies and stages (engine/local.py) against the Spark
 path they replace: every fixture is applied once through each path to
 twin tables, and everything a caller can observe must be identical —
 read(), changes(), watermarks, dead letters (errors included), lineage
-rows and the returned metrics."""
+rows, file metadata and the returned metrics; for the fan-out flavors
+also the feed ledgers."""
 
 import json
 import os
@@ -14,9 +15,12 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
 import filters_spark.engine.cdc as cdc
+import filters_spark.engine.local as local
 from filters_spark.engine.cdc import CDCEngine
 from filters_spark.engine.defaults import default_registry
 from filters_spark.engine.evolution import VersionSpec
+from filters_spark.engine.fanout import TableRoute, fan_out_debezium, feed_positions
+from filters_spark.engine.txn import fan_out_atomic
 from filters_spark.lake.table import LakeTable
 from filters_spark.sources.datagen import gen_events
 
@@ -63,31 +67,36 @@ def parquet(spark, tmp, name, rows, ddl=DDL):
     return spark.read.parquet(path)
 
 
-def twins(spark, tmp, registry=default_registry, num_buckets=4):
+def twins(spark, tmp, registry=default_registry, num_buckets=4, mode="mor", **create):
     out = {}
-    for mode in ("spark", "local"):
+    for path in ("spark", "local"):
         table = LakeTable.create(
-            spark, os.path.join(tmp, mode), key_cols=["repo", "path"],
-            num_buckets=num_buckets, path_salt=4,
+            spark, os.path.join(tmp, path), key_cols=["repo", "path"],
+            num_buckets=num_buckets, path_salt=4, **create,
         )
-        out[mode] = CDCEngine(spark, table, registry(), write_mode="mor", compact_after=3)
+        out[path] = CDCEngine(spark, table, registry(), write_mode=mode, compact_after=3)
     out["spark"].LOCAL_MAX_ROWS = 0  # instance override: always stage through Spark
     return out
 
 
 def observe(engine, metrics) -> dict:
     t = engine.table
-    cols = ["repo", "path", "commit", "event_seq", "lang", "content", "content_sha"]
     df = t.read()
-    first = t.snapshots()[0]
-    ch = t.changes(first)
+    # copy-on-write commits keep no row-level change log
+    ch = t.changes(t.snapshots()[0]) if engine.write_mode == "mor" else None
     dl = engine.dead_letters(distinct=False)
     lin = engine.lineage()
     return {
-        "read": sorted(map(tuple, df.select(*cols).collect())) if df is not None else [],
+        "read": sorted(
+            map(tuple, df.select(*[c for c in df.columns if c != "_bucket"]).collect())
+        ) if df is not None else [],
         "changes": sorted(map(tuple, ch.collect())) if ch is not None else [],
         "watermarks": t.watermarks(),
         "snapshot": t.current_snapshot_id(),
+        "files": sorted(
+            (f["bucket"], f["kind"], f["rows"], json.dumps(f["stats"], sort_keys=True))
+            for f in t.files()
+        ),
         "dead": sorted(
             json.dumps(r.asDict(recursive=True), sort_keys=True) for r in dl.collect()
         ) if dl is not None else [],
@@ -97,18 +106,22 @@ def observe(engine, metrics) -> dict:
 
 
 def assert_parity(spark, tmp, batches, counted, registry=default_registry, ddl=DDL,
-                  num_buckets=4):
+                  num_buckets=4, mode="mor", **create):
+    """Applies ``batches`` in order through both paths; a callable step
+    runs on each engine between batches instead."""
     frames = [
         b if not isinstance(b, list) else parquet(spark, tmp, f"b{i}", b, ddl)
         for i, b in enumerate(batches)
     ]
-    eng = twins(spark, tmp, registry, num_buckets)
+    applied = [f for f in frames if not callable(f)]
+    eng = twins(spark, tmp, registry, num_buckets, mode, **create)
     got = {}
-    for mode, e in eng.items():
+    for path, e in eng.items():
         before = len(counted)
-        metrics = [e.apply_batch(f) for f in frames]
-        assert len(counted) - before == (len(frames) if mode == "local" else 0)
-        got[mode] = observe(e, metrics)
+        metrics = [f(e) if callable(f) else e.apply_batch(f) for f in frames]
+        metrics = [m for m, f in zip(metrics, frames) if not callable(f)]
+        assert len(counted) - before == (len(applied) if path == "local" else 0)
+        got[path] = observe(e, metrics)
     for k in got["spark"]:
         assert got["local"][k] == got["spark"][k], k
     return got["local"]
@@ -293,13 +306,195 @@ def test_ineligible_batches_stay_on_spark(spark, tmp_path, monkeypatch, counted)
     monkeypatch.setattr(CDCEngine, "_stage", stage)
     tmp = str(tmp_path)
     rows = [ev(1, 0, "r1", "a.py")]
+    # copy-on-write over more base rows than the driver merge may read
     table = LakeTable.create(spark, os.path.join(tmp, "cow"), key_cols=["repo", "path"])
+    eng = CDCEngine(spark, table, default_registry())
+    eng.apply_batch(parquet(spark, tmp, "a", rows))
+    monkeypatch.setattr(local, "COW_CURRENT_FACTOR", 0)
     with pytest.raises(Staged):
-        CDCEngine(spark, table, default_registry()).apply_batch(parquet(spark, tmp, "a", rows))
+        eng.apply_batch(parquet(spark, tmp, "a2", [ev(2, 0, "r1", "a.py")]))
+    with pytest.raises(Staged):
+        eng.stage_batch(parquet(spark, tmp, "a3", [ev(2, 0, "r1", "a.py")]), "w")
     table = LakeTable.create(spark, os.path.join(tmp, "mor"), key_cols=["repo", "path"])
     eng = CDCEngine(spark, table, default_registry(), write_mode="mor")
     with pytest.raises(Staged):
         eng.apply_batch(spark.createDataFrame(rows, DDL))            # no parquet files
     with pytest.raises(Staged):
         eng.apply_batch(parquet(spark, tmp, "b", rows), audit_fn=lambda t, w: True)
-    assert counted == []
+    assert len(counted) == 1  # the copy-on-write table's first batch
+
+
+# --- copy-on-write -------------------------------------------------------
+
+
+def test_cow_deletes_empty_buckets_duplicates_and_null_positions(spark, tmp_path, counted):
+    b1 = [ev(1, i, "r1", f"k{i}.py", op="I", content=f"v{i}") for i in range(6)] + [
+        ev(1, 6, "r2", "z.py"),
+        ev(1, 7, "r2", "d.py", op="I", content="dup"),
+        ev(1, 7, "r2", "d.py", op="I", content="dup"),
+        ev(1, 8, "r3", "x.py", lang="cobol"),               # dead
+        ev(None, 0, "n1", "fresh.py", content="unordered"),
+    ]
+    b2 = [ev(2, i, "r1", f"k{i}.py", op="D") for i in range(6)] + [
+        ev(2, 6, "r2", "z.py", content="new"),
+        ev(3, 0, "n1", "fresh.py", content="ordered"),      # beats a NULL position
+        ev(None, 1, "n2", "other.py"),
+        ev(1, 6, "r2", "z.py", content="replayed"),         # at the watermark
+    ]
+    got = assert_parity(spark, str(tmp_path), [b1, b2, b1], counted, num_buckets=8,
+                        mode="cow")
+    assert {r[:2] for r in got["read"]} == {
+        ("r2", "z.py"), ("r2", "d.py"), ("n1", "fresh.py"), ("n2", "other.py"),
+    }
+    assert got["metrics"][2]["applied"] == 0
+
+
+def _widen(engine):
+    reg = engine.registry
+    spec = dict(reg.get(1).field_specs)
+    spec["license"] = {"chain": ["strip", "ascii_lower"]}
+    reg.register(VersionSpec(3, spec))
+
+
+def test_cow_column_added_by_newer_registry(spark, tmp_path, counted):
+    ddl = DDL + ", license string"
+    b1 = [(*ev(1, i, f"r{i}", "a.py"), None) for i in range(4)]
+    b2 = [(*ev(2, 0, "r0", "a.py", v=3), " MIT "), (*ev(2, 1, "r9", "b.py", v=3), "GPL")]
+    got = assert_parity(spark, str(tmp_path), [b1, _widen, b2], counted, ddl=ddl,
+                        mode="cow")
+    lic = {r[:2]: r[6] for r in got["read"]}
+    assert lic[("r0", "a.py")] == "mit" and lic[("r1", "a.py")] is None
+
+
+def test_cow_sort_cols_and_stats_cols(spark, tmp_path, counted):
+    rows = [ev(1, i, f"r{i % 3}", f"p{(7 * i) % 40:02d}.py", lang=["py", "go", None][i % 3])
+            for i in range(40)]
+    more = [ev(2, i, f"r{i % 3}", f"p{i:02d}.py", content="later") for i in range(0, 40, 3)]
+    got = assert_parity(spark, str(tmp_path), [rows, more], counted, mode="cow",
+                        sort_cols=["path"], stats_cols=["path", "lang"])
+    assert all(f[2] is not None and "path" in json.loads(f[3]) for f in got["files"])
+
+
+def test_cow_datagen_unicode_hazards(spark, tmp_path, counted):
+    path = os.path.join(str(tmp_path), "in", "gen")
+    gen_events(
+        spark, n_events=900, n_repos=10, n_paths=60, events_per_commit=20,
+        hot_frac=0.2, dirty_frac=0.2, unicode_hazards=True, seed=9,
+    ).write.parquet(path)
+    wal = spark.read.parquet(path)
+    mid = c(24)
+    got = assert_parity(
+        spark, str(tmp_path),
+        [wal.filter(wal.commit <= mid), wal.filter(wal.commit > mid)], counted, mode="cow",
+    )
+    assert got["dead"] and got["read"]
+
+
+def test_small_cow_batch_runs_at_most_one_job(spark, tmp_path, counted):
+    tmp = str(tmp_path)
+    table = LakeTable.create(spark, os.path.join(tmp, "t"), key_cols=["repo", "path"],
+                             num_buckets=4)
+    eng = CDCEngine(spark, table, default_registry())
+    eng.apply_batch(parquet(spark, tmp, "a", [ev(1, i, f"r{i % 7}", f"{i}.py")
+                                              for i in range(300)]))
+    batch = parquet(spark, tmp, "b", [ev(2, i, f"r{i % 5}", f"{2 * i}.py", content="u")
+                                      for i in range(200)])
+    m, jobs = _jobs(spark, lambda: eng.apply_batch(batch))
+    assert m["events_in"] == 200 and jobs <= 1, jobs
+    assert len(counted) == 2
+
+
+# --- stage_batch and fan-out ----------------------------------------------
+
+
+def _entry(h) -> dict:
+    e = {k: v for k, v in h.to_entry().items()
+         if k not in ("scratch", "dead_src", "adopt_name")}
+    e["bucket_stats"] = sorted(e["bucket_stats"])
+    return e
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_stage_batch_publish_and_abandon(spark, tmp_path, mode, counted):
+    tmp = str(tmp_path)
+    b1 = parquet(spark, tmp, "b1", [ev(1, i, f"r{i}", "a.py") for i in range(5)]
+                 + [ev(1, 5, "r1", "bad.py", lang="cobol")])
+    b2 = parquet(spark, tmp, "b2", [ev(2, 0, "r1", "a.py", op="D"), ev(2, 1, "r7", "n.py"),
+                                    ev(2, 2, "r2", "bad.py", lang="cobol")])
+    got = {}
+    for path, e in twins(spark, tmp, mode=mode).items():
+        before = len(counted)
+        h1 = e.stage_batch(b1, "w1")
+        assert e.table.current_snapshot_id() == 0 and e.table.wap_ids() == ["w1"]
+        m1 = h1.publish()
+        h2 = e.stage_batch(b2, "w2")
+        dropped = h2.abandon()
+        h3 = e.stage_batch(b2, "w3")
+        m3 = h3.publish()
+        staging = os.path.join(e.table.root, "_staging")
+        assert os.listdir(staging) == [] and e.table.wap_ids() == []
+        assert len(counted) - before == (3 if path == "local" else 0)
+        got[path] = observe(e, [m1, dropped, m3])
+        got[path]["handles"] = [_entry(h) for h in (h1, h2, h3)]
+    for k in got["spark"]:
+        assert got["local"][k] == got["spark"][k], k
+    assert got["local"]["metrics"][2]["dead_lettered"] == 1
+
+
+def _fan_in(spark):
+    from tests.test_cdc_engine import events_df
+    from tests.test_fanout import envelopes
+
+    ev_a = events_df(spark, n_events=200, seed=11, dirty_frac=0.05)
+    ev_b = events_df(spark, n_events=150, seed=23, dirty_frac=0.05)
+    ev_x = events_df(spark, n_events=30, seed=5, dirty_frac=0.0)
+    return envelopes(ev_a, table="repos").unionAll(envelopes(ev_b, table="users")) \
+        .unionAll(envelopes(ev_x, table="extra"))
+
+
+@pytest.mark.parametrize("flavor", ["plain", "atomic"])
+def test_fan_out_parity(spark, tmp_path, flavor, counted):
+    from tests.test_fanout import SEQ
+
+    tmp = str(tmp_path)
+    mixed = _fan_in(spark)
+    mors, cows = twins(spark, os.path.join(tmp, "a")), twins(spark, os.path.join(tmp, "b"), mode="cow")
+    got = {}
+    for path in ("spark", "local"):
+        before = len(counted)
+        mor, cow = mors[path], cows[path]
+        routes = [TableRoute("repos", mor), TableRoute("users", cow)]
+        if flavor == "plain":
+            rep = fan_out_debezium(mixed, routes, seq_expr=SEQ)
+        else:
+            rep = fan_out_atomic(mixed, routes, os.path.join(tmp, f"txn-{path}"),
+                                 seq_expr=SEQ, txn_id="t1")
+        assert rep["unrouted"] == {"d.extra": 30}
+        assert len(counted) - before == (2 if path == "local" else 0)
+        tables = rep.pop("tables")
+        got[path] = {
+            "report": rep,
+            "feeds": [feed_positions(e.table) for e in (mor, cow)],
+            "tables": [observe(e, [tables[k]]) for e, k in ((mor, "repos"), (cow, "users"))],
+        }
+    assert got["local"] == got["spark"]
+
+
+def test_fan_out_atomic_runs_at_most_three_jobs(spark, tmp_path, counted):
+    """2 routes, ~400 envelopes: the parse write (which also observes
+    the gate) plus one collect per route — no gate job."""
+    from tests.test_cdc_engine import events_df, make_engine
+    from tests.test_fanout import SEQ, envelopes
+
+    ev_a = events_df(spark, n_events=250, seed=11, dirty_frac=0.05)
+    ev_b = events_df(spark, n_events=150, seed=23, dirty_frac=0.05)
+    mixed = envelopes(ev_a, table="repos").unionAll(envelopes(ev_b, table="users"))
+    routes = [TableRoute("repos", make_engine(spark, os.path.join(str(tmp_path), "a"))),
+              TableRoute("users", make_engine(spark, os.path.join(str(tmp_path), "b")))]
+    rep, jobs = _jobs(
+        spark, lambda: fan_out_atomic(mixed, routes, os.path.join(str(tmp_path), "txn"),
+                                      seq_expr=SEQ),
+    )
+    assert rep["txn"] == "committed" and rep["feed_to"] is not None
+    assert len(counted) == 2
+    assert jobs <= 1 + len(routes), jobs

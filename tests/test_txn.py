@@ -360,7 +360,8 @@ def test_streaming_atomic_fanout_recovers_then_applies(spark, tmp_path):
     _clean([eng_a, eng_b], txn_dir)
 
 
-def test_crash_point_fuzz_converges_to_uncrashed_state(spark, tmp_path):
+@pytest.mark.parametrize("stager", ["driver", "spark"])
+def test_crash_point_fuzz_converges_to_uncrashed_state(spark, tmp_path, stager):
     """Torture sweep: a 4-batch feed where every batch's FIRST delivery
     crashes at a different protocol point (pre-decision, post-decision,
     after route 0's publish, after route 1's publish), recovery runs,
@@ -368,7 +369,8 @@ def test_crash_point_fuzz_converges_to_uncrashed_state(spark, tmp_path):
     topology must converge to the uncrashed run's byte state, with both
     feed ledgers identical and strictly monotonic — regardless of
     whether recovery aborted (re-delivery applies) or rolled forward
-    (re-delivery dedupes as replays)."""
+    (re-delivery dedupes as replays). Small batches stage on the
+    driver; the ``spark`` stager forces the Spark staging path."""
     import pyspark.sql.functions as F
 
     crash_points = ["staged", "recorded", "published:0", "published:1"]
@@ -376,6 +378,8 @@ def test_crash_point_fuzz_converges_to_uncrashed_state(spark, tmp_path):
     ev_a, ev_b, _ = _two_streams(spark)
     eng_a = make_engine(spark, str(tmp_path / "a"))
     eng_b = make_engine(spark, str(tmp_path / "b"))
+    if stager == "spark":
+        eng_a.LOCAL_MAX_ROWS = eng_b.LOCAL_MAX_ROWS = 0
     routes = [TableRoute("repos", eng_a), TableRoute("users", eng_b)]
     txn_dir = str(tmp_path / "txn")
 
