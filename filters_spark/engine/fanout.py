@@ -49,6 +49,7 @@ from pyspark.sql.types import StructType
 
 from filters_spark.engine.cdc import CDCEngine
 from filters_spark.lake.table import watermark_str
+from filters_spark.session import job_description
 
 __all__ = [
     "TableRoute",
@@ -455,7 +456,8 @@ def _parse_and_gate(
         routes[0].engine.table.root, "_staging",
         f"fanout-parse-{_uuid.uuid4().hex}",
     )
-    observed.write.partitionBy("_route").parquet(scratch)
+    with job_description(raw.sparkSession, "filters_spark: fan-out parse"):
+        observed.write.partitionBy("_route").parquet(scratch)
     try:
         return (*_gate(raw, routes, scratch, plan, gate.get, unrouted, track_feed), scratch)
     except BaseException:

@@ -11,9 +11,15 @@ small work) with the same plan, kernels and commit as the Spark path:
   (``CDCEngine._validation_groups``): a chain with a native form is
   evaluated by the collect with the Spark path's native expressions,
   any other chain through :func:`kernel_runner` — the body of the Spark
-  path's pandas UDF;
-- ``_bucket`` (:func:`bucket_of`), ``_wm``, watermark survival and the
+  path's pandas UDF — over its rows handed over with ``to_pandas()``;
+- ``_bucket`` (:func:`buckets_of`), ``_wm``, watermark survival and the
   batch stats follow the Spark expressions, NULLs included;
+- all bookkeeping around the kernels — merging native and kernel
+  results, watermarks, stats (``group_by``), the LWW heads and the file
+  builds (``sort_indices`` + adjacent-key compare) — runs in Arrow
+  compute and numpy on whole columns, which release the GIL, so the
+  routes of a fan-out overlap; only the kernels (and one hashlib call
+  per copy-on-write row for ``content_sha``) run Python per row;
 - merge-on-read: the in-batch last-writer-wins dedupe keeps tombstones
   and the delta files are written with pyarrow into the usual
   ``_bucket=<b>/`` layout;
@@ -45,18 +51,19 @@ import json
 import os
 import threading
 import uuid
+from urllib.parse import unquote
 
-import pandas as pd
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from filters_spark.lake.fileio import _scheme, write_parquet_local
-from filters_spark.lake.xxh import bucket_of
+from filters_spark.lake.xxh import buckets_of
 from filters_spark.operators.validate import FieldSpec, kernel_runner
+from filters_spark.session import job_description
 
 PASSTHROUGH = ["commit", "event_seq", "op", "schema_version"]
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
@@ -106,7 +113,8 @@ def parquet_footers(df: DataFrame):
     paths = []
     for uri in files:
         if uri.startswith("file:"):
-            path = uri[len("file:"):]
+            # percent-encoded: a dir "sp ace%41" reads "sp%20ace%2541"
+            path = unquote(uri[len("file:"):])
             # file:///x and file:/x both mean /x
             while path.startswith("//"):
                 path = path[1:]
@@ -257,86 +265,99 @@ def _native_names(field: str, gi: int) -> tuple[str, str]:
     return f"__nat_t_{field}_{gi}", f"__nat_e_{field}_{gi}"
 
 
-def _validate(engine, tbl: pa.Table) -> dict[str, list]:
+def _validate(engine, tbl: pa.Table, errors_type: pa.DataType) -> dict[str, pa.Array]:
     """The staged columns (``_validated`` + ``_null_clean_raws``) as
-    Python lists, one entry per input row. A group whose native parts
-    the collect evaluated (:func:`_native_parts`) takes them as the
-    Spark path does; the others run the kernel."""
+    Arrow arrays over the input rows. A group whose native parts the
+    collect evaluated (:func:`_native_parts`) takes them as the Spark
+    path does; the others run the kernel over their rows."""
     n = tbl.num_rows
-    src = {
-        c: pc.cast(tbl.column(c), pa.string()).to_pylist()
-        for c in _sources(engine, tbl.column_names)
-    }
-    out = {c: tbl.column(c).to_pylist() for c in PASSTHROUGH}
+    col = {c: tbl.column(c).combine_chunks() for c in tbl.column_names}
+    src = {c: pc.cast(col[c], pa.string()) for c in _sources(engine, tbl.column_names)}
+    out = {c: col[c] for c in PASSTHROUGH}
     sv = out["schema_version"]
-    errors: list[list] = [[] for _ in range(n)]
+    error_type = errors_type.value_type
+    null = pa.nulls(n, pa.string())
+    # every error found, as its row and its struct, in field order
+    err_rows, err_items = [pa.array([], pa.int64())], [pa.array([], error_type)]
     for field, groups in engine._validation_groups(tbl.column_names).items():
-        values = [None] * n
+        values = null
         # unknown versions keep the canonical-named column as raw
-        raws = list(src.get(field, values))
-        for gi, (versions, chain_spec, col) in enumerate(groups):
-            rows = [i for i, v in enumerate(sv) if v in versions]
-            if not rows:
+        raws = src.get(field, null)
+        for gi, (versions, chain_spec, name) in enumerate(groups):
+            rows = pc.is_in(sv, value_set=pa.array(versions, sv.type))
+            if not pc.any(rows).as_py():
                 continue
-            inp = [src[col][i] for i in rows] if col is not None else [None] * len(rows)
-            for i, x in zip(rows, inp):
-                raws[i] = x
+            inp = src[name] if name is not None else null
+            raws = pc.if_else(rows, inp, raws)
             if chain_spec is None:  # field not validated in these versions
-                for i, x in zip(rows, inp):
-                    values[i] = x
+                values = pc.if_else(rows, inp, values)
                 continue
             t_name, e_name = _native_names(field, gi)
-            if e_name in tbl.column_names:
-                t, e = tbl.column(t_name).to_pylist(), tbl.column(e_name).to_pylist()
-                for i in rows:
-                    if e[i] is None:
-                        values[i] = t[i]
-                    else:
-                        errors[i].append(e[i])
+            if e_name in col:
+                err = col[e_name]
+                failed = pc.and_(rows, pc.is_valid(err))
+                values = pc.if_else(pc.and_(rows, pc.is_null(err)), col[t_name], values)
+                err_rows.append(pc.indices_nonzero(failed))
+                err_items.append(err.filter(failed).cast(error_type))
                 continue
-            res = kernel_runner(field, FieldSpec.of(chain_spec))(pd.Series(inp, dtype=object))
-            for i, v, e in zip(rows, res["value"].tolist(), res["errors"].tolist()):
-                values[i] = v
-                errors[i].extend(e)
+            res = kernel_runner(field, FieldSpec.of(chain_spec))(inp.filter(rows).to_pandas())
+            values = pc.replace_with_mask(values, rows, pa.array(res["value"], pa.string()))
+            found = pa.array(res["errors"], errors_type)
+            err_rows.append(pc.indices_nonzero(rows).take(pc.list_parent_indices(found)))
+            err_items.append(pc.list_flatten(found))
         out[field] = values
         out[f"_raw_{field}"] = raws
-    known = set(engine.registry.versions)
-    for i, v in enumerate(sv):
-        if v not in known:
-            errors[i] = [{
-                "key": "schema_version", "code": "unknown_schema_version",
-                "message": f"No spec registered for schema_version={'null' if v is None else v}",
-            }]
+    at = pa.concat_arrays([pc.cast(r, pa.int64()) for r in err_rows])
+    items = pa.concat_arrays(err_items)
+    # an unknown version's one error replaces the others
+    known = pa.array(sorted(engine.registry.versions), sv.type)
+    unknown = pc.invert(pc.is_in(sv, value_set=known))
+    kept = pc.invert(unknown.take(at))
+    u = pc.indices_nonzero(unknown)
+    v = pc.fill_null(pc.cast(sv.take(u), pa.string()), "null")
+    at = pa.concat_arrays([at.filter(kept), pc.cast(u, pa.int64())])
+    items = pa.concat_arrays([items.filter(kept), pa.StructArray.from_arrays(
+        [pa.repeat("schema_version", len(u)), pa.repeat("unknown_schema_version", len(u)),
+         pc.binary_join_element_wise("No spec registered for schema_version=", v, "")],
+        names=["key", "code", "message"],
+    ).cast(error_type)])
+    counts = np.bincount(at.to_numpy(), minlength=n)
+    offsets = pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32())
+    # a stable sort by row keeps each row's errors in field order
+    out["_errors"] = pa.ListArray.from_arrays(offsets, items.take(pc.sort_indices(at))) \
+        .cast(errors_type)
+    dead = out["_dead"] = pa.array(counts > 0)
     for field in engine.registry.canonical_columns:  # keep_raw="on_error"
-        out[f"_raw_{field}"] = [r if e else None for r, e in zip(out[f"_raw_{field}"], errors)]
-    out["_errors"] = errors
+        out[f"_raw_{field}"] = pc.if_else(dead, out[f"_raw_{field}"], None)
     return out
 
 
-def _wm(commit, seq) -> str | None:
+def _wm(commit, seq):
     """``watermark_str``: NULL in, NULL out; lpad pads or truncates."""
-    if commit is None or seq is None:
-        return None
-    return f"{commit}:{str(seq).rjust(20, '0')[:20]}"
+    padded = pc.utf8_lpad(pc.cast(seq, pa.string()), 20, "0")
+    return pc.binary_join_element_wise(commit, pc.utf8_slice_codeunits(padded, 0, 20), ":")
 
 
-def _table(cols: dict[str, list], schema: StructType, rows: list[int]) -> pa.Table:
-    arrow = to_arrow_schema(schema)
-    arrays = []
-    for f in arrow:
-        vals = [cols[f.name][i] for i in rows]
-        if f.name.startswith("_raw_") and not pa.types.is_string(f.type):
-            arrays.append(pc.cast(pa.array(vals, pa.string()), f.type))
-        else:
-            arrays.append(pa.array(vals, type=f.type))
-    return pa.table(arrays, schema=arrow)
+def _key_starts(tbl: pa.Table, keys: list[str]) -> pa.Array:
+    """True at each row of the key-sorted ``tbl`` whose (non-NULL)
+    ``keys`` differ from the previous row's."""
+    n = tbl.num_rows
+    if n == 0:
+        return pa.array([], pa.bool_())
+    new = pa.repeat(False, n - 1)
+    for k in keys:
+        c = tbl.column(k).combine_chunks()
+        new = pc.or_(new, pc.not_equal(c.slice(1), c.slice(0, n - 1)))
+    return pa.concat_arrays([pa.array([True]), new])
 
 
-def _collect(frame: DataFrame) -> pa.Table:
+def _collect(frame: DataFrame, table_root: str) -> pa.Table:
     """``frame`` as one Arrow table: a ``toArrow()`` job, or none for a
     frame without input files (a file scan of an empty directory)."""
     if frame.inputFiles():
-        return frame.toArrow()
+        with job_description(frame.sparkSession,
+                             f"filters_spark: local collect {os.path.basename(table_root)}"):
+            return frame.toArrow()
     return to_arrow_schema(frame.schema).empty_table()
 
 
@@ -347,33 +368,28 @@ def apply_local(engine, events: DataFrame, snap: dict, plan: tuple, t0: float,
     With ``wap_id`` the batch is staged instead and the
     :class:`StagedBatch` equals ``CDCEngine.stage_batch``'s."""
     schema, native = plan
-    tbl = _collect(events.select(*PASSTHROUGH, *_sources(engine, events.columns), *native))
+    tbl = _collect(events.select(*PASSTHROUGH, *_sources(engine, events.columns), *native),
+                   engine.table.root)
     if tbl.num_rows == 0:
         if wap_id is not None:
             return engine._empty_stage(snap, t0)
         return engine._untouched_metrics(engine._batch_stats([]), snap, t0)
-    cols = _validate(engine, tbl)
-    n = tbl.num_rows
-    nb, salt, wm_map = snap["num_buckets"], snap["path_salt"], snap["watermarks"]
-    repo, path, errors = cols["repo"], cols["path"], cols["_errors"]
-    bucket = cols["_bucket"] = [bucket_of(r, p, nb, salt) for r, p in zip(repo, path)]
-    wm = cols["_wm"] = [_wm(c, s) for c, s in zip(cols["commit"], cols["event_seq"])]
-    dead = [bool(e) for e in errors]
+    arrow = to_arrow_schema(schema)
+    cols = _validate(engine, tbl, arrow.field("_errors").type)
+    nb, wms = snap["num_buckets"], snap["watermarks"]
+    bucket = cols["_bucket"] = buckets_of(cols["repo"], cols["path"], nb, snap["path_salt"])
+    wm = cols["_wm"] = _wm(cols["commit"], cols["event_seq"])
+    staged = pa.table([pc.cast(cols[f.name], f.type) for f in arrow], schema=arrow)
+    dead = cols["_dead"]
     # _with_survives: NULL bucket watermark -> True; NULL _wm -> NULL
-    survives = []
-    for b, w in zip(bucket, wm):
-        bw = wm_map.get(str(b))
-        survives.append(True if bw is None else (None if w is None else w > bw))
-
-    agg: dict[tuple, list] = {}
-    for key in zip(dead, survives, bucket, wm):
-        cur = agg.setdefault(key[:3], [None, 0])
-        cur[1] += 1
-        if key[3] is not None and (cur[0] is None or key[3] > cur[0]):
-            cur[0] = key[3]
+    bucket_wm = pa.array([wms.get(str(b)) for b in range(nb)], pa.string()).take(bucket)
+    survives = pc.if_else(pc.is_null(bucket_wm), True, pc.greater(wm, bucket_wm))
+    stats = pa.table({"_dead": dead, "_survives": survives, "_bucket": bucket, "wm": wm}) \
+        .group_by(["_dead", "_survives", "_bucket"]).aggregate([("wm", "max"), ([], "count_all")])
     p = engine._batch_stats([
         {"_dead": d, "_survives": s, "_bucket": b, "wm": w, "n": c}
-        for (d, s, b), (w, c) in agg.items()
+        for d, s, b, w, c in zip(*(stats.column(k).to_pylist() for k in
+                                   ("_dead", "_survives", "_bucket", "wm_max", "count_all")))
     ])
 
     # dead letters: adopted after the commit, or kept in the stage's
@@ -387,8 +403,7 @@ def apply_local(engine, events: DataFrame, snap: dict, plan: tuple, t0: float,
 
     def write_dead() -> None:
         if p["n_dead"]:
-            dl = StructType([f for f in schema.fields if f.name != "_dead"])
-            write_parquet_local(_table(cols, dl, [i for i in range(n) if dead[i]]), dead_dir)
+            write_parquet_local(staged.drop_columns(["_dead"]).filter(dead), dead_dir)
 
     try:
         if wap_id is not None:
@@ -401,15 +416,19 @@ def apply_local(engine, events: DataFrame, snap: dict, plan: tuple, t0: float,
             write_dead()
             return engine._untouched_metrics(p, snap, t0)
 
-        # in-batch LWW per key, tombstones kept: _wm desc, NULLs last
-        head: dict[tuple, int] = {}
-        for i in range(n):
-            if dead[i] or survives[i] is not True or repo[i] is None or path[i] is None:
-                continue
-            k = (bucket[i], repo[i], path[i])
-            j = head.get(k)
-            if j is None or (wm[i] is not None and (wm[j] is None or wm[i] > wm[j])):
-                head[k] = i
+        # in-batch LWW per key, tombstones kept: _wm desc, NULLs last,
+        # the first event of a tie; heads come out in key order
+        live = pc.and_(pc.and_(pc.invert(dead), pc.fill_null(survives, False)),
+                       pc.and_(pc.is_valid(cols["repo"]), pc.is_valid(cols["path"])))
+        cand = staged.select(["_bucket", "repo", "path", "_wm"]).filter(live)
+        order = pc.sort_indices(cand, sort_keys=[
+            ("_bucket", "ascending"), ("repo", "ascending"), ("path", "ascending"),
+            ("_wm", "descending"),
+        ], null_placement="at_end")
+        firsts = _key_starts(cand.take(order), ["_bucket", "repo", "path"])
+        heads = staged.select(["_bucket", "repo", "path", "commit", "event_seq",
+                               *engine._payload_cols(), "op"]) \
+            .take(pc.indices_nonzero(live).take(order.filter(firsts)))
         table = engine.table
         tag = f"{snap['snapshot_id'] + 1:08d}-{uuid.uuid4().hex[:8]}"
         commit_kw = dict(
@@ -423,14 +442,14 @@ def apply_local(engine, events: DataFrame, snap: dict, plan: tuple, t0: float,
                 os.path.join(table.data_dir, f"delta-{tag}") if wap_id is None
                 else table._fresh_stage_dir(f"wap-delta-{wap_id}")
             )
-            new_files = _write_deltas(engine, cols, schema, head, out_dir)
+            new_files = _write_deltas(engine, heads, out_dir)
             commit, stage = table.commit_delta_files, table.stage_delta_files
         else:
             out_dir = (
                 os.path.join(table.data_dir, f"snap-{tag}") if wap_id is None
                 else table._fresh_stage_dir(f"wap-{wap_id}")
             )
-            new_files = _write_cow(engine, snap, cols, head, p["touched"], out_dir)
+            new_files = _write_cow(engine, snap, heads, p["touched"], out_dir)
             commit, stage = table.commit_bucket_files, table.stage_bucket_files
         if wap_id is not None:
             header = stage(new_files, p["new_wms"], wap_id, **commit_kw)
@@ -445,26 +464,37 @@ def apply_local(engine, events: DataFrame, snap: dict, plan: tuple, t0: float,
     return engine._after_commit(new_snap, p, write_dead, t0)
 
 
-def _write_deltas(engine, cols: dict, schema: StructType, head: dict, out_dir: str) -> dict:
-    """The batch's LWW heads (tombstones kept) as one delta file per
-    bucket, rows in (repo, path) order."""
-    delta = StructType([
-        schema[c] for c in
-        ["repo", "path", "commit", "event_seq", *engine._payload_cols(), "op"]
-    ])
-    by_bucket: dict[int, list[int]] = {}
-    for k, i in sorted(head.items()):  # (repo, path) order within a bucket
-        by_bucket.setdefault(k[0], []).append(i)
+def _by_bucket(rows: pa.Table) -> dict[int, pa.Table]:
+    """The bucket-sorted ``rows`` as one zero-copy slice per bucket."""
+    counts = pc.value_counts(rows.column("_bucket"))  # in order of appearance
+    out, at = {}, 0
+    for b, k in zip(counts.field("values").to_pylist(), counts.field("counts").to_pylist()):
+        out[b], at = rows.slice(at, k), at + k
+    return out
+
+
+def _write_deltas(engine, heads: pa.Table, out_dir: str) -> dict:
+    """The batch's LWW heads (tombstones kept, key-ordered) as one
+    delta file per bucket, rows in (repo, path) order."""
+    cols = ["repo", "path", "commit", "event_seq", *engine._payload_cols(), "op"]
     return {
-        str(b): [
-            write_parquet_local(_table(cols, delta, rows), os.path.join(out_dir, f"_bucket={b}"))
-        ]
-        for b, rows in by_bucket.items()
+        str(b): [write_parquet_local(rows.select(cols), os.path.join(out_dir, f"_bucket={b}"))]
+        for b, rows in _by_bucket(heads).items()
     }
 
 
-def _write_cow(engine, snap: dict, cols: dict, head: dict, touched: list[int],
-               out_dir: str) -> dict:
+def _sha256_hex(strings) -> pa.Array:
+    """``sha2(coalesce(s, ''), 256)`` of each string. Arrow has no
+    SHA-256 kernel: one hashlib call per value, over the UTF-8 buffer
+    without building Python strings."""
+    arr = pc.fill_null(strings, "").combine_chunks()
+    off = np.frombuffer(arr.buffers()[1], np.int32, len(arr) + 1, arr.offset * 4).tolist()
+    data = memoryview(arr.buffers()[2] or b"")
+    sha = hashlib.sha256
+    return pa.array([sha(data[i:j]).hexdigest() for i, j in zip(off, off[1:])], pa.string())
+
+
+def _write_cow(engine, snap: dict, heads: pa.Table, touched: list[int], out_dir: str) -> dict:
     """``lww_merge`` of the touched buckets' base rows with the batch's
     LWW heads, one file per bucket (none for a bucket the batch
     emptied), ordered like ``LakeTable._write_bucket_data`` writes it:
@@ -477,51 +507,45 @@ def _write_cow(engine, snap: dict, cols: dict, head: dict, touched: list[int],
         + [pa.field("event_seq", pa.int64())]
         + [pa.field(c, pa.string()) for c in (*payload, "content_sha")]
     )
-    sort_keys = [(c, "ascending") for c in (snap.get("sort_cols") or [])]
-    sort_keys += [("repo", "ascending"), ("path", "ascending")]
-    heads: dict[int, dict] = {}
-    for (b, *key), i in head.items():
-        heads.setdefault(b, {})[tuple(key)] = i
+    sort_cols = snap.get("sort_cols") or []
+    heads_of = _by_bucket(heads)
     new_files: dict[str, list[str]] = {}
     for b in touched:
-        keep = heads.get(b, {})
-        parts = []
+        batch = heads_of.get(b, heads.slice(0, 0))
+        parts = [pa.table(
+            [pc.cast(batch.column(c), t.type) for c, t in zip(arrow.names[:-1], arrow)]
+            + [_sha256_hex(batch.column("content")), batch.column("op")],
+            names=[*arrow.names, "op"],
+        )]
         for f in snap["buckets"].get(str(b), []):
             cur = pq.ParquetFile(f).read()
-            cur = pa.table(
+            parts.append(pa.table(
                 [
                     cur.column(c).cast(t.type) if c in cur.column_names
                     else pa.nulls(cur.num_rows, t.type)
                     for c, t in zip(arrow.names, arrow)
-                ],
-                schema=arrow,
-            )
-            rows = []
-            for r, (k, c, s) in enumerate(zip(
-                zip(cur.column("repo").to_pylist(), cur.column("path").to_pylist()),
-                cur.column("commit").to_pylist(), cur.column("event_seq").to_pylist(),
-            )):
-                i = keep.get(k)
-                if i is not None:
-                    w, wi = _wm(c, s), cols["_wm"][i]
-                    # _wm desc, NULLs last: the base row wins only over
-                    # an older or NULL-positioned event
-                    if w is None or (wi is not None and wi >= w):
-                        continue
-                    del keep[k]
-                rows.append(r)
-            parts.append(cur.take(pa.array(rows, pa.int64())))
-        live = [i for i in keep.values() if cols["op"][i] != "D"]
-        parts.append(pa.table(
-            [pa.array([cols[c][i] for i in live], t.type) for c, t in zip(arrow.names[:-1], arrow)]
-            + [pa.array(
-                [hashlib.sha256((cols["content"][i] or "").encode()).hexdigest() for i in live],
-                pa.string(),
-            )],
-            schema=arrow,
-        ))
+                ] + [pa.nulls(cur.num_rows, pa.string())],
+                names=[*arrow.names, "op"],
+            ))
+        # the newest version of each key wins (_wm desc, NULLs last);
+        # the batch rows come first, so a tie goes to the batch event.
+        # Winners come out in (repo, path) order.
         merged = pa.concat_tables(parts)
-        merged = merged.take(pc.sort_indices(merged, sort_keys=sort_keys, null_placement="at_start"))
+        keys = merged.select(["repo", "path", "op"]).append_column(
+            "_wm", _wm(merged.column("commit"), merged.column("event_seq")))
+        order = pc.sort_indices(keys, sort_keys=[
+            ("repo", "ascending"), ("path", "ascending"), ("_wm", "descending"),
+        ], null_placement="at_end")
+        keys = keys.take(order)
+        win = pc.and_(_key_starts(keys, ["repo", "path"]),
+                      pc.invert(pc.fill_null(pc.equal(keys.column("op").combine_chunks(), "D"),
+                                             False)))
+        merged = merged.select(arrow.names).take(order.filter(win))
+        if sort_cols:
+            merged = merged.take(pc.sort_indices(
+                merged, sort_keys=[(c, "ascending") for c in (*sort_cols, "repo", "path")],
+                null_placement="at_start",
+            ))
         new_files[str(b)] = (
             [write_parquet_local(merged, os.path.join(out_dir, f"_bucket={b}"))]
             if merged.num_rows else []

@@ -7,7 +7,9 @@ lookup (~100ms of scheduling for zero data). XXH64 is a public,
 stable spec (Cyan4973/xxHash; Spark's implementation lives in
 ``sql/catalyst/.../XXH64.java`` and is spec-conformant over
 little-endian byte views), so this module re-derives it in pure Python
-and :func:`bucket_of` composes it exactly like ``bucket_expr``:
+and :func:`bucket_of` composes it exactly like ``bucket_expr``
+(:func:`buckets_of` does the same column-wise in numpy for the
+driver-side apply of a whole batch):
 
     salt   = pmod(xxh64(utf8(path), 42), path_salt)
     bucket = pmod(xxh64_long(salt, seed=xxh64(utf8(repo), 42)), num_buckets)
@@ -21,7 +23,10 @@ tests/test_xxh_twin.py over ASCII/unicode/empty/long inputs.
 from __future__ import annotations
 
 import struct
-from functools import lru_cache
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -103,21 +108,93 @@ def bucket_of(repo: str | None, path: str | None, num_buckets: int, path_salt: i
     ``pmod`` (both floor toward the modulus sign). A None part hashes
     as Spark's NULL child does: it is skipped, so the running seed
     passes through unchanged."""
-    salt = (SPARK_SEED if path is None else _str_hash(path)) % path_salt
-    seed = SPARK_SEED if repo is None else _str_hash(repo)
-    return _salted(salt, seed) % num_buckets
+    salt = (SPARK_SEED if path is None else xxh64(path.encode("utf-8"))) % path_salt
+    seed = SPARK_SEED if repo is None else xxh64(repo.encode("utf-8"))
+    return xxh64_long(salt, seed=seed) % num_buckets
 
 
-# a batch's keys repeat repos and paths (and a repo meets at most
-# path_salt salts), so the driver-side apply hashes each distinct part once
-@lru_cache(maxsize=1 << 16)
-def _str_hash(s: str) -> int:
-    return xxh64(s.encode("utf-8"), SPARK_SEED)
+# numpy twins: uint64 arithmetic wraps modulo 2**64 like the masks above
+_U1, _U2, _U3, _U4, _U5 = (np.uint64(p) for p in (_P1, _P2, _P3, _P4, _P5))
 
 
-@lru_cache(maxsize=1 << 16)
-def _salted(salt: int, seed: int) -> int:
-    return xxh64_long(salt, seed=seed)
+def _rotl_np(x, r: int):
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _round_np(acc, lane):
+    return _rotl_np(acc + lane * _U2, 31) * _U1
+
+
+def _fmix_np(h):
+    h = (h ^ (h >> np.uint64(33))) * _U2
+    h = (h ^ (h >> np.uint64(29))) * _U3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xxh64_strings(arr: pa.Array) -> np.ndarray:
+    """:func:`xxh64` (seed 42) of every slot of the Arrow string array
+    ``arr`` as uint64, computed column-wise: the loops run over the
+    32-byte stripes, 8- and 4-byte lanes and tail bytes of the longest
+    value, each step masked to the rows still that long. NULL slots
+    hold junk; callers mask them."""
+    arr = pc.cast(arr, pa.string())
+    n = len(arr)
+    off = np.frombuffer(arr.buffers()[1], np.int32, n + 1, arr.offset * 4).astype(np.int64)
+    data = arr.buffers()[2]
+    # 8 zero bytes past the end: every byte starts a readable 8-byte window
+    raw = np.concatenate([np.frombuffer(data, np.uint8) if data else np.zeros(0, np.uint8),
+                          np.zeros(8, np.uint8)])
+    u64 = np.ndarray((len(raw) - 7,), "<u8", raw, 0, (1,))
+    u32 = np.ndarray((len(raw) - 3,), "<u4", raw, 0, (1,))
+    starts, lens = off[:-1], off[1:] - off[:-1]
+    h = np.full(n, np.uint64(SPARK_SEED + _P5))
+    pos = np.zeros(n, np.int64)
+    big = np.nonzero(lens >= 32)[0]
+    if len(big):
+        stripes = lens[big] // 32
+        acc = [np.full(len(big), np.uint64(a & _M)) for a in
+               (SPARK_SEED + _P1 + _P2, SPARK_SEED + _P2, SPARK_SEED, SPARK_SEED - _P1)]
+        for k in range(int(stripes.max())):
+            live = stripes > k
+            at = starts[big[live]] + 32 * k
+            for j in range(4):
+                acc[j][live] = _round_np(acc[j][live], u64[at + 8 * j])
+        hb = _rotl_np(acc[0], 1) + _rotl_np(acc[1], 7) + _rotl_np(acc[2], 12) + _rotl_np(acc[3], 18)
+        for a in acc:
+            hb = (hb ^ _round_np(np.uint64(0), a)) * _U1 + _U4
+        h[big] = hb
+        pos[big] = stripes * 32
+    h += lens.astype(np.uint64)
+    for _ in range(3):  # < 32 bytes left: at most three 8-byte lanes
+        live = pos + 8 <= lens
+        lane = u64[starts[live] + pos[live]]
+        h[live] = _rotl_np(h[live] ^ _round_np(np.uint64(0), lane), 27) * _U1 + _U4
+        pos[live] += 8
+    live = pos + 4 <= lens
+    lane = u32[starts[live] + pos[live]].astype(np.uint64)
+    h[live] = _rotl_np(h[live] ^ (lane * _U1), 23) * _U2 + _U3
+    pos[live] += 4
+    for _ in range(3):
+        live = pos < lens
+        byte = raw[starts[live] + pos[live]].astype(np.uint64)
+        h[live] = _rotl_np(h[live] ^ (byte * _U5), 11) * _U1
+        pos[live] += 1
+    return _fmix_np(h)
+
+
+def buckets_of(repo: pa.Array, path: pa.Array, num_buckets: int,
+               path_salt: int = 16) -> pa.Array:
+    """:func:`bucket_of` of every (repo, path) slot of two Arrow string
+    arrays, as an int32 array, without a per-row Python step."""
+    def valid(a):
+        return pc.is_valid(a).to_numpy(zero_copy_only=False)
+
+    salt = np.where(valid(path), _xxh64_strings(path).view(np.int64), SPARK_SEED) % path_salt
+    seed = np.where(valid(repo), _xxh64_strings(repo), np.uint64(SPARK_SEED))
+    # xxh64_long(salt, seed): one 8-byte lane
+    h = seed + _U5 + np.uint64(8)
+    h = _rotl_np(h ^ _round_np(np.uint64(0), salt.astype(np.uint64)), 27) * _U1 + _U4
+    return pa.array(_fmix_np(h).view(np.int64) % num_buckets, pa.int32())
 
 
 def buckets_for_repo(repo: str, num_buckets: int, path_salt: int = 16) -> list[int]:

@@ -13,6 +13,7 @@ Design notes (scale):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -98,3 +99,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Name the Spark jobs the calling thread starts inside the block
+    (``setJobDescription``), then restore the caller's description; the
+    caller's job group is left alone."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

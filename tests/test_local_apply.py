@@ -79,17 +79,26 @@ def twins(spark, tmp, registry=default_registry, num_buckets=4, mode="mor", **cr
     return out
 
 
-def observe(engine, metrics) -> dict:
+def observe(engine, metrics, raw_files=False) -> dict:
+    """With ``raw_files`` the rows come from the live files read with
+    pyarrow instead of ``read()``/``changes()`` (a string ``event_seq``
+    does not fit the table's long read schema)."""
     t = engine.table
-    df = t.read()
-    # copy-on-write commits keep no row-level change log
-    ch = t.changes(t.snapshots()[0]) if engine.write_mode == "mor" else None
+    if raw_files:
+        read = sorted(json.dumps(r, sort_keys=True) for f in t.files()
+                      for r in pq.ParquetFile(f["path"]).read().to_pylist())
+        ch = None
+    else:
+        df = t.read()
+        read = sorted(
+            map(tuple, df.select(*[c for c in df.columns if c != "_bucket"]).collect())
+        ) if df is not None else []
+        # copy-on-write commits keep no row-level change log
+        ch = t.changes(t.snapshots()[0]) if engine.write_mode == "mor" else None
     dl = engine.dead_letters(distinct=False)
     lin = engine.lineage()
     return {
-        "read": sorted(
-            map(tuple, df.select(*[c for c in df.columns if c != "_bucket"]).collect())
-        ) if df is not None else [],
+        "read": read,
         "changes": sorted(map(tuple, ch.collect())) if ch is not None else [],
         "watermarks": t.watermarks(),
         "snapshot": t.current_snapshot_id(),
@@ -106,7 +115,7 @@ def observe(engine, metrics) -> dict:
 
 
 def assert_parity(spark, tmp, batches, counted, registry=default_registry, ddl=DDL,
-                  num_buckets=4, mode="mor", **create):
+                  num_buckets=4, mode="mor", raw_files=False, **create):
     """Applies ``batches`` in order through both paths; a callable step
     runs on each engine between batches instead."""
     frames = [
@@ -121,7 +130,7 @@ def assert_parity(spark, tmp, batches, counted, registry=default_registry, ddl=D
         metrics = [f(e) if callable(f) else e.apply_batch(f) for f in frames]
         metrics = [m for m, f in zip(metrics, frames) if not callable(f)]
         assert len(counted) - before == (len(applied) if path == "local" else 0)
-        got[path] = observe(e, metrics)
+        got[path] = observe(e, metrics, raw_files)
     for k in got["spark"]:
         assert got["local"][k] == got["spark"][k], k
     return got["local"]
@@ -498,3 +507,137 @@ def test_fan_out_atomic_runs_at_most_three_jobs(spark, tmp_path, counted):
     assert rep["txn"] == "committed" and rep["feed_to"] is not None
     assert len(counted) == 2
     assert jobs <= 1 + len(routes), jobs
+
+
+# --- paths, watermark edge cases, file layout, job names -------------------
+
+
+def test_dirs_with_space_and_percent(spark, tmp_path, counted):
+    """Spark percent-encodes ``inputFiles()`` URIs; the footer count
+    must still read them, or the batch silently runs on Spark."""
+    tmp = os.path.join(str(tmp_path), "sp ace%41")
+    rows = [ev(1, i, f"r{i % 3}", f"p {i}%20.py") for i in range(6)]
+    got = assert_parity(spark, tmp, [rows], counted)
+    assert got["metrics"][0]["applied"] == 6
+
+
+def test_string_event_seq_watermark_edges(spark, tmp_path, counted):
+    """MoR string ``event_seq``: lpad pads short values and truncates
+    long ones to 20 characters, NULL stays NULL; the second batch
+    survives or not against the stored watermarks. The delta files are
+    compared as written (the table reads ``event_seq`` as a long)."""
+    ddl = DDL.replace("event_seq long", "event_seq string")
+    first = [
+        ev(1, "7", "r1", "a.py"),
+        ev(1, "12345678901234567890", "r2", "b.py"),         # exactly 20
+        ev(1, "1234567890123456789012345", "r3", "c.py"),    # truncated
+        ev(1, "abc", "r4", "d.py"),
+        ev(1, "", "r5", "e.py"),
+        ev(1, "é" * 22, "r6", "f.py"),
+        ev(1, None, "r7", "g.py"),
+    ]
+    second = [
+        ev(1, "8", "r1", "a.py", content="newer"),
+        ev(1, "12345678901234567889", "r2", "b.py", content="older"),
+        ev(1, "12345678901234567890999", "r3", "c.py", content="same 20"),
+        ev(1, "abd", "r4", "d.py", content="newer"),
+        ev(1, "0", "r5", "e.py", content="pads equal"),
+        ev(1, "é" * 21, "r6", "f.py", content="same 20"),
+        ev(2, None, "r7", "g.py", content="null seq"),
+    ]
+    got = assert_parity(spark, str(tmp_path), [first, second], counted, ddl=ddl,
+                        num_buckets=8, raw_files=True)
+    assert got["metrics"][1]["skipped_replays"] > 0 and got["read"]
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_integral_event_seq_extremes(spark, tmp_path, mode, counted):
+    lo, hi = -(2**63), 2**63 - 1
+    first = [
+        ev(1, -5, "r1", "a.py"), ev(1, lo, "r2", "b.py"), ev(1, hi, "r3", "c.py"),
+        ev(1, 0, "r4", "d.py"), ev(1, -1, "r5", "e.py"),
+    ]
+    second = [
+        ev(1, -4, "r1", "a.py", content="x"), ev(1, lo + 1, "r2", "b.py", content="x"),
+        ev(1, hi, "r3", "c.py", content="x"), ev(2, lo, "r4", "d.py", content="x"),
+        ev(1, -10, "r5", "e.py", content="x"), ev(1, hi - 1, "r6", "f.py", content="x"),
+    ]
+    assert_parity(spark, str(tmp_path), [first, second], counted, num_buckets=8, mode=mode)
+
+
+def _keys(path: str) -> list[tuple]:
+    t = pq.read_table(path)
+    return list(zip(*(t.column(c).to_pylist() for c in ("lang", "repo", "path"))))
+
+
+def test_driver_written_file_layout(spark, tmp_path, counted):
+    """``write_amp`` depends on the driver's file layout: one file per
+    touched bucket, merge-on-read rows in (repo, path) order,
+    copy-on-write rows in ``sort_cols`` then (repo, path) order, and no
+    file for a bucket the batch emptied."""
+    from filters_spark.lake.xxh import bucket_of
+
+    tmp = str(tmp_path)
+    keys = [(f"r{i % 5}", f"{(37 * i) % 50:02d}.py") for i in range(50)]
+    rows = [ev(1, i, r, p, lang=["py", "go", "rs"][i % 3]) for i, (r, p) in enumerate(keys)]
+    rows += [ev(1, 60 + i, r, p, lang="go") for i, (r, p) in enumerate(keys[:10])]  # dups
+
+    mor = LakeTable.create(spark, os.path.join(tmp, "mor"), key_cols=["repo", "path"],
+                           num_buckets=4)
+    CDCEngine(spark, mor, default_registry(), write_mode="mor").apply_batch(
+        parquet(spark, tmp, "m", rows))
+    deltas = mor.current()["deltas"]
+    assert sorted(int(b) for b, fl in deltas.items() if fl) == sorted(
+        {bucket_of(r, p, 4, 16) for r, p in keys})
+    for b, fl in deltas.items():
+        assert len(fl) <= 1
+        got = [k[1:] for f in fl for k in _keys(f)]
+        assert got == sorted(got) and len(got) == len(set(got)), b
+
+    cow = LakeTable.create(spark, os.path.join(tmp, "cow"), key_cols=["repo", "path"],
+                           num_buckets=4, sort_cols=["lang"])
+    eng = CDCEngine(spark, cow, default_registry())
+    eng.apply_batch(parquet(spark, tmp, "c1", rows))
+    before = cow.current()["buckets"]
+    gone = bucket_of(*keys[0], 4, 16)
+    deletes = [ev(2, i, r, p, op="D") for i, (r, p) in enumerate(keys)
+               if bucket_of(r, p, 4, 16) == gone]
+    other = next(k for k in keys if bucket_of(*k, 4, 16) != gone)
+    eng.apply_batch(parquet(spark, tmp, "c2", deletes + [ev(2, 99, *other, lang="py")]))
+    after = cow.current()["buckets"]
+    assert after.get(str(gone), []) == []
+    touched = str(bucket_of(*other, 4, 16))
+    assert len(after[touched]) == 1 and after[touched] != before[touched]
+    for b, fl in after.items():
+        assert len(fl) <= 1
+        got = [k for f in fl for k in _keys(f)]
+        assert got == sorted(got, key=lambda k: (k[0] is not None, k)), b
+    assert len(counted) == 3
+
+
+def test_caller_job_group_and_description_survive(spark, tmp_path, counted):
+    """The engine names its jobs but restores the caller's job group
+    and description (ingestbench attributes jobs by job group)."""
+    from tests.test_cdc_engine import events_df, make_engine
+    from tests.test_fanout import SEQ, envelopes
+
+    sc = spark.sparkContext
+    tmp = str(tmp_path)
+    table = LakeTable.create(spark, os.path.join(tmp, "t"), key_cols=["repo", "path"])
+    eng = CDCEngine(spark, table, default_registry(), write_mode="mor")
+    mixed = envelopes(events_df(spark, n_events=40, seed=3), table="repos").unionAll(
+        envelopes(events_df(spark, n_events=30, seed=4), table="users"))
+    routes = [TableRoute(r, make_engine(spark, os.path.join(tmp, r))) for r in ("repos", "users")]
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        eng.apply_batch(parquet(spark, tmp, "a", [ev(1, 0, "r1", "a.py")]))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        rep = fan_out_atomic(mixed, routes, os.path.join(tmp, "txn"), seq_expr=SEQ)
+        assert rep["txn"] == "committed"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(counted) == 3

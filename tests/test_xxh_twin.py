@@ -7,11 +7,14 @@ seed 42, UTF-8 string views / little-endian long views) EXACTLY, so a
 divergence can never silently read the wrong bucket.
 """
 
+import random
+
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
 from filters_spark.lake.table import LakeTable, bucket_expr
-from filters_spark.lake.xxh import SPARK_SEED, bucket_of, xxh64, xxh64_long
+from filters_spark.lake.xxh import SPARK_SEED, bucket_of, buckets_of, xxh64, xxh64_long
 
 # every XXH64 code path: empty, <4 tail bytes, 4-byte lane, 8-byte
 # lanes, the 32-byte block loop (31/32/33/100/1000), multi-byte UTF-8,
@@ -217,3 +220,25 @@ def test_bucket_of_null_parts_match_bucket_expr(spark):
     )
     for r in df.collect():
         assert r["b"] == bucket_of(r["repo"], r["path"], 7, 3), (r["repo"], r["path"])
+
+
+def test_buckets_of_matches_bucket_expr(spark):
+    """The column-wise twin (the driver-side apply's bucketing) over
+    every length up to three 32-byte blocks, multi-byte UTF-8, NULL
+    parts, and an Arrow array that is a slice of a larger one."""
+    rnd = random.Random(7)
+    alpha = "ab/._-09é日🎉" + chr(0)
+    words = [None, *STRINGS] + [
+        "".join(rnd.choice(alpha) for _ in range(n)) for n in range(100)
+    ]
+    keys = [(rnd.choice(words), rnd.choice(words)) for _ in range(600)]
+    df = spark.createDataFrame(keys, "repo string, path string").select(
+        "repo", "path", bucket_expr(F.col("repo"), F.col("path"), 7, 3).alias("b"),
+    )
+    rows = df.collect()
+    repo = pa.array([None] * 5 + [r["repo"] for r in rows], pa.string()).slice(5)
+    path = pa.array([r["path"] for r in rows], pa.string())
+    assert buckets_of(repo, path, 7, 3).to_pylist() == [r["b"] for r in rows]
+    assert buckets_of(repo, path, 32, 16).to_pylist() == [
+        bucket_of(r["repo"], r["path"], 32, 16) for r in rows
+    ]
