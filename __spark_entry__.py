@@ -1,13 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query/oracle pairs for the operator families and lake features.
 
-``entry``: flagship CDC merge-apply pipeline on sf0.001.
-``queries``/``oracle_sql``: one entry per implemented operator family
+``queries()``/``oracle_sql()``: one entry per operator family
 (SURVEY.md §2 + engine layer + corpus-curation operators), each with a
-DuckDB-equivalent oracle where SQL-expressible.
+DuckDB-equivalent oracle where SQL-expressible; tests/test_oracle_parity.py
+cross-checks every pair on the testdata tables.
 
 Column-name discipline: every computed column is aliased identically in
-the Spark query and the oracle SQL (the driver hash-compares by sorted
-column name).
+the Spark query and the oracle SQL (the comparison sorts by column name).
 """
 
 from __future__ import annotations
@@ -20,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from filters_spark.operators.hashing import mix31_sql, mixp31_sql, sha64_sql, sha_planes
-from filters_spark.operators.zorder import zorder_sql
+from filters_spark.lake.zorder import zorder_sql
 from filters_spark.operators.sketches import hll_numerator
 
 
@@ -30,10 +29,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _tmpdir(prefix: str) -> str:
     """mkdtemp + atexit rmtree. Lake-fixture queries return LAZY
-    DataFrames the driver collects after the query function exits, so
+    DataFrames the caller collects after the query function exits, so
     the backing table must outlive the call — but without cleanup every
-    driver pass leaks a dozen multi-MB lake copies into /tmp (bench.py
-    uses try/finally because IT owns the collect; here the process
+    pass leaks a dozen multi-MB lake copies into /tmp (the process
     boundary is the only safe reclaim point)."""
     import atexit
     import shutil
@@ -41,36 +39,6 @@ def _tmpdir(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
-
-
-# ---------------------------------------------------------------------------
-# flagship: full CDC replay into a lake table
-# ---------------------------------------------------------------------------
-
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: synthesize a deterministic change stream, replay it
-    through validate -> watermark -> LWW dedupe -> bucketed merge ->
-    snapshot commit, and return the final lake table state."""
-    from filters_spark.engine.cdc import CDCEngine
-    from filters_spark.engine.defaults import default_registry
-    from filters_spark.lake.table import LakeTable
-    from filters_spark.sources.datagen import gen_events
-
-    root = _tmpdir("filters_spark_entry_")
-    table = LakeTable.create(
-        spark, os.path.join(root, "lake"), key_cols=["repo", "path"], num_buckets=8
-    )
-    engine = CDCEngine(spark, table, default_registry())
-    events_path = os.path.join(root, "events.parquet")
-    gen_events(
-        spark, n_events=5000, n_repos=20, n_paths=300,
-        hot_frac=0.2, dirty_frac=0.08, seed=42,
-    ).write.parquet(events_path)
-    engine.replay(spark.read.parquet(events_path), num_batches=2)
-    return table.read().select(
-        "repo", "path", "commit", "event_seq", "lang", "content", "content_sha"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -482,7 +450,7 @@ def _lineage_bucket_cases() -> str:
     """,
 )
 def q_cdc_lineage_buckets(spark, sf):
-    """BUCKET-level lineage, value-checked (VERDICT r4 item 3): the
+    """BUCKET-level lineage, value-checked: the
     same engine run as cdc_lineage_metrics but the per-(snapshot,
     bucket) lineage parquet rows themselves are the result — bucket
     id, rows applied into that bucket, and the bucket's high
@@ -5370,7 +5338,7 @@ def q_graph_pagerank(spark, sf):
 )
 def q_sort_zorder_quantized(spark, sf):
     """The full 2-D clustering-key pipeline: rank-quantize a skewed
-    unbounded column into [0, 256) (operators/zorder.py:quantize_rank
+    unbounded column into [0, 256) (lake/zorder.py:quantize_rank
     — equal-mass buckets via percent_rank, deterministic under ties),
     then Morton-interleave it with a bounded dimension. percent_rank
     is exact double arithmetic over integer ranks, so quantiles and
@@ -5382,7 +5350,7 @@ def q_sort_zorder_quantized(spark, sf):
     global quantile while the sort stays per-partition; bare
     group_cols=() (one global sort task) is the documented footgun and
     now warns (quantize_rank docstring)."""
-    from filters_spark.operators.zorder import quantize_rank, zorder_key
+    from filters_spark.lake.zorder import quantize_rank, zorder_key
 
     o = _t(spark, sf, "orders").withColumn(
         "_part", F.pmod(F.col("o_orderkey"), F.lit(16))
@@ -5404,14 +5372,14 @@ def q_sort_zorder_quantized(spark, sf):
     """,
 )
 def q_sort_zorder_key(spark, sf):
-    """Z-order (Morton) clustering key (operators/zorder.py): the
+    """Z-order (Morton) clustering key (lake/zorder.py): the
     bit-interleave of two bounded dimensions, computed as one map-only
     literal-shift expression — sorting data files by it makes
     file-level min/max skipping selective on BOTH columns at once
     (tests/test_zorder.py measures the pruning win on parquet footer
     stats). Exact integer algebra, recomputed bit-identically by the
     DuckDB twin."""
-    from filters_spark.operators.zorder import zorder_key
+    from filters_spark.lake.zorder import zorder_key
 
     o = _t(spark, sf, "orders")
     zk = zorder_key(
@@ -5427,7 +5395,7 @@ _BLOOM_M, _BLOOM_K = 4096, 3
 
 def _sql_bit_mask(bit_expr: str) -> str:
     """DuckDB CASE ladder for ``1 << (bit & 63)`` as signed BIGINT —
-    mirrors sketches._bit_mask (1<<63 spelled as the negative long)."""
+    mirrors lake/xxh._bit_mask (1<<63 spelled as the negative long)."""
     arms = " ".join(
         f"WHEN {i} THEN CAST({1 << i if i < 63 else '-9223372036854775807 - 1'} AS BIGINT)"
         for i in range(64)
@@ -5774,91 +5742,9 @@ def q_lake_dml_mor_update(spark, sf):
 # ---------------------------------------------------------------------------
 
 
-_DRIVER_ROTATION = [
-    # round-6 rotation: the 18 queries no driver round has ever
-    # validated (r5 verdict, next-round item 1) at positions 1-18 —
-    # CORRECTNESS_r06 green rows complete the 142/142 driver union;
-    # the rest keep their r5 order behind them. Pure reorder: each
-    # query's oracle SQL text is unchanged.
-    'lake_sync_incremental',
-    'stream_cdc_replay',
-    'stream_stateful_dedupe',
-    'cdc_retry_dead_letters',
-    'lake_point_lookup',
-    'lake_rescale_read',
-    'lake_clone_deep_independent',
-    'lake_compact_read',
-    'sketch_hll_distinct',
-    'sketch_cms_counts',
-    'sample_weighted_priority',
-    'sample_mixture',
-    'graph_pagerank',
-    'sort_zorder_key',
-    'heavy_hitters_users',
-    'kmeans_embedding_clusters',
-    'lake_dml_delete',
-    'lake_dml_update',
-    'cdc_lineage_buckets',
-    'lake_dml_mor_delete_dv',
-    'events_transitions',
-    'events_interval_join',
-    'sample_stratified',
-    'sample_balance_strata',
-    'search_inverted_postings',
-    'agg_rollup_pricing',
-    'agg_cube_order_stats',
-    'agg_pivot_status',
-    'join_anti_idle_customers',
-    'stream_windowed_stats',
-    'feature_rolling_counts',
-    'stream_session_stats',
-    'sample_chunk_documents',
-    'lake_changes_feed',
-    'lake_mor_read',
-    'lake_skipping_read',
-    'cdc_snapshot_export',
-    'lake_bloom_skipping_read',
-    'lake_rollback_read',
-    'lake_rewrite_read',
-    'lake_tag_read',
-    'cdc_scd2_history',
-    'lake_rewrite_zorder_read',
-    'lake_merge_by_source',
-    'lake_wap_audit_diff',
-    'lake_snapshot_diff',
-    'lake_mview_by_lang',
-    'lake_clone_fork',
-    'lake_publish_roundtrip',
-    'join_local_supplier_volume',
-    'sketch_kmv_distinct',
-    'profile_events',
-    'sort_zorder_quantized',
-    'sketch_bloom_filter',
-    'lake_dml_delete_pruned',
-    'lake_dml_mor_update',
-    'events_scd2_asof',
-    'search_tfidf_terms',
-    'agg_grouping_sets',
-    'agg_value_percentiles',
-    'text_pii_redact',
-    'lake_time_travel',
-    'lake_changes_pre_images',
-    'lake_expire_retention',
-    'lake_repo_scoped_read',
-    'lake_branch_fastforward',
-    'lake_merge_into',
-    'lake_wap_publish',
-]
-
-
-def _rotated(d: dict) -> dict:
-    head = {n: d[n] for n in _DRIVER_ROTATION if n in d}
-    return {**head, **{n: v for n, v in d.items() if n not in head}}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _rotated(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _rotated(_ORACLES)
+    return dict(_ORACLES)

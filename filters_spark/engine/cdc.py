@@ -50,10 +50,20 @@ from pyspark.sql.types import BooleanType, IntegerType, StructType
 
 from filters_spark.engine.evolution import SpecRegistry
 from filters_spark.engine.local import (
-    PASSTHROUGH, apply_local, local_batch_plan, parquet_footers,
+    _INTEGRAL, PASSTHROUGH, apply_local, local_batch_plan, parquet_footers,
 )
 from filters_spark.lake.fileio import write_parquet_local
 from filters_spark.lake.table import LakeTable, WATERMARK_ZERO, bucket_expr, lww_merge, watermark_str
+
+
+def _check_event_seq(events: DataFrame) -> None:
+    """The engine's one ``event_seq`` input contract, checked before
+    anything is staged: an integral type. Every source emits a long and
+    the table reads ``event_seq`` as one, so a string sequence would
+    commit files the table can no longer read."""
+    seq = dict(events.dtypes).get("event_seq")
+    if seq is not None and seq not in _INTEGRAL:
+        raise ValueError(f"event_seq must be an integral type, got {seq}")
 
 
 @dataclass(frozen=True)
@@ -695,7 +705,10 @@ class CDCEngine:
 
         A batch of at most ``LOCAL_MAX_ROWS`` parquet rows (and no
         ``audit_fn``) applies on the driver instead of through Spark
-        staging — same results, one Spark job (engine/local.py)."""
+        staging — same results, one Spark job (engine/local.py).
+
+        Raises ``ValueError`` for a non-integral ``event_seq``."""
+        _check_event_seq(events)
         t0 = time.time()
         snap = self.table.current()
         if audit_fn is None:
@@ -1000,6 +1013,7 @@ class CDCEngine:
         stager's in-flight scratch. A batch of at most
         ``LOCAL_MAX_ROWS`` parquet rows stages on the driver
         (engine/local.py) with the same handle and scratch layout."""
+        _check_event_seq(events)
         t0 = time.time()
         snap = self.table.current()
         plan = local_batch_plan(self, events, snap)
@@ -1708,6 +1722,7 @@ class CDCEngine:
         single time. ``stage_batches`` bounds scratch usage at very
         large replays: the stream is staged in groups of that many
         batches (default: all at once)."""
+        _check_event_seq(events)
         if num_batches <= 1:
             return [self.apply_batch(events)]
         lo, hi = self._commit_bounds(events)

@@ -172,10 +172,10 @@ def local_batch_plan(engine, events: DataFrame, snap: dict) -> tuple | None:
     Driver-eligible: an engine without ref checks or CHECK constraints,
     scheme-less table and dead-letter dirs, parquet input of at most
     ``LOCAL_MAX_ROWS`` rows, a string ``commit``, integral
-    ``schema_version``, integral or (merge-on-read only) string
-    ``event_seq``, source columns whose string cast Arrow spells like
-    Spark, and string-typed validated fields (the kernels' output
-    type). Copy-on-write also needs :func:`_cow_fits`."""
+    ``schema_version`` (``event_seq`` is integral for every batch: the
+    engine checks it before planning), source columns whose string cast
+    Arrow spells like Spark, and string-typed validated fields (the
+    kernels' output type). Copy-on-write also needs :func:`_cow_fits`."""
     cow = engine.write_mode == "cow"
     if (
         engine.ref_checks
@@ -189,7 +189,6 @@ def local_batch_plan(engine, events: DataFrame, snap: dict) -> tuple | None:
         not set(PASSTHROUGH) <= types.keys()
         or types["commit"] != "string"
         or types["schema_version"] not in _INTEGRAL
-        or types["event_seq"] not in (_INTEGRAL if cow else (*_INTEGRAL, "string"))
         or any(types[c] not in _CASTABLE for c in _sources(engine, list(types)))
     ):
         return None

@@ -350,7 +350,7 @@ def _dml_mor(
     where: tuple | None,
     upd: dict[str, str] | None,
 ) -> dict:
-    from filters_spark.operators.materialize import materialize
+    from filters_spark.lake.materialize import materialize
 
     cond = _cond_col(predicate, where)
     report = {"snapshot": None, "rows_changed": 0}
@@ -418,7 +418,7 @@ def _dml_dv(
     buckets stay prunable), prior vectors applied so re-sweeps never
     re-mark a row, matched rows reduced to ``(_relfile, _pos)``.
     O(matched) write, zero bucket rewrites."""
-    from filters_spark.operators.materialize import materialize
+    from filters_spark.lake.materialize import materialize
 
     if any(fl for fl in snap.get("deltas", {}).values()):
         raise ValueError(

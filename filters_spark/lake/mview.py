@@ -163,7 +163,7 @@ class AggView:
             # collects + two broadcast semi-joins) — without a barrier
             # each would re-run the changes() union scan and the
             # distinct shuffle (same rationale as sync.py's barrier)
-            from filters_spark.operators.materialize import materialize
+            from filters_spark.lake.materialize import materialize
 
             keys = materialize(ch.select(*_KEY_COLS).distinct())
 

@@ -35,7 +35,7 @@ import os
 import pyspark.sql.functions as F
 
 from filters_spark.lake.table import LakeTable, bucket_expr, lww_merge, watermark_str
-from filters_spark.operators.materialize import materialize
+from filters_spark.lake.materialize import materialize
 
 _STATE_FILE = "sync-state.json"
 

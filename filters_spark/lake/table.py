@@ -543,10 +543,9 @@ class LakeTable:
         prunable (the [min,max] analog can't say that). Files the
         reader can't reach degrade to "no filter = never pruned", the
         same contract as :meth:`_collect_file_stats`. Hash scheme is
-        operators/sketches.bloom_build's (xxhash64 -> mixp31 -> mod m):
-        the per-file filters here stay word-compatible with the
-        operator-tier filters, and the prime-modulus mixer is what
-        keeps the k probes independent under the power-of-two m."""
+        lake/xxh.py's (xxhash64 -> mixp31 -> mod m): the prime-modulus
+        mixer is what keeps the k probes independent under the
+        power-of-two m."""
         m, k = bloom["m"], bloom["k"]
         all_todo = [
             p for p in paths
@@ -584,8 +583,7 @@ class LakeTable:
         from py4j.protocol import Py4JError
         from pyspark.errors import PySparkException
 
-        from filters_spark.operators.hashing import mixp31
-        from filters_spark.operators.sketches import _bit_mask
+        from filters_spark.lake.xxh import _bit_mask, mixp31
 
         # identity mapping from input_file_name's URI spelling back to
         # the committed path: the /data/-relative suffix for normal
@@ -758,8 +756,7 @@ class LakeTable:
         Python twin of _collect_file_blooms' Spark-side bit math
         (xxh64 twin == Spark xxhash64 pinned in tests/test_xxh_twin.py;
         Python's ``%`` on the SIGNED twin value == Spark's pmod)."""
-        from filters_spark.lake.xxh import xxh64
-        from filters_spark.operators.hashing import _MIX_MULT, _P31
+        from filters_spark.lake.xxh import _MIX_MULT, _P31, xxh64
 
         hp = xxh64(str(value).encode("utf-8")) % _P31
         out = []
@@ -2056,7 +2053,7 @@ class LakeTable:
         their bits, and splits each bucket into ~``ceil(bytes/target)``
         files along the z-curve — every file covers a bounded RECTANGLE
         in (colA, colB) space, so ``read(where=...)`` min/max skipping
-        prunes on EITHER column (operators/zorder.py holds the measured
+        prunes on EITHER column (lake/zorder.py holds the measured
         comparison). Record both columns in ``stats_cols`` at table
         creation or there are no stats to prune with.
 
@@ -2067,7 +2064,7 @@ class LakeTable:
         point, so this does not run from :meth:`maintain`; invoke it
         explicitly when the query pattern warrants it. Returns the new
         snapshot, or None when nothing qualifies."""
-        from filters_spark.operators.zorder import quantize_rank, zorder_key
+        from filters_spark.lake.zorder import quantize_rank, zorder_key
 
         snap = self.current()
         pending = {b for b, fl in snap.get("deltas", {}).items() if fl}
@@ -2446,7 +2443,7 @@ class LakeTable:
                 "rollback_of target: its revert emission is not derivable — "
                 "changefeeds cannot cross it; re-seed consumers"
             )
-        from filters_spark.operators.materialize import materialize
+        from filters_spark.lake.materialize import materialize
 
         target_raw = self._raw_snapshot_if_retained(target)
         if target_raw is None:

@@ -18,6 +18,12 @@ Multi-argument ``F.xxhash64(a, b)`` chains: the hash of ``a`` becomes
 the SEED for ``b``; long arguments hash their 8 little-endian bytes.
 Bit-equality with the Spark expression is pinned by
 tests/test_xxh_twin.py over ASCII/unicode/empty/long inputs.
+
+The per-file bloom filters' probe math lives here too, beside the hash
+it consumes: probe ``k`` of a value sets bit
+``mixp31(xxhash64(value), k) mod m`` (:func:`mixp31`, :func:`_bit_mask`
+on the Spark side; ``LakeTable._bloom_word_masks`` is the Python twin,
+pinned bit-equal by tests/test_bloom_index.py).
 """
 
 from __future__ import annotations
@@ -27,6 +33,8 @@ import struct
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyspark.sql.functions as F
+from pyspark.sql import Column
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -210,3 +218,33 @@ def buckets_for_repo(repo: str, num_buckets: int, path_salt: int = 16) -> list[i
     return sorted({
         xxh64_long(s, seed=seed) % num_buckets for s in range(path_salt)
     })
+
+
+_MIX_MULT = 1099087573  # odd LCG constant; 2*salt+_MIX_MULT stays odd
+_P31 = 2_147_483_647  # Mersenne prime 2^31 - 1
+
+
+def mixp31(h: Column, salt: Column) -> Column:
+    """Salted permutation of a base 64-bit hash modulo the PRIME
+    2^31-1: ``((h mod P) + 1) * (2*salt + ODD) mod P``. The bloom probe
+    reduces the result ``mod m`` for a power-of-two ``m``; a 2^31
+    modulus would share all low bits with ``m``, so two values that
+    collide on one probe would collide on EVERY probe. The prime
+    modulus breaks that congruence (the classic ``(a*x mod p) mod w``
+    universal-hash construction). The product stays <= 2^62, so the
+    arithmetic is exact in BIGINT."""
+    hp = F.pmod(h, F.lit(_P31))
+    return F.pmod((hp + 1) * (salt.cast("long") * 2 + F.lit(_MIX_MULT)), F.lit(_P31))
+
+
+def _bit_mask(bit: Column) -> Column:
+    """``1 << (bit & 63)`` as an unrolled CASE of literal longs —
+    shiftleft takes only literal shift amounts, and ``1 << 63`` must be
+    spelled as the negative long (F.lit of 2^63 overflows)."""
+    in_word = bit.bitwiseAND(F.lit(63))
+    expr = F.lit(0).cast("long")
+    for i in range(64):
+        expr = F.when(
+            in_word == i, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
+        ).otherwise(expr)
+    return expr

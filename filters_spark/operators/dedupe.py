@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from filters_spark.operators.materialize import materialize
+from filters_spark.lake.materialize import materialize
 
 
 def exact_dupes(df: DataFrame, cols: list[str], id_col: str,

@@ -25,7 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from filters_spark.operators.materialize import materialize
+from filters_spark.lake.materialize import materialize
 
 
 def pagerank(

@@ -24,6 +24,8 @@ import hashlib
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+from filters_spark.lake.xxh import _MIX_MULT, _P31
+
 _TWO63 = "9223372036854775808"
 _TWO64 = "18446744073709551616"
 
@@ -50,23 +52,6 @@ def sha64_sql(expr: str) -> str:
     )
 
 
-def salted(salt_col: Column, s: Column) -> Column:
-    """Canonical salted-input convention shared by both engines:
-    ``concat(salt, ':', value)``."""
-    return F.concat_ws(":", salt_col.cast("string"), s.cast("string"))
-
-
-def salted_sql(salt_expr: str, expr: str) -> str:
-    return f"concat(CAST({salt_expr} AS VARCHAR), ':', CAST({expr} AS VARCHAR))"
-
-
-def sha64_salted(s: Column, salt_col: Column) -> Column:
-    """``hash_fn`` signature used by minhash/fingerprint injection:
-    (value, salt) -> signed 64-bit Column."""
-    return sha64(salted(salt_col, s))
-
-
-_MIX_MULT = 1099087573  # odd LCG constant; 2*salt+_MIX_MULT stays odd
 _MOD31 = 2_147_483_648  # 2^31
 
 
@@ -91,26 +76,8 @@ def mix31_sql(h_expr: str, salt_expr: str) -> str:
     )
 
 
-_P31 = 2_147_483_647  # Mersenne prime 2^31 - 1
-
-
-def mixp31(h: Column, salt: Column) -> Column:
-    """Like :func:`mix31` but modulo the PRIME 2^31-1:
-    ``((h mod P) + 1) * (2*salt + ODD) mod P``. Use this (not mix31)
-    whenever the mixed value is reduced ``mod w`` for a power-of-two
-    ``w`` afterwards — e.g. count-min sketch columns. mix31's modulus
-    2^31 shares all low bits with ``w``, so ``mix31(h, r) mod w``
-    depends only on ``h mod w`` and two items that collide in one row
-    collide in EVERY row (depth buys nothing). The prime modulus
-    breaks that congruence, restoring per-row independence (the
-    classic ``(a*x mod p) mod w`` universal-hash construction).
-    Same overflow bound as mix31 (product <= 2^62)."""
-    hp = F.pmod(h, F.lit(_P31))
-    return F.pmod((hp + 1) * (salt.cast("long") * 2 + F.lit(_MIX_MULT)), F.lit(_P31))
-
-
 def mixp31_sql(h_expr: str, salt_expr: str) -> str:
-    """DuckDB mirror of :func:`mixp31`."""
+    """DuckDB mirror of :func:`~filters_spark.lake.xxh.mixp31`."""
     return (
         f"((((({h_expr}) % {_P31} + {_P31}) % {_P31}) + 1) "
         f"* (2 * ({salt_expr}) + {_MIX_MULT})) % {_P31}"

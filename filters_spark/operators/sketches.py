@@ -41,6 +41,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from filters_spark.lake.xxh import _bit_mask, mixp31
 from filters_spark.operators.hashing import sha64
 
 _TWO64F = float(1 << 64)
@@ -255,7 +256,7 @@ def hll_distinct(
 # mixp31 (prime modulus), NOT mix31: with mix31's 2^31 modulus a
 # power-of-two width reads only the base hash's low bits, so row
 # collisions are perfectly correlated and depth buys nothing (see
-# hashing.mixp31).
+# lake/xxh.mixp31).
 
 
 def cms_build(
@@ -276,8 +277,6 @@ def cms_build(
         raise ValueError("depth and width must be >= 1")
     group_cols = group_cols or []
     hash_fn = hash_fn or F.xxhash64
-    from filters_spark.operators.hashing import mixp31
-
     base = hash_fn(F.col(value_col).cast("string"))
     w = (
         F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
@@ -324,8 +323,6 @@ def cms_estimate(
     candidates never shuffles the candidates."""
     group_cols = group_cols or []
     hash_fn = hash_fn or F.xxhash64
-    from filters_spark.operators.hashing import mixp31
-
     base = hash_fn(F.col(value_col).cast("string"))
     # _rid keeps duplicate item rows distinct through the probe
     # regroup (grouping on the struct alone would collapse them);
@@ -479,8 +476,6 @@ def bloom_build(
     if k < 1:
         raise ValueError("k must be >= 1")
     hash_fn = hash_fn or F.xxhash64
-    from filters_spark.operators.hashing import mixp31
-
     base = hash_fn(F.col(value_col).cast("string"))
     # NULLs are not members: hashing NULL would set k phantom bits and
     # make bloom_might_contain(NULL) a guaranteed false positive
@@ -496,19 +491,6 @@ def bloom_build(
         .groupBy("word_idx")
         .agg(F.bit_or("_w").alias("bits"))
     )
-
-
-def _bit_mask(bit: Column) -> Column:
-    """``1 << (bit & 63)`` as an unrolled CASE of literal longs —
-    shiftleft takes only literal shift amounts, and ``1 << 63`` must be
-    spelled as the negative long (F.lit of 2^63 overflows)."""
-    in_word = bit.bitwiseAND(F.lit(63))
-    expr = F.lit(0).cast("long")
-    for i in range(64):
-        expr = F.when(
-            in_word == i, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
-        ).otherwise(expr)
-    return expr
 
 
 def bloom_merge(filters_df: DataFrame) -> DataFrame:
@@ -532,8 +514,6 @@ def bloom_might_contain(
     is map-only — pruning a billion-row probe side never shuffles it.
     """
     hash_fn = hash_fn or F.xxhash64
-    from filters_spark.operators.hashing import mixp31
-
     base = hash_fn(F.col(value_col).cast("string"))
     # _rid: see cms_estimate — duplicate item rows must survive the
     # probe regroup one-to-one

@@ -1,1 +1,2 @@
-"""Sources: deterministic synthetic CDC data + testdata table readers."""
+"""Sources: deterministic synthetic CDC data (``datagen``) and the Debezium
+envelope codec (``debezium``)."""

@@ -159,8 +159,7 @@ class TestBloomIndex:
         """The Spark-side build's (word, bit) pairs for a single value
         must be exactly the driver-side probe's — the property the
         whole prune soundness rests on."""
-        from filters_spark.operators.hashing import mixp31
-        from filters_spark.operators.sketches import _bit_mask
+        from filters_spark.lake.xxh import _bit_mask, mixp31
 
         bloom = table.current()["bloom"]
         m, k = bloom["m"], bloom["k"]

@@ -79,22 +79,14 @@ def twins(spark, tmp, registry=default_registry, num_buckets=4, mode="mor", **cr
     return out
 
 
-def observe(engine, metrics, raw_files=False) -> dict:
-    """With ``raw_files`` the rows come from the live files read with
-    pyarrow instead of ``read()``/``changes()`` (a string ``event_seq``
-    does not fit the table's long read schema)."""
+def observe(engine, metrics) -> dict:
     t = engine.table
-    if raw_files:
-        read = sorted(json.dumps(r, sort_keys=True) for f in t.files()
-                      for r in pq.ParquetFile(f["path"]).read().to_pylist())
-        ch = None
-    else:
-        df = t.read()
-        read = sorted(
-            map(tuple, df.select(*[c for c in df.columns if c != "_bucket"]).collect())
-        ) if df is not None else []
-        # copy-on-write commits keep no row-level change log
-        ch = t.changes(t.snapshots()[0]) if engine.write_mode == "mor" else None
+    df = t.read()
+    read = sorted(
+        map(tuple, df.select(*[c for c in df.columns if c != "_bucket"]).collect())
+    ) if df is not None else []
+    # copy-on-write commits keep no row-level change log
+    ch = t.changes(t.snapshots()[0]) if engine.write_mode == "mor" else None
     dl = engine.dead_letters(distinct=False)
     lin = engine.lineage()
     return {
@@ -115,7 +107,7 @@ def observe(engine, metrics, raw_files=False) -> dict:
 
 
 def assert_parity(spark, tmp, batches, counted, registry=default_registry, ddl=DDL,
-                  num_buckets=4, mode="mor", raw_files=False, **create):
+                  num_buckets=4, mode="mor", **create):
     """Applies ``batches`` in order through both paths; a callable step
     runs on each engine between batches instead."""
     frames = [
@@ -130,7 +122,7 @@ def assert_parity(spark, tmp, batches, counted, registry=default_registry, ddl=D
         metrics = [f(e) if callable(f) else e.apply_batch(f) for f in frames]
         metrics = [m for m, f in zip(metrics, frames) if not callable(f)]
         assert len(counted) - before == (len(applied) if path == "local" else 0)
-        got[path] = observe(e, metrics, raw_files)
+        got[path] = observe(e, metrics)
     for k in got["spark"]:
         assert got["local"][k] == got["spark"][k], k
     return got["local"]
@@ -521,33 +513,28 @@ def test_dirs_with_space_and_percent(spark, tmp_path, counted):
     assert got["metrics"][0]["applied"] == 6
 
 
-def test_string_event_seq_watermark_edges(spark, tmp_path, counted):
-    """MoR string ``event_seq``: lpad pads short values and truncates
-    long ones to 20 characters, NULL stays NULL; the second batch
-    survives or not against the stored watermarks. The delta files are
-    compared as written (the table reads ``event_seq`` as a long)."""
-    ddl = DDL.replace("event_seq long", "event_seq string")
-    first = [
-        ev(1, "7", "r1", "a.py"),
-        ev(1, "12345678901234567890", "r2", "b.py"),         # exactly 20
-        ev(1, "1234567890123456789012345", "r3", "c.py"),    # truncated
-        ev(1, "abc", "r4", "d.py"),
-        ev(1, "", "r5", "e.py"),
-        ev(1, "é" * 22, "r6", "f.py"),
-        ev(1, None, "r7", "g.py"),
-    ]
-    second = [
-        ev(1, "8", "r1", "a.py", content="newer"),
-        ev(1, "12345678901234567889", "r2", "b.py", content="older"),
-        ev(1, "12345678901234567890999", "r3", "c.py", content="same 20"),
-        ev(1, "abd", "r4", "d.py", content="newer"),
-        ev(1, "0", "r5", "e.py", content="pads equal"),
-        ev(1, "é" * 21, "r6", "f.py", content="same 20"),
-        ev(2, None, "r7", "g.py", content="null seq"),
-    ]
-    got = assert_parity(spark, str(tmp_path), [first, second], counted, ddl=ddl,
-                        num_buckets=8, raw_files=True)
-    assert got["metrics"][1]["skipped_replays"] > 0 and got["read"]
+def test_string_event_seq_rejected_and_table_reads(spark, tmp_path, counted):
+    """``event_seq`` is integral on both paths: apply_batch, stage_batch
+    and replay refuse a string ``event_seq`` batch with ``ValueError``
+    before staging, nothing is committed, and ``read()`` still returns
+    the earlier rows (string delta files used to break the long read
+    schema)."""
+    tmp = str(tmp_path)
+    rows = [ev(1, i, f"r{i}", "a.py") for i in range(3)]
+    bad = parquet(spark, tmp, "bad", [ev(2, "7", "r1", "a.py", content="newer")],
+                  ddl=DDL.replace("event_seq long", "event_seq string"))
+    for path, e in twins(spark, tmp).items():
+        e.apply_batch(parquet(spark, tmp, f"ok_{path}", rows))
+        before = observe(e, [])
+        assert [r[:2] for r in before["read"]] == [(f"r{i}", "a.py") for i in range(3)]
+        for call in (e.apply_batch, lambda b: e.stage_batch(b, "wap-1"),
+                     lambda b: e.replay(b, num_batches=2)):
+            with pytest.raises(ValueError, match="event_seq"):
+                call(bad)
+        assert observe(e, []) == before, path
+        staging = os.path.join(e.table.root, "_staging")
+        assert not os.path.isdir(staging) or not os.listdir(staging), path
+    assert len(counted) == 1  # the local twin's good batch took the driver path
 
 
 @pytest.mark.parametrize("mode", ["mor", "cow"])

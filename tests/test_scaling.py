@@ -2,9 +2,10 @@
 parallelism/shuffle settings produces byte-identical final state —
 the sandbox stand-in for the N vs 4N executor equality requirement.
 
-(Throughput at both levels is measured by ``bench.py --scaling``;
-this test pins the *correctness* half: state is independent of
-partitioning.)"""
+(Throughput at both levels is measured by ``python3 ingestbench/run.py
+--workload bulk_replay_cow --trace 1``, which prints
+``engine.scaling_eff_1to4``; this test pins the *correctness* half:
+state is independent of partitioning.)"""
 
 import os
 

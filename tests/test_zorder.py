@@ -1,4 +1,4 @@
-"""Z-order clustering (operators/zorder.py): key correctness against a
+"""Z-order clustering (lake/zorder.py): key correctness against a
 Python reimplementation, and the actual pruning win — files clustered
 by the interleave key hold tight min/max rectangles in BOTH dimensions,
 so range predicates on either column skip files, which a linear sort
@@ -7,7 +7,7 @@ can only deliver for its leading column."""
 import pyspark.sql.functions as F
 import pytest
 
-from filters_spark.operators.zorder import zorder_key, zorder_py
+from filters_spark.lake.zorder import zorder_key, zorder_py
 
 
 class TestZorderKey:
@@ -74,7 +74,7 @@ class TestZorderPruning:
 
 class TestQuantizeRank:
     def test_equal_mass_buckets_on_skewed_data(self, spark):
-        from filters_spark.operators.zorder import quantize_rank
+        from filters_spark.lake.zorder import quantize_rank
 
         # heavily skewed: exponential-ish values
         df = spark.createDataFrame(
@@ -90,7 +90,7 @@ class TestQuantizeRank:
         assert all(abs(c - edge) < 0.3 * edge for c in (sizes[0], sizes[-1]))
 
     def test_bounds_and_determinism(self, spark):
-        from filters_spark.operators.zorder import quantize_rank
+        from filters_spark.lake.zorder import quantize_rank
 
         df = spark.createDataFrame([(i, float(i % 5)) for i in range(100)], "id long, v double")
         a = sorted(map(tuple, quantize_rank(df, "v", 4, tiebreak=["id"]).collect()))
@@ -100,7 +100,7 @@ class TestQuantizeRank:
         assert min(qs) == 0 and max(qs) == 15
 
     def test_validation(self, spark):
-        from filters_spark.operators.zorder import quantize_rank
+        from filters_spark.lake.zorder import quantize_rank
 
         df = spark.createDataFrame([(1.0,)], "v: double")
         with pytest.raises(ValueError):
@@ -111,7 +111,7 @@ class TestQuantizeRank:
         # for small frames but must never ship silently
         import warnings
 
-        from filters_spark.operators.zorder import quantize_rank
+        from filters_spark.lake.zorder import quantize_rank
 
         df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, v double")
         with pytest.warns(UserWarning, match="UNPARTITIONED"):
