@@ -53,7 +53,8 @@ from filters_spark.engine.local import (
     _INTEGRAL, PASSTHROUGH, apply_local, local_batch_plan, parquet_footers,
 )
 from filters_spark.lake.fileio import write_parquet_local
-from filters_spark.lake.table import LakeTable, WATERMARK_ZERO, bucket_expr, lww_merge, watermark_str
+from filters_spark.lake.table import LakeTable, bucket_expr, lww_merge, watermark_str
+from filters_spark.session import job_description
 
 
 def _check_event_seq(events: DataFrame) -> None:
@@ -250,7 +251,6 @@ class CDCEngine:
         lineage_dir: str | None = None,
         write_mode: str = "cow",
         compact_after: int = 8,
-        group_applies: bool = True,
         ref_checks: list[RefCheck] | None = None,
         check_constraints: list[CheckConstraint] | None = None,
     ):
@@ -275,11 +275,6 @@ class CDCEngine:
             raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
         self.write_mode = write_mode
         self.compact_after = compact_after
-        # fold each replay group's batch applies into one Spark job
-        # (_apply_staged_group_cow / _apply_staged_group_mor); False
-        # forces the sequential per-batch path (same results, pinned
-        # by tests)
-        self.group_applies = group_applies
         for chk in ref_checks or []:
             if chk.field not in registry.canonical_columns:
                 raise ValueError(
@@ -304,11 +299,8 @@ class CDCEngine:
     # at the session's shuffle.partitions (small folds keep exactly the
     # plan they had) and capped defensively. Row-count based because
     # parquet/shuffle compressed bytes under-estimate in-memory sort
-    # width ~40x on code content; override per deployment via
-    # FILTERS_SPARK_FOLD_ROWS_PER_PARTITION for much wider/narrower rows.
-    FOLD_ROWS_PER_PARTITION = int(
-        os.environ.get("FILTERS_SPARK_FOLD_ROWS_PER_PARTITION", "200000")
-    )
+    # width ~40x on code content.
+    FOLD_ROWS_PER_PARTITION = 200_000
 
     # Batches up to this many input rows (counted from the parquet
     # footers) apply and stage on the driver (engine/local.py): below it
@@ -645,7 +637,8 @@ class CDCEngine:
         scratch_dir: str | None = None,
     ) -> tuple[str, StructType]:
         """Validate + bucket the stream and stage it to scratch parquet,
-        partitioned by (_batch?, _dead).
+        partitioned by (_batch, _dead); ``batch_col`` defaults to 0 (one
+        batch).
 
         This is THE fixed-cost sink: the multi-version validate plan
         (the largest Catalyst tree in the engine) is analyzed, codegen'd
@@ -667,24 +660,22 @@ class CDCEngine:
         (:meth:`_read_staged`): the staged columns with the partition
         columns last, ``_batch`` int and ``_dead`` boolean — a declared
         schema spares the read-back a footer-inference job."""
-        staged = self._staged_frame(events, snap)
-        parts = ["_dead"]
-        if batch_col is not None:
-            staged = staged.withColumn("_batch", batch_col.cast("int"))
-            parts = ["_batch", "_dead"]
+        staged = self._staged_frame(events, snap).withColumn(
+            "_batch", (F.lit(0) if batch_col is None else batch_col).cast("int")
+        )
         scratch = scratch_dir or os.path.join(
             self.table.root, "_staging", f"{prefix}-{uuid.uuid4().hex}"
         )
-        with self._scan_splits(events):
-            staged.write.partitionBy(*parts).parquet(scratch)
-        return scratch, self._read_schema(staged.schema, batch_col is not None)
+        with self._scan_splits(events), job_description(
+            self.spark, f"filters_spark: stage {os.path.basename(self.table.root)}"
+        ):
+            staged.write.partitionBy("_batch", "_dead").parquet(scratch)
+        return scratch, self._read_schema(staged.schema)
 
     @staticmethod
-    def _read_schema(staged: StructType, batched: bool) -> StructType:
+    def _read_schema(staged: StructType) -> StructType:
         out = StructType([f for f in staged.fields if f.name not in ("_batch", "_dead")])
-        if batched:
-            out = out.add("_batch", IntegerType())
-        return out.add("_dead", BooleanType())
+        return out.add("_batch", IntegerType()).add("_dead", BooleanType())
 
     def _read_staged(self, scratch: str, schema: StructType) -> DataFrame:
         return self.spark.read.schema(schema).option("basePath", scratch).parquet(scratch)
@@ -720,8 +711,7 @@ class CDCEngine:
             if not self.io.tree_has_suffix(scratch, ".parquet"):  # empty input
                 return self._untouched_metrics(self._batch_stats([]), snap, t0)
             return self._apply_staged(
-                self._read_staged(scratch, schema),
-                os.path.join(scratch, "_dead=true"), os.path.basename(scratch), t0,
+                self._read_staged(scratch, schema), scratch, os.path.basename(scratch), t0,
                 audit_fn=audit_fn,
             )
         finally:
@@ -949,16 +939,14 @@ class CDCEngine:
         done = set(state["chunks_done"])
         if done != set(range(num_chunks)) and self.io.tree_has_suffix(scratch, ".parquet"):
             if schema is None:  # resuming onto an earlier call's complete stage
-                schema = self._read_schema(self._staged_frame(rows, snap).schema, True)
+                schema = self._read_schema(self._staged_frame(rows, snap).schema)
             staged_all = self._read_staged(scratch, schema)
             for i in range(num_chunks):
                 if i in done:
                     continue
                 m = self._apply_staged(
-                    staged_all.filter(F.col("_batch") == i).drop("_batch"),
-                    os.path.join(scratch, f"_batch={i}", "_dead=true"),
-                    f"bootstrap-c{i}",
-                    time.time(),
+                    staged_all.filter(F.col("_batch") == i), scratch, f"bootstrap-c{i}",
+                    time.time(), batch=i,
                 )
                 for k in counter_keys:
                     totals[k] += m[k]
@@ -1025,8 +1013,8 @@ class CDCEngine:
                 self.io.rmtree(scratch)
                 return self._empty_stage(snap, t0)
             handle = self._apply_staged(
-                self._read_staged(scratch, schema), os.path.join(scratch, "_dead=true"),
-                os.path.basename(scratch), t0, stage_only_wap=wap_id,
+                self._read_staged(scratch, schema), scratch, os.path.basename(scratch), t0,
+                stage_only_wap=wap_id,
             )
             handle.scratch = scratch
             return handle
@@ -1069,165 +1057,225 @@ class CDCEngine:
             ).drop("_bucket_wm")
         return staged.withColumn("_survives", F.lit(True))
 
-    def _apply_staged(self, staged: DataFrame, dead_src: str, adopt_name: str, t0: float,
-                      lineage_sink: list | None = None,
-                      wm_map: Mapping | None = None,
-                      stats_rows: list | None = None,
-                      audit_fn=None,
+    def _apply_staged(self, staged: DataFrame, scratch: str, adopt_name: str, t0: float,
+                      batch: int = 0, wm_map: Mapping | None = None, audit_fn=None,
                       stage_only_wap: str | None = None) -> dict | StagedBatch:
-        """Watermark-filter, merge and commit one staged (already
-        validated + bucketed) batch. All plans here are small — a
-        staged-parquet scan, a broadcast anti-join, one window — so the
-        per-batch driver cost is a few hundred ms, not a re-analysis of
-        the validate tree.
+        """Watermark-filter, fold and commit (or stage) staged batch
+        ``batch`` of ``scratch`` — a group of one (:meth:`_apply_group`);
+        one call per batch, per bootstrap chunk included."""
+        return self._apply_group(
+            staged, scratch, {batch: adopt_name}, wm_map, t0,
+            audit_fn=audit_fn, stage_only_wap=stage_only_wap,
+        )[0]
 
-        ``wm_map``/``stats_rows``: replay() precomputes the survival
-        watermarks and the per-batch stats in ONE job for all batches
-        (valid because replay batches are ascending disjoint commit
-        ranges: intra-replay watermark advances from batch i can never
-        reach batch j>i's commits, so survival vs the pre-replay
-        snapshot equals survival vs the batch-time snapshot)."""
+    def _apply_group(self, staged: DataFrame, scratch: str, adopt_names: dict[int, str],
+                     wm_map: Mapping | None, t0: float, lineage_sink: list | None = None,
+                     audit_fn=None, stage_only_wap: str | None = None) -> list:
+        """The Spark-path apply: watermark-filter, fold and commit a
+        group of batches staged under ``scratch`` (already validated +
+        bucketed; ``staged`` reads them). ``adopt_names`` maps each batch
+        id, in commit order, to the name its dead letters are adopted
+        under; ``wm_map`` defaults to the head's watermarks. Returns one
+        metrics dict (or :class:`StagedBatch`) per batch.
+
+        1. Survival + stats: ONE aggregate over (_batch, _dead,
+           _survives, _bucket) against ``wm_map``.
+        2. Fold: ONE write partitioned by (_batch, _bucket).
+           Merge-on-read keeps each batch's in-batch LWW heads
+           (tombstones kept: newest op wins at read time). Copy-on-write
+           expands every row to each committing batch it belongs to
+           (base rows to every batch touching their bucket, batch-j
+           events to batches >= j; an ``explode``, no join) and keeps
+           :func:`lww_merge`'s winners, in ``sort_cols`` order, so batch
+           i's output is its buckets' state after batch i.
+        3. Finalize, batch by batch in order, on the driver: move the
+           batch's directory into data/ and commit it
+           (``commit_{bucket,delta}_files``) — or, for a group of one,
+           stage it (``stage_only_wap``) or stage and audit it
+           (``audit_fn``).
+
+        A group folds in one pass because replay batches are ascending
+        disjoint commit ranges: batch i's watermark advances can never
+        reach batch j>i's commits, so survival against the pre-group
+        watermarks equals survival at batch time, and a bucket's state
+        after batch i is ``lww(state_0 ∪ clean_{j<=i})``. The per-batch
+        constant cost of a Spark job (scheduling, plan analysis, AQE
+        re-planning) is paid once per group."""
         snap = self.table.current()
-        if wm_map is None:
-            wm_map = snap["watermarks"]
-        staged = self._with_survives(staged, wm_map)
-
-        if stats_rows is None:
-            stats_rows = (
-                staged.groupBy("_dead", "_survives", F.col("_bucket"))
+        sid0 = snap["snapshot_id"]
+        staged = self._with_survives(staged, snap["watermarks"] if wm_map is None else wm_map)
+        name = os.path.basename(self.table.root)
+        with job_description(self.spark, f"filters_spark: stats {name}"):
+            rows = (
+                staged.groupBy("_batch", "_dead", "_survives", "_bucket")
                 .agg(F.max("_wm").alias("wm"), F.count("*").alias("n"))
                 .collect()
             )
-        p = self._batch_stats(stats_rows)
-        events_in, n_dead, skipped = p["events_in"], p["n_dead"], p["skipped"]
-        touched, new_wms = p["touched"], p["new_wms"]
-        applied_events = p["applied"]
-        clean = staged.filter(~F.col("_dead") & F.col("_survives")).drop("_dead", "_survives")
+        per = {i: self._batch_stats([r for r in rows if r["_batch"] == i]) for i in adopt_names}
+        committing = [i for i in adopt_names if per[i]["touched"]]
+        cow = self.write_mode == "cow"
 
-        if not touched:
-            if stage_only_wap is not None:
-                # nothing to merge — the "stage" is just the retained
-                # scratch; publish adopts dead letters, abandon drops them
-                return self._staged_handle(None, snap, None, dead_src, adopt_name, p, t0)
-            self._adopt_dead_letters(dead_src, adopt_name, n_dead)
-            return self._untouched_metrics(p, snap, t0)
+        fold_out = os.path.join(self.table.root, "_staging", f"fold-{uuid.uuid4().hex}")
+        if committing:
+            # clean rows always have keys (the 'required' chain on path
+            # dead-letters key-less rows upstream); the payload set
+            # derives from the registry — a VersionSpec that ADDS a
+            # canonical column widens it mid-stream
+            payload = self._payload_cols()
+            src = staged.filter(
+                ~F.col("_dead") & F.col("_survives")
+                & F.col("repo").isNotNull() & F.col("path").isNotNull()
+            ).select("repo", "path", "commit", "event_seq", *payload, "op", "_bucket", "_wm",
+                     "_batch")
+            rows_est = sum(per[i]["applied"] for i in committing)
+            if cow:
+                touched = sorted({b for i in committing for b in per[i]["touched"]})
+                current = self.table.read(snapshot_id=sid0, buckets=touched)
+                if current is not None:
+                    # schema evolution: the current table may predate a
+                    # column ADD — NULL-fill the missing payload columns
+                    src = current.select(
+                        "repo", "path", "commit", "event_seq",
+                        *[
+                            (F.col(c) if c in current.columns else F.lit(None).cast("string"))
+                            .alias(c)
+                            for c in payload
+                        ],
+                        F.lit("K").alias("op"),
+                        F.col("_bucket").cast("int").alias("_bucket"),
+                        watermark_str(F.col("commit"), F.col("event_seq")).alias("_wm"),
+                        F.lit(-1).alias("_batch"),
+                    ).unionByName(src)
+                # one copy of each row per committing batch it belongs to
+                src = src.withColumn("_batch", F.explode(F.array(*[
+                    F.when(F.col("_bucket").isin(per[i]["touched"]) & (F.col("_batch") <= i),
+                           F.lit(i))
+                    for i in committing
+                ]))).filter(F.col("_batch").isNotNull())
+                rows_est = sum(
+                    per[i]["applied"] * sum(1 for j in committing if j >= i) for i in committing
+                ) + self._current_rows_est(touched) * len(committing)
+            src = src.repartition(self._fold_partitions(rows_est), "_batch", "_bucket")
+            if cow:
+                folded = lww_merge(src, payload, extra_keys=["_batch"])
+                if snap.get("sort_cols"):
+                    # cluster each base file like LakeTable._write_bucket_data
+                    folded = folded.sortWithinPartitions("_batch", "_bucket", *snap["sort_cols"])
+            else:
+                mw = Window.partitionBy("_batch", "_bucket").orderBy(
+                    "repo", "path", F.col("_wm").desc()
+                )
+                is_head = (
+                    F.lag("repo").over(mw).isNull()
+                    | (F.lag("repo").over(mw) != F.col("repo"))
+                    | (F.lag("path").over(mw) != F.col("path"))
+                )
+                folded = (
+                    src.withColumn("_head", F.coalesce(is_head, F.lit(True)))
+                    .filter(F.col("_head"))
+                    .drop("_head", "_wm")  # _wm re-derives from (commit, event_seq) at read
+                )
+            with job_description(self.spark, f"filters_spark: fold {name}"):
+                folded.write.partitionBy("_batch", "_bucket").parquet(fold_out)
+        share = (time.time() - t0) / len(adopt_names)  # the group's jobs, apportioned
 
-        # 6. merge. ev_cols carry everything the LWW fold needs; clean
-        # rows always have keys (the 'required' chain on path dead-
-        # letters key-less rows upstream). The payload set derives from
-        # the registry — a VersionSpec that ADDS a canonical column
-        # widens it mid-stream.
-        payload = self._payload_cols()
-        ev_cols = ["repo", "path", "commit", "event_seq", *payload, "op", "_bucket", "_wm"]
-        incoming = clean.select(*ev_cols).filter(
-            F.col("repo").isNotNull() & F.col("path").isNotNull()
-        )
-        stats = {
-            "rows_applied": applied_events,
-            "batch_dead_lettered": n_dead,
-        }
-        # write-audit-publish: stage under a deterministic id (head+1 is
-        # unique per parent; adopt_name disambiguates callers)
-        if stage_only_wap is not None:
-            wap_id = stage_only_wap
+        if cow:
+            commit, stage = self.table.commit_bucket_files, self.table.stage_bucket_files
+            # rolling conflict basis: the fold was computed against sid0
+            # plus our OWN earlier batches. Each commit's bucket refs are
+            # overlaid onto raw(sid0), so a FOREIGN commit to one of our
+            # buckets anywhere in the fold-and-finalize window trips
+            # commit_bucket_files' disjointness check, while our own
+            # strictly-ordered commits validate clean
+            raw = self.table._raw_snapshot(sid0)
+            basis = {**raw, "buckets": dict(raw["buckets"]),
+                     "deltas": dict(raw.get("deltas", {}))}
         else:
-            wap_id = None if audit_fn is None else f"audit-{snap['snapshot_id'] + 1}-{adopt_name}"
-        commit_kw = dict(
-            stats=stats,
-            schema_version=self.registry.latest,
-            columns=self.registry.canonical_columns,
-        )
-
-        if self.write_mode == "mor":
-            # merge-on-read: in-batch LWW dedupe only (KEEPING delete
-            # tombstones — newest op wins at read time), then append
-            # O(batch) delta files. No current-state read, no rewrite.
-            incoming = incoming.repartition(
-                self._fold_partitions(applied_events), "_bucket"
-            )
-            mw = Window.partitionBy("_bucket").orderBy(
-                "repo", "path", F.col("_wm").desc()
-            )
-            is_head = (
-                F.lag("repo").over(mw).isNull()
-                | (F.lag("repo").over(mw) != F.col("repo"))
-                | (F.lag("path").over(mw) != F.col("path"))
-            )
-            deduped = (
-                incoming.withColumn("_head", F.coalesce(is_head, F.lit(True)))
-                .filter(F.col("_head"))
-                .drop("_head", "_wm")  # _wm re-derives from (commit, event_seq) at read
-            )
-            if wap_id is None:
-                new_snap = self.table.commit_deltas(deduped, touched, new_wms, **commit_kw)
-            else:
-                staged_header = self.table.stage_deltas(
-                    deduped, touched, new_wms, wap_id, **commit_kw
+            # delta appends commute: their basis only guards against a rescale
+            commit, stage = self.table.commit_delta_files, self.table.stage_delta_files
+        out: list = []
+        try:
+            for i, adopt_name in adopt_names.items():
+                t_i = time.time() - share
+                dead_src = os.path.join(scratch, f"_batch={i}", "_dead=true")
+                p = per[i]
+                if not p["touched"]:
+                    if stage_only_wap is not None:
+                        # nothing to fold — the "stage" is just the retained
+                        # scratch; publish adopts dead letters, abandon drops them
+                        return [self._staged_handle(None, snap, None, dead_src, adopt_name, p, t0)]
+                    self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"])
+                    out.append(self._untouched_metrics(p, self.table.current(), t_i))
+                    continue
+                # write-audit-publish: stage under a deterministic id
+                # (head+1 is unique per parent; adopt_name disambiguates)
+                wap_id = stage_only_wap or (
+                    None if audit_fn is None else f"audit-{sid0 + 1}-{adopt_name}"
                 )
-                if stage_only_wap is not None:
-                    return self._staged_handle(
-                        wap_id, snap, staged_header, dead_src, adopt_name, p, t0
+                # unique names: a pre-existing dst (a crashed run, a racer
+                # claiming the sid) would make move() NEST the batch's dir
+                # inside it. Dir names are labels; reads resolve files
+                # only through manifests.
+                if wap_id is not None:
+                    dst = self.table._fresh_stage_dir(f"wap-{'' if cow else 'delta-'}{wap_id}")
+                else:
+                    sid = self.table.current_snapshot_id() + 1
+                    dst = os.path.join(
+                        self.table.data_dir,
+                        f"{'snap' if cow else 'delta'}-{sid:08d}-{uuid.uuid4().hex[:8]}",
                     )
-                new_snap = self._audit_publish(audit_fn, wap_id)
-                if new_snap is None:
-                    return self._rejected_metrics(events_in, skipped, snap, t0)
-        else:
-            # copy-on-write: current state of touched buckets + batch
-            # events through ONE shuffle keyed on _bucket (== the
-            # table's physical partitioning) — in-batch dedupe and
-            # merge-against-current collapse into the same window pass
-            # (lake/table.py:lww_merge); the write is exchange-free.
-            current = self.table.read(buckets=touched)
-            if current is not None:
-                # schema evolution: the current table may predate a
-                # column ADD — fill the missing payload columns with
-                # NULL so the union aligns on the registry's set
-                cur = current.select(
-                    "repo", "path", "commit", "event_seq",
-                    *[
-                        (F.col(c) if c in current.columns else F.lit(None).cast("string")).alias(c)
-                        for c in payload
-                    ],
-                    F.lit("K").alias("op"),
-                    F.col("_bucket").cast("int").alias("_bucket"),
-                    watermark_str(F.col("commit"), F.col("event_seq")).alias("_wm"),
-                )
-                merged_src = cur.unionByName(incoming)
-            else:
-                merged_src = incoming
-            merged_src = merged_src.repartition(
-                self._fold_partitions(
-                    applied_events + self._current_rows_est(touched)
-                ),
-                "_bucket",
-            )
-            merged = lww_merge(merged_src, payload)
-
-            # 7. atomic commit (copy-on-write of touched buckets only)
-            if wap_id is None:
-                new_snap = self.table.commit_buckets(merged, touched, new_wms, **commit_kw)
-            else:
-                staged_header = self.table.stage_buckets(
-                    merged, touched, new_wms, wap_id, **commit_kw
-                )
-                if stage_only_wap is not None:
-                    return self._staged_handle(
-                        wap_id, snap, staged_header, dead_src, adopt_name, p, t0
+                src_dir = os.path.join(fold_out, f"_batch={i}")
+                if self.io.isdir(src_dir):
+                    self.io.move(src_dir, dst)
+                new_files: dict[str, list[str]] = {}
+                for b in p["touched"]:  # no files: the batch emptied the bucket
+                    bdir = os.path.join(dst, f"_bucket={b}")
+                    new_files[str(b)] = sorted(
+                        os.path.join(bdir, f)
+                        for f in (self.io.listdir(bdir) if self.io.isdir(bdir) else [])
+                        if f.endswith(".parquet")
                     )
-                new_snap = self._audit_publish(audit_fn, wap_id)
-                if new_snap is None:
-                    return self._rejected_metrics(events_in, skipped, snap, t0)
-
-        # 3b (deferred until after the merge executed, so the clean
-        # scan never races the move): adopt the staged _dead=true
-        # files AS the dead-letter table — a metadata move, not
-        # another Spark job over the batch.
-        out = self._after_commit(
-            new_snap, p, lambda: self._adopt_dead_letters(dead_src, adopt_name, n_dead),
-            t0, lineage_sink,
-        )
-        if wap_id is not None:
-            out["audit"] = "published"
+                kw = dict(
+                    stats={"rows_applied": p["applied"], "batch_dead_lettered": p["n_dead"]},
+                    schema_version=self.registry.latest,
+                    columns=self.registry.canonical_columns,
+                )
+                if wap_id is None:
+                    new_snap = commit(
+                        new_files, p["new_wms"], **kw,
+                        **({"basis_raw": basis} if cow else {"basis_snapshot_id": sid0}),
+                    )
+                    if cow:
+                        committed = self.table._raw_snapshot(new_snap["snapshot_id"])
+                        basis["snapshot_id"] = committed["snapshot_id"]
+                        for key in ("buckets", "deltas"):
+                            for b in map(str, p["touched"]):
+                                if b in committed.get(key, {}):
+                                    basis[key][b] = committed[key][b]
+                                else:
+                                    basis[key].pop(b, None)
+                else:
+                    header = stage(new_files, p["new_wms"], wap_id, basis_snapshot_id=sid0, **kw)
+                    if audit_fn is None:
+                        return [self._staged_handle(
+                            wap_id, snap, header, dead_src, adopt_name, p, t0
+                        )]
+                    new_snap = self._audit_publish(audit_fn, wap_id)
+                    if new_snap is None:
+                        return [self._rejected_metrics(p["events_in"], p["skipped"], snap, t0)]
+                # dead letters move after the fold executed, so the clean
+                # scan never races the move: a metadata move of the staged
+                # _dead=true files, not another Spark job over the batch
+                m = self._after_commit(
+                    new_snap, p,
+                    lambda: self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"]),
+                    t_i, lineage_sink,
+                )
+                if wap_id is not None:
+                    m["audit"] = "published"
+                out.append(m)
+        finally:
+            self.io.rmtree(fold_out)
         return out
 
     def _after_commit(self, new_snap: dict, p: dict, adopt_dead, t0: float,
@@ -1311,9 +1359,9 @@ class CDCEngine:
     @staticmethod
     def _batch_stats(rows: list) -> dict:
         """Fold one staged batch's per-(bucket, dead, survives) stat
-        rows into the counters the grouped finalize loops consume —
-        shared by the CoW and MoR group paths so the `_survives` /
-        dead-letter accounting can never diverge between modes."""
+        rows into the counters its finalize consumes — shared by the
+        Spark path (:meth:`_apply_group`) and the driver path, so the
+        `_survives` / dead-letter accounting can never diverge."""
         bucket_stats = [r for r in rows if not r["_dead"] and r["_survives"]]
         return {
             "events_in": int(sum(r["n"] for r in rows)),
@@ -1328,292 +1376,6 @@ class CDCEngine:
             },
             "applied": int(sum(r["n"] for r in bucket_stats)),
         }
-
-    def _apply_staged_group_cow(
-        self,
-        staged_all: DataFrame,
-        scratch: str,
-        batch_ids: range,
-        stats_by_batch: dict[int, list],
-        wm0: Mapping,
-        lineage_rows: list,
-    ) -> list[dict]:
-        """Copy-on-write applies for a whole staged batch GROUP in ONE
-        Spark job (the sequential path pays a constant per-batch driver
-        term — job scheduling, plan analysis, AQE re-planning — that
-        bounds scaling efficiency at bench batch counts; folding the
-        merges amortizes it to once per group).
-
-        Validity: replay batches are ascending disjoint commit ranges,
-        so for a bucket b touched at batches V_b, the committed state at
-        batch i is exactly ``lww(state_0[b] ∪ clean_{j<=i}[b])`` — the
-        per-batch merge chain collapses into one winner-per-(batch,key)
-        window. The job expands each row to every version it
-        participates in (a broadcast join against the tiny
-        (bucket, version) map — base rows count toward every version of
-        their bucket, batch-j events toward versions >= j), windows on
-        (version, _bucket) and writes every version's post-state
-        partitioned by (version, _bucket) — the same total shuffle/write
-        volume the sequential rewrites carry, in one exchange. The
-        strictly-ordered commits then finalize driver-side: move each
-        version's directory into data/ and write manifests
-        (:meth:`LakeTable.commit_bucket_files`) — zero further executor
-        work. Per-batch snapshots, watermarks, dead-letter adoption and
-        metrics are identical to the sequential path (pinned by the
-        replay-equality tests)."""
-        t_group0 = time.time()
-        per = {i: self._batch_stats(stats_by_batch.get(i, [])) for i in batch_ids}
-        committing = [i for i in batch_ids if per[i]["touched"]]
-        sid0 = self.table.current()["snapshot_id"]
-        sid_of = {i: sid0 + 1 + k for k, i in enumerate(committing)}
-
-        group_out = os.path.join(
-            self.table.root, "_staging", f"cow-group-{uuid.uuid4().hex}"
-        )
-        if committing:
-            payload = self._payload_cols()
-            ev_cols = ["repo", "path", "commit", "event_seq", *payload, "op", "_bucket", "_wm"]
-            clean = self._with_survives(staged_all, wm0).filter(
-                ~F.col("_dead") & F.col("_survives")
-            )
-            incoming = clean.select(
-                *ev_cols, F.col("_batch").cast("int").alias("_b")
-            ).filter(F.col("repo").isNotNull() & F.col("path").isNotNull())
-            all_touched = sorted({b for i in committing for b in per[i]["touched"]})
-            current = self.table.read(buckets=all_touched)
-            if current is not None:
-                cur = current.select(
-                    "repo", "path", "commit", "event_seq",
-                    *[
-                        (F.col(c) if c in current.columns else F.lit(None).cast("string")).alias(c)
-                        for c in payload
-                    ],
-                    F.lit("K").alias("op"),
-                    F.col("_bucket").cast("int").alias("_bucket"),
-                    watermark_str(F.col("commit"), F.col("event_seq")).alias("_wm"),
-                    F.lit(-1).alias("_b"),
-                )
-                src = cur.unionByName(incoming)
-            else:
-                src = incoming
-            vmap = self.spark.createDataFrame(
-                [(b, i, sid_of[i]) for i in committing for b in per[i]["touched"]],
-                "_bucket int, _v int, _snap int",
-            )
-            expanded = src.join(F.broadcast(vmap), "_bucket").filter(
-                F.col("_v") >= F.col("_b")
-            )
-            # expansion volume: each batch's events appear in every
-            # committing version >= their batch; current-state rows in
-            # every committing version of their bucket
-            n_expand = sum(
-                per[i]["applied"] * sum(1 for j in committing if j >= i)
-                for i in batch_ids
-            )
-            rows_est = n_expand + self._current_rows_est(all_touched) * len(committing)
-            expanded = expanded.repartition(
-                self._fold_partitions(rows_est), "_snap", "_bucket"
-            )
-            merged = lww_merge(expanded, payload, extra_keys=["_snap"])
-            merged.write.partitionBy("_snap", "_bucket").parquet(group_out)
-        merge_share = (
-            (time.time() - t_group0) / len(committing) if committing else 0.0
-        )
-
-        # rolling compute basis: the group's post-states were computed
-        # against the head at sid0 plus our OWN earlier batches. Overlay
-        # each finalized commit's bucket refs onto raw(sid0) and pass
-        # the synthetic header as basis_raw, so a FOREIGN commit landing
-        # anywhere in the (minutes-long) merge-and-finalize window trips
-        # commit_bucket_files' disjointness check instead of being
-        # silently overwritten — while our own strictly-ordered commits
-        # validate clean.
-        basis_src = self.table._raw_snapshot(sid0)
-        basis = {
-            **basis_src,
-            "buckets": dict(basis_src["buckets"]),
-            "deltas": dict(basis_src.get("deltas", {})),
-        }
-        group_tag = uuid.uuid4().hex[:8]
-
-        metrics: list[dict] = []
-        try:
-            for i in batch_ids:
-                t0 = time.time()
-                p = per[i]
-                dead_src = os.path.join(scratch, f"_batch={i}", "_dead=true")
-                adopt_name = f"{os.path.basename(scratch)}-b{i}"
-                if not p["touched"]:
-                    self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"])
-                    metrics.append(self._untouched_metrics(p, self.table.current(), t0))
-                    continue
-                sid = sid_of[i]
-                src_dir = os.path.join(group_out, f"_snap={sid}")
-                # group-unique dst name: a crashed prior run (or a
-                # disjoint foreign commit that claimed our precomputed
-                # sid) can leave data/snap-<sid> in place, and
-                # shutil/HDFS move would NEST src inside it — the
-                # subsequent listing would then commit the stale
-                # attempt's files. Dir names are labels; reads resolve
-                # files only through manifests.
-                dst_dir = os.path.join(
-                    self.table.data_dir, f"snap-{sid:08d}-{group_tag}"
-                )
-                if self.io.isdir(src_dir):
-                    self.io.move(src_dir, dst_dir)
-                new_files: dict[str, list[str]] = {}
-                for b in p["touched"]:
-                    bdir = os.path.join(dst_dir, f"_bucket={b}")
-                    new_files[str(b)] = sorted(
-                        os.path.join(bdir, f)
-                        for f in (self.io.listdir(bdir) if self.io.isdir(bdir) else [])
-                        if f.endswith(".parquet")
-                    )
-                new_snap = self.table.commit_bucket_files(
-                    new_files, p["new_wms"],
-                    stats={
-                        "rows_applied": p["applied"],
-                        "batch_dead_lettered": p["n_dead"],
-                    },
-                    schema_version=self.registry.latest,
-                    columns=self.registry.canonical_columns,
-                    basis_raw=basis,
-                )
-                sid = new_snap["snapshot_id"]  # actual (foreign disjoint
-                # racers may have consumed the precomputed id)
-                new_raw = self.table._raw_snapshot(sid)
-                basis["snapshot_id"] = sid
-                for b in p["touched"]:
-                    bs = str(b)
-                    if bs in new_raw["buckets"]:
-                        basis["buckets"][bs] = new_raw["buckets"][bs]
-                    else:
-                        basis["buckets"].pop(bs, None)
-                    if bs in new_raw.get("deltas", {}):
-                        basis["deltas"][bs] = new_raw["deltas"][bs]
-                    else:
-                        basis["deltas"].pop(bs, None)
-                m = self._after_commit(
-                    new_snap, p,
-                    lambda: self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"]),
-                    t0, lineage_rows,
-                )
-                m["seconds"] += merge_share  # the shared merge job's wall, apportioned
-                metrics.append(m)
-        finally:
-            self.io.rmtree(group_out)
-        return metrics
-
-    def _apply_staged_group_mor(
-        self,
-        staged_all: DataFrame,
-        scratch: str,
-        batch_ids: range,
-        stats_by_batch: dict[int, list],
-        wm0: Mapping,
-        lineage_rows: list,
-    ) -> list[dict]:
-        """Merge-on-read applies for a whole staged batch group in ONE
-        Spark job. Even simpler than the CoW fold: a MoR batch's delta
-        is the in-batch LWW dedupe of ITS OWN events only (no
-        current-state read), so the batches are fully independent — one
-        window on (_batch, _bucket) dedupes them all, one write emits
-        them partitioned by (_batch, _bucket), and each batch's commit
-        is a driver-side directory move + :meth:`commit_delta_files`.
-        Snapshot ids are assigned at FINALIZE time (not precomputed):
-        threshold compaction between batches inserts its own snapshots.
-        Read-state equality with the sequential path is pinned by
-        tests."""
-        per = {i: self._batch_stats(stats_by_batch.get(i, [])) for i in batch_ids}
-        committing = [i for i in batch_ids if per[i]["touched"]]
-
-        t_group0 = time.time()
-        group_out = os.path.join(
-            self.table.root, "_staging", f"mor-group-{uuid.uuid4().hex}"
-        )
-        if committing:
-            payload = self._payload_cols()
-            ev_cols = ["repo", "path", "commit", "event_seq", *payload, "op", "_bucket", "_wm"]
-            clean = self._with_survives(staged_all, wm0).filter(
-                ~F.col("_dead") & F.col("_survives")
-            )
-            incoming = clean.select(
-                *ev_cols, F.col("_batch").cast("int").alias("_batch")
-            ).filter(F.col("repo").isNotNull() & F.col("path").isNotNull())
-            incoming = incoming.repartition(
-                self._fold_partitions(sum(per[i]["applied"] for i in batch_ids)),
-                "_batch", "_bucket",
-            )
-            # in-batch LWW dedupe, all batches at once; tombstones KEPT
-            # (newest op wins at read time) — same fold commit_deltas'
-            # caller does per batch
-            mw = Window.partitionBy("_batch", "_bucket").orderBy(
-                "repo", "path", F.col("_wm").desc()
-            )
-            is_head = (
-                F.lag("repo").over(mw).isNull()
-                | (F.lag("repo").over(mw) != F.col("repo"))
-                | (F.lag("path").over(mw) != F.col("path"))
-            )
-            deduped = (
-                incoming.withColumn("_head", F.coalesce(is_head, F.lit(True)))
-                .filter(F.col("_head"))
-                .drop("_head", "_wm")  # _wm re-derives from (commit, event_seq) at read
-            )
-            deduped.write.partitionBy("_batch", "_bucket").parquet(group_out)
-        merge_share = (
-            (time.time() - t_group0) / len(committing) if committing else 0.0
-        )
-
-        metrics: list[dict] = []
-        try:
-            for i in batch_ids:
-                t0 = time.time()
-                p = per[i]
-                dead_src = os.path.join(scratch, f"_batch={i}", "_dead=true")
-                adopt_name = f"{os.path.basename(scratch)}-b{i}"
-                if not p["touched"]:
-                    self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"])
-                    metrics.append(self._untouched_metrics(p, self.table.current(), t0))
-                    continue
-                sid = self.table.current()["snapshot_id"] + 1
-                src_dir = os.path.join(group_out, f"_batch={i}")
-                # unique suffix: see the CoW finalize — a pre-existing
-                # dst (crashed run, racer claiming the sid) would make
-                # move() NEST src inside it and commit stale files
-                dst_dir = os.path.join(
-                    self.table.data_dir,
-                    f"delta-{sid:08d}-{uuid.uuid4().hex[:8]}",
-                )
-                if self.io.isdir(src_dir):
-                    self.io.move(src_dir, dst_dir)
-                new_files: dict[str, list[str]] = {}
-                for b in p["touched"]:
-                    bdir = os.path.join(dst_dir, f"_bucket={b}")
-                    new_files[str(b)] = sorted(
-                        os.path.join(bdir, f)
-                        for f in (self.io.listdir(bdir) if self.io.isdir(bdir) else [])
-                        if f.endswith(".parquet")
-                    )
-                new_snap = self.table.commit_delta_files(
-                    new_files, p["new_wms"],
-                    stats={
-                        "rows_applied": p["applied"],
-                        "batch_dead_lettered": p["n_dead"],
-                    },
-                    schema_version=self.registry.latest,
-                    columns=self.registry.canonical_columns,
-                )
-                m = self._after_commit(
-                    new_snap, p,
-                    lambda: self._adopt_dead_letters(dead_src, adopt_name, p["n_dead"]),
-                    t0, lineage_rows,
-                )
-                m["seconds"] += merge_share
-                metrics.append(m)
-        finally:
-            self.io.rmtree(group_out)
-        return metrics
 
     LINEAGE_DDL = (
         "snapshot_id long, bucket int, watermark string, rows_applied long, "
@@ -1716,10 +1478,10 @@ class CDCEngine:
         consumes ranges in order; batching by commit prefix keeps each
         batch a contiguous WAL range).
 
-        The stream is validated + staged ONCE (partitioned by batch id),
-        then each batch merges from its staged partition — N batches pay
-        the validate plan's analysis/codegen and its full-stream scan a
-        single time. ``stage_batches`` bounds scratch usage at very
+        The stream is validated + staged ONCE (partitioned by batch id)
+        and folded as one group (:meth:`_apply_group`) — N batches pay
+        the validate plan's analysis/codegen, its full-stream scan and
+        the fold's jobs a single time. ``stage_batches`` bounds scratch usage at very
         large replays: the stream is staged in groups of that many
         batches (default: all at once)."""
         _check_event_seq(events)
@@ -1757,68 +1519,18 @@ class CDCEngine:
             lineage_rows: list = []
             try:
                 if not self.io.tree_has_suffix(scratch, ".parquet"):
-                    metrics.extend(
-                        {"events_in": 0, "applied": 0, "dead_lettered": 0,
-                         "skipped_replays": 0,
-                         "snapshot_id": self.table.current()["snapshot_id"],
-                         "seconds": 0.0}
-                        for _ in range(g_lo, g_hi)
+                    empty = self._untouched_metrics(
+                        self._batch_stats([]), self.table.current(), time.time()
                     )
+                    metrics.extend(dict(empty) for _ in range(g_lo, g_hi))
                     continue
-                staged_all = self._read_staged(scratch, schema)
-                # ONE stats job for the whole group, survival evaluated
-                # against the pre-replay watermarks (valid for every
-                # batch: ranges ascend, see _apply_staged docstring) —
-                # instead of one staged-slice scan per batch.
-                wm0 = snap0["watermarks"]
-                stats_all = (
-                    self._with_survives(staged_all, wm0)
-                    .groupBy("_batch", "_dead", "_survives", F.col("_bucket"))
-                    .agg(F.max("_wm").alias("wm"), F.count("*").alias("n"))
-                    .collect()
-                )
-                stats_by_batch: dict[int, list] = {}
-                for r in stats_all:
-                    stats_by_batch.setdefault(int(r["_batch"]), []).append(r)
-                if self.group_applies and g_hi - g_lo > 1:
-                    # fold the group's merges/dedupes into ONE job +
-                    # driver-side ordered commit finalization — the
-                    # per-batch constant driver term is paid once per
-                    # group (CoW: _apply_staged_group_cow; MoR:
-                    # _apply_staged_group_mor)
-                    fold = (
-                        self._apply_staged_group_cow
-                        if self.write_mode == "cow"
-                        else self._apply_staged_group_mor
-                    )
-                    metrics.extend(fold(
-                        staged_all, scratch, range(g_lo, g_hi),
-                        stats_by_batch, wm0, lineage_rows,
-                    ))
-                    continue
-                for i in range(g_lo, g_hi):
-                    t0 = time.time()
-                    if i not in stats_by_batch:  # no events staged in range
-                        metrics.append(
-                            {"events_in": 0, "applied": 0, "dead_lettered": 0,
-                             "skipped_replays": 0,
-                             "snapshot_id": self.table.current()["snapshot_id"],
-                             "seconds": time.time() - t0}
-                        )
-                        continue
-                    bdir = os.path.join(scratch, f"_batch={i}")
-                    staged_i = staged_all.filter(F.col("_batch") == i).drop("_batch")
-                    metrics.append(
-                        self._apply_staged(
-                            staged_i,
-                            os.path.join(bdir, "_dead=true"),
-                            f"{os.path.basename(scratch)}-b{i}",
-                            t0,
-                            lineage_sink=lineage_rows,
-                            wm_map=wm0,
-                            stats_rows=stats_by_batch[i],
-                        )
-                    )
+                # survival against the pre-replay watermarks holds for
+                # every group: the batch ranges ascend (_apply_group)
+                metrics.extend(self._apply_group(
+                    self._read_staged(scratch, schema), scratch,
+                    {i: f"{os.path.basename(scratch)}-b{i}" for i in range(g_lo, g_hi)},
+                    snap0["watermarks"], time.time(), lineage_sink=lineage_rows,
+                ))
             finally:
                 self._write_lineage(lineage_rows)
                 self.io.rmtree(scratch)
@@ -1923,7 +1635,7 @@ class CDCEngine:
             if not self.io.tree_has_suffix(scratch, ".parquet"):
                 return zeros
             metrics = self._apply_staged(
-                self._read_staged(scratch, schema), os.path.join(scratch, "_dead=true"),
+                self._read_staged(scratch, schema), scratch,
                 f"retry-{os.path.basename(scratch)}", t0, wm_map={},
             )
         finally:

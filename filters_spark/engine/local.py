@@ -34,8 +34,8 @@ small work) with the same plan, kernels and commit as the Spark path:
   ``LakeTable.commit_{delta,bucket}_files`` against the snapshot the
   batch was validated under, or staged through
   ``LakeTable.stage_{delta,bucket}_files`` for ``stage_batch``, whose
-  dead letters wait in ``_staging/txn-<hex>/_dead=true/`` exactly as
-  the Spark stager leaves them;
+  dead letters wait in ``_staging/txn-<hex>/_dead=true/`` (the Spark
+  stager's ``_dead=true/`` under ``_batch=0/``) until publish or abandon;
 - dead letters are written in the staging schema, then the engine's
   shared post-commit tail (compaction check, lineage) runs.
 
@@ -392,7 +392,7 @@ def apply_local(engine, events: DataFrame, snap: dict, plan: tuple, t0: float,
     ])
 
     # dead letters: adopted after the commit, or kept in the stage's
-    # scratch dir (the Spark stager's layout) until publish or abandon
+    # scratch dir until publish or abandon
     if wap_id is None:
         scratch, adopt_name = None, f"batch-{uuid.uuid4().hex}"
         dead_dir = os.path.join(engine.dead_letter_dir, adopt_name)

@@ -8,11 +8,15 @@ import re
 import unicodedata
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Window
 import regex as rx
 
+import filters_spark.engine.cdc as cdc
 from filters_spark.engine.cdc import CDCEngine
 from filters_spark.engine.defaults import default_registry
 from filters_spark.lake.table import LakeTable
@@ -368,47 +372,69 @@ def test_unknown_schema_version_dead_letters(spark, tmp_path):
     assert {r.first_code for r in dl.collect()} == {"unknown_schema_version"}
 
 
-def test_grouped_cow_applies_match_sequential_per_snapshot(spark, tmp_path):
-    """The grouped replay (one merge job for all batches +
+def driver_applies(spark, tmp, eng, ev, num_batches, monkeypatch) -> list[dict]:
+    """The reference for ``replay(ev, num_batches)``: one ``apply_batch``
+    per replay batch, on the commit range replay cuts (its lo/span/clamp
+    formula over the commit bounds), each written as one parquet file
+    small enough for the driver path (engine/local.py) — a separate
+    Arrow implementation of the fold. Asserts the driver path ran."""
+    tbl = ev.toArrow()
+    commits = [int(c, 16) for c in tbl.column("commit").to_pylist()]
+    lo, hi = min(commits), max(commits)
+    span = (hi - lo + num_batches) // num_batches
+    batch_of = pa.array([min((c - lo) // span, num_batches - 1) for c in commits])
+    calls = []
+    real = cdc.apply_local
+    monkeypatch.setattr(
+        cdc, "apply_local", lambda *a, **kw: calls.append(1) or real(*a, **kw)
+    )
+    metrics = []
+    for i in range(num_batches):
+        part = tbl.filter(pc.equal(batch_of, i))
+        assert part.num_rows <= CDCEngine.LOCAL_MAX_ROWS
+        path = os.path.join(tmp, f"slice-{i}")
+        os.makedirs(path)
+        pq.write_table(part, os.path.join(path, "part-0.parquet"))
+        metrics.append(eng.apply_batch(spark.read.parquet(path)))
+    assert len(calls) == num_batches
+    return metrics
+
+
+def _sha_rows(table: LakeTable, sid: int | None = None) -> list[tuple]:
+    df = table.read(snapshot_id=sid)
+    return sorted((r.repo, r.path, r.content_sha) for r in df.collect()) if df is not None else []
+
+
+def _without(metrics: list[dict], *keys: str) -> list[dict]:
+    return [{k: v for k, v in m.items() if k not in ("seconds", *keys)} for m in metrics]
+
+
+def test_grouped_cow_applies_match_sequential_per_snapshot(spark, tmp_path, monkeypatch):
+    """The grouped replay (one fold job for all batches +
     driver-finalized ordered commits) must be indistinguishable from
-    the sequential per-batch path at SNAPSHOT granularity: same number
-    of snapshots, same watermarks, and byte-identical time-travel state
-    at every intermediate snapshot."""
+    applying the same batches one by one on the driver path at SNAPSHOT
+    granularity: same metrics, same snapshots, same watermarks, and the
+    same time-travel state at every intermediate snapshot."""
     ev = events_df(spark, n_events=4000, dirty_frac=0.1)
+    tmp = str(tmp_path)
+    seq, grp = (make_engine(spark, os.path.join(tmp, tag)) for tag in ("seq", "grp"))
+    m_seq = driver_applies(spark, tmp, seq, ev, 3, monkeypatch)
+    m_grp = grp.replay(ev, num_batches=3)
+    t_seq, t_grp = seq.table, grp.table
 
-    def run(grouped, tag):
-        table = LakeTable.create(
-            spark, os.path.join(str(tmp_path), f"lake_{tag}"),
-            key_cols=["repo", "path"], num_buckets=8, path_salt=4,
-        )
-        eng = CDCEngine(spark, table, default_registry(),
-                        group_applies=grouped)
-        metrics = eng.replay(ev, num_batches=3)
-        return table, metrics
-
-    t_seq, m_seq = run(False, "seq")
-    t_grp, m_grp = run(True, "grp")
-
-    strip = lambda ms: [
-        {k: v for k, v in m.items() if k != "seconds"} for m in ms
-    ]
-    assert strip(m_seq) == strip(m_grp)
+    assert _without(m_seq) == _without(m_grp)
     assert t_seq.snapshots() == t_grp.snapshots()
     for sid in t_seq.snapshots():
-        s_seq, s_grp = t_seq.snapshot(sid), t_grp.snapshot(sid)
-        assert s_seq["watermarks"] == s_grp["watermarks"], sid
-        df_a, df_b = t_seq.read(snapshot_id=sid), t_grp.read(snapshot_id=sid)
-        rows = lambda df: sorted(
-            (r.repo, r.path, r.content_sha) for r in df.collect()
-        ) if df is not None else []
-        assert rows(df_a) == rows(df_b), sid
+        assert t_seq.snapshot(sid)["watermarks"] == t_grp.snapshot(sid)["watermarks"], sid
+        assert _sha_rows(t_seq, sid) == _sha_rows(t_grp, sid), sid
 
 
-def test_grouped_cow_delete_empties_bucket(spark, tmp_path):
+def test_grouped_cow_delete_empties_bucket(spark, tmp_path, monkeypatch):
     """Grouped-fold edge: a later batch deletes every key in a bucket —
-    the version's partitioned write emits no directory for it, and the
-    commit must REMOVE the bucket (same as the sequential path), with
-    the delete invisible at the earlier snapshot (time travel)."""
+    the batch's partitioned write emits no directory for it, and the
+    commit must REMOVE the bucket (as the driver path's one-by-one
+    applies do), with the delete invisible at the earlier snapshot
+    (time travel)."""
     ddl = ("commit string, event_seq long, op string, repo string, "
            "path string, lang string, content string, schema_version int")
     # one key => one bucket; batch 1 upserts, batch 2 deletes it
@@ -417,81 +443,73 @@ def test_grouped_cow_delete_empties_bucket(spark, tmp_path):
          ("%012x" % 9, 0, "D", "r1", "a.py", "py", "v1", 1)],
         ddl,
     )
-    table = LakeTable.create(
-        spark, os.path.join(str(tmp_path), "lake_del"),
-        key_cols=["repo", "path"], num_buckets=4,
+    tables = {
+        tag: LakeTable.create(
+            spark, os.path.join(str(tmp_path), f"lake_del_{tag}"),
+            key_cols=["repo", "path"], num_buckets=4,
+        )
+        for tag in ("seq", "grp")
+    }
+    m_seq = driver_applies(
+        spark, str(tmp_path), CDCEngine(spark, tables["seq"], default_registry()), ev, 2,
+        monkeypatch,
     )
-    eng = CDCEngine(spark, table, default_registry(), group_applies=True)
-    metrics = eng.replay(ev, num_batches=2)
+    table = tables["grp"]
+    metrics = CDCEngine(spark, table, default_registry()).replay(ev, num_batches=2)
     assert [m["applied"] for m in metrics] == [1, 1]
+    assert _without(metrics) == _without(m_seq)
     sids = table.snapshots()
+    assert sids == tables["seq"].snapshots()
     assert table.read() is None  # all rows deleted -> empty table
     assert table.current()["buckets"] == {}  # bucket removed, not empty-listed
     mid = table.read(snapshot_id=sids[-2])  # pre-delete snapshot still has it
     assert [(r.repo, r.path) for r in mid.collect()] == [("r1", "a.py")]
+    assert _sha_rows(table, sids[-2]) == _sha_rows(tables["seq"], sids[-2])
 
 
-def test_grouped_cow_across_staging_groups(spark, tmp_path):
+def test_grouped_cow_across_staging_groups(spark, tmp_path, monkeypatch):
     """stage_batches chunks the replay into staged GROUPS; each group's
     fold must read the state the previous group committed (keys
     overwritten across the group boundary), and the result must equal
-    the sequential path snapshot-for-snapshot."""
+    the one-by-one driver applies snapshot-for-snapshot."""
     ev = events_df(spark, n_events=4000, dirty_frac=0.1)
-
-    def run(grouped, tag):
-        table = LakeTable.create(
-            spark, os.path.join(str(tmp_path), f"lake_sg_{tag}"),
-            key_cols=["repo", "path"], num_buckets=8, path_salt=4,
-        )
-        eng = CDCEngine(spark, table, default_registry(),
-                        group_applies=grouped)
-        eng.replay(ev, num_batches=4, stage_batches=2)
-        return table
-
-    t_seq = run(False, "seq")
-    t_grp = run(True, "grp")
+    tmp = str(tmp_path)
+    seq, grp = (make_engine(spark, os.path.join(tmp, tag)) for tag in ("seq", "grp"))
+    m_seq = driver_applies(spark, tmp, seq, ev, 4, monkeypatch)
+    m_grp = grp.replay(ev, num_batches=4, stage_batches=2)
+    t_seq, t_grp = seq.table, grp.table
+    assert _without(m_seq) == _without(m_grp)
     assert t_seq.snapshots() == t_grp.snapshots()
     for sid in t_seq.snapshots():
         assert (t_seq.snapshot(sid)["watermarks"]
                 == t_grp.snapshot(sid)["watermarks"]), sid
-        rows = lambda t: sorted(
-            (r.repo, r.path, r.content_sha) for r in t.read(snapshot_id=sid).collect()
-        ) if t.read(snapshot_id=sid) is not None else []
-        assert rows(t_seq) == rows(t_grp), sid
+        assert _sha_rows(t_seq, sid) == _sha_rows(t_grp, sid), sid
 
 
-def test_grouped_mor_applies_match_sequential(spark, tmp_path):
+def test_grouped_mor_applies_match_sequential(spark, tmp_path, monkeypatch):
     """Merge-on-read fold: one dedupe job for all batches + per-batch
-    delta commits must land the same read state as the sequential path
-    at EVERY snapshot, including when threshold compaction fires
-    between batches."""
+    delta commits must land the same read state as the one-by-one
+    driver applies at EVERY snapshot, including when threshold
+    compaction fires between batches."""
     ev = events_df(spark, n_events=4000, dirty_frac=0.1)
 
-    def run(grouped, tag):
+    def engine(tag):
         table = LakeTable.create(
             spark, os.path.join(str(tmp_path), f"lake_mor_{tag}"),
             key_cols=["repo", "path"], num_buckets=8, path_salt=4,
         )
-        eng = CDCEngine(spark, table, default_registry(), write_mode="mor",
-                        compact_after=3, group_applies=grouped)
-        metrics = eng.replay(ev, num_batches=4)
-        return table, metrics
+        return CDCEngine(spark, table, default_registry(), write_mode="mor", compact_after=3)
 
-    t_seq, m_seq = run(False, "seq")
-    t_grp, m_grp = run(True, "grp")
+    e_seq, e_grp = engine("seq"), engine("grp")
+    m_seq = driver_applies(spark, str(tmp_path), e_seq, ev, 4, monkeypatch)
+    m_grp = e_grp.replay(ev, num_batches=4)
+    t_seq, t_grp = e_seq.table, e_grp.table
 
-    strip = lambda ms: [
-        {k: v for k, v in m.items() if k not in ("seconds", "snapshot_id")}
-        for m in ms
-    ]
-    assert strip(m_seq) == strip(m_grp)
+    assert _without(m_seq, "snapshot_id") == _without(m_grp, "snapshot_id")
     # compaction interleaves its own snapshots; compare the final READ
     # state and the watermarks (the sequence of commit ops may differ
     # in snapshot ids but not in content)
-    rows = lambda t: sorted(
-        (r.repo, r.path, r.content_sha) for r in t.read().collect()
-    )
-    assert rows(t_seq) == rows(t_grp)
+    assert _sha_rows(t_seq) == _sha_rows(t_grp)
     assert t_seq.current()["watermarks"] == t_grp.current()["watermarks"]
     # per-batch snapshots: walk the append-deltas snapshots in order
     # and compare read state at each
@@ -501,11 +519,22 @@ def test_grouped_mor_applies_match_sequential(spark, tmp_path):
     sa, sb = delta_sids(t_seq), delta_sids(t_grp)
     assert len(sa) == len(sb) == 4
     for x, y in zip(sa, sb):
-        ra = sorted((r.repo, r.path, r.content_sha)
-                    for r in t_seq.read(snapshot_id=x).collect())
-        rb = sorted((r.repo, r.path, r.content_sha)
-                    for r in t_grp.read(snapshot_id=y).collect())
-        assert ra == rb, (x, y)
+        assert _sha_rows(t_seq, x) == _sha_rows(t_grp, y), (x, y)
+
+
+def test_grouped_cow_replay_writes_sort_cols_order(spark, tmp_path):
+    """A grouped copy-on-write replay clusters every base file by the
+    table's ``sort_cols``, as a single commit does."""
+    table = LakeTable.create(
+        spark, os.path.join(str(tmp_path), "lake"), key_cols=["repo", "path"],
+        num_buckets=4, sort_cols=["event_seq"],
+    )
+    CDCEngine(spark, table, default_registry()).replay(events_df(spark), num_batches=2)
+    files = [f for fl in table.current()["buckets"].values() for f in fl]
+    assert files
+    for f in files:
+        seqs = pq.read_table(f, columns=["event_seq"]).column("event_seq").to_pylist()
+        assert seqs == sorted(seqs), f
 
 
 def test_seed_table_shares_event_key_space(spark, tmp_path):

@@ -602,9 +602,10 @@ def test_driver_written_file_layout(spark, tmp_path, counted):
     assert len(counted) == 3
 
 
-def test_caller_job_group_and_description_survive(spark, tmp_path, counted):
+def test_caller_job_group_and_description_survive(spark, tmp_path, monkeypatch, counted):
     """The engine names its jobs but restores the caller's job group
-    and description (ingestbench attributes jobs by job group)."""
+    and description (ingestbench attributes jobs by job group), on the
+    driver path and on the Spark path (staging, stats and fold jobs)."""
     from tests.test_cdc_engine import events_df, make_engine
     from tests.test_fanout import SEQ, envelopes
 
@@ -615,9 +616,23 @@ def test_caller_job_group_and_description_survive(spark, tmp_path, counted):
     mixed = envelopes(events_df(spark, n_events=40, seed=3), table="repos").unionAll(
         envelopes(events_df(spark, n_events=30, seed=4), table="users"))
     routes = [TableRoute(r, make_engine(spark, os.path.join(tmp, r))) for r in ("repos", "users")]
+    named = []
+    real = cdc.job_description
+
+    def naming(spark, text):
+        named.append(text)
+        return real(spark, text)
+
+    monkeypatch.setattr(cdc, "job_description", naming)
     sc.setJobGroup("caller-group", "caller description")
     try:
         eng.apply_batch(parquet(spark, tmp, "a", [ev(1, 0, "r1", "a.py")]))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        eng.LOCAL_MAX_ROWS = 0
+        eng.apply_batch(parquet(spark, tmp, "b", [ev(2, 0, "r1", "b.py")]))
+        del eng.LOCAL_MAX_ROWS
+        assert named == [f"filters_spark: {job} t" for job in ("stage", "stats", "fold")]
         assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
         assert sc.getLocalProperty("spark.job.description") == "caller description"
         rep = fan_out_atomic(mixed, routes, os.path.join(tmp, "txn"), seq_expr=SEQ)
