@@ -50,7 +50,8 @@ from pyspark.sql.types import BooleanType, IntegerType, StructType
 
 from filters_spark.engine.evolution import SpecRegistry
 from filters_spark.engine.local import (
-    _INTEGRAL, PASSTHROUGH, apply_local, local_batch_plan, parquet_footers,
+    _INTEGRAL, PASSTHROUGH, Collected, apply_local, collect_batch, frame_plan,
+    parquet_footers,
 )
 from filters_spark.lake.fileio import write_parquet_local
 from filters_spark.lake.table import LakeTable, bucket_expr, lww_merge, watermark_str
@@ -698,14 +699,20 @@ class CDCEngine:
         ``audit_fn``) applies on the driver instead of through Spark
         staging — same results, one Spark job (engine/local.py).
 
+        ``events`` may also be a :class:`~filters_spark.engine.local.Collected`
+        batch without ``audit_fn``: one the fan-out front half already
+        collected to the driver, applied there as is.
+
         Raises ``ValueError`` for a non-integral ``event_seq``."""
-        _check_event_seq(events)
         t0 = time.time()
+        if isinstance(events, Collected):
+            return apply_local(self, events.table, events.snap, events.plan, t0)
+        _check_event_seq(events)
         snap = self.table.current()
         if audit_fn is None:
-            plan = local_batch_plan(self, events, snap)
+            plan = frame_plan(self, events, snap)
             if plan is not None:
-                return apply_local(self, events, snap, plan, t0)
+                return apply_local(self, collect_batch(self, events, plan), snap, plan, t0)
         scratch, schema = self._stage(events, snap)
         try:
             if not self.io.tree_has_suffix(scratch, ".parquet"):  # empty input
@@ -999,14 +1006,20 @@ class CDCEngine:
         the in-call applies) so recover_fanout's orphan sweep can
         target fan-out stages without touching a concurrent plain
         stager's in-flight scratch. A batch of at most
-        ``LOCAL_MAX_ROWS`` parquet rows stages on the driver
-        (engine/local.py) with the same handle and scratch layout."""
-        _check_event_seq(events)
+        ``LOCAL_MAX_ROWS`` parquet rows, or a
+        :class:`~filters_spark.engine.local.Collected` one (see
+        :meth:`apply_batch`), stages on the driver (engine/local.py) with
+        the same handle and scratch layout."""
         t0 = time.time()
+        if isinstance(events, Collected):
+            return apply_local(self, events.table, events.snap, events.plan, t0,
+                               wap_id=wap_id)
+        _check_event_seq(events)
         snap = self.table.current()
-        plan = local_batch_plan(self, events, snap)
+        plan = frame_plan(self, events, snap)
         if plan is not None:
-            return apply_local(self, events, snap, plan, t0, wap_id=wap_id)
+            return apply_local(self, collect_batch(self, events, plan), snap, plan, t0,
+                               wap_id=wap_id)
         scratch, schema = self._stage(events, snap, prefix="txn")
         try:
             if not self.io.tree_has_suffix(scratch, ".parquet"):  # empty input

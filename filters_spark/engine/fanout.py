@@ -10,13 +10,25 @@ a mixed envelope frame to per-table engines in ONE parse pass.
 
 Scale shape: the raw JSON is decoded ONCE (``parse_debezium`` with
 ``include_source=True`` — map-only native ``from_json``, union of all
-routes' payload fields) and written once to a parquet scratch
-partitioned by route index (``_route=i``; unrouted rows ``_route=-1``).
-The same write observes the batch's feed bounds and unrouted count
-(``DataFrame.observe``), so the gate runs no job of its own. Each
-route's slice is a read of its own partition directory, never a
-re-parse of the JSON, and its footers count its rows — a small slice
-then applies or stages on the driver (engine/local.py). Per-table applies
+routes' payload fields) in one Spark job, whose action also observes
+the batch's feed bounds and unrouted count (``DataFrame.observe``), so
+the gate runs no job of its own:
+
+- a parquet input whose footers hold at most the routes' summed
+  ``LOCAL_MAX_ROWS`` is collected with one ``toArrow()``, which also
+  evaluates each route's native chain parts and identity guards on its
+  own rows; the table is split by route on the driver, and each slice
+  applies or stages there (engine/local.py) without a collect of its
+  own. A slice that cannot (over its engine's ``LOCAL_MAX_ROWS``, an
+  engine the driver path refuses, an ``audit_fn`` under
+  :func:`fan_out_debezium`) is written to its scratch partition below
+  and applies through Spark. A two-route call of small slices runs
+  this one job: ``filters_spark: fan-out collect <table dir>``;
+- any other input is written once to a parquet scratch partitioned by
+  route index (``_route=i``; unrouted rows ``_route=-1``). Each route's
+  slice is a read of its own partition directory, never a re-parse of
+  the JSON, and its footers count its rows — a small slice then
+  applies or stages on the driver with one collect. Per-table applies
 are independent engines over independent tables — their watermarks,
 dead letters and commit chains never interact, so exactly-once holds
 per table exactly as in the single-table path (pinned in
@@ -28,9 +40,9 @@ is also the normal production setup — so the default COUNTS unrouted
 events per source table into the report and leaves policy to the
 caller; ``unrouted="raise"`` hard-fails, ``"ignore"`` skips the
 per-table count on streams known to be pre-filtered (Debezium's
-``table.include.list``). The per-table count is a job over the
-``_route=-1`` partition only, and runs only when the observed unrouted
-count is non-zero.
+``table.include.list``). The per-table count runs only when the
+observed unrouted count is non-zero: an Arrow ``group_by`` of the
+collected table, or a job over the ``_route=-1`` partition only.
 
 The reference library has no table or stream layer; this is north-rule
 engine surface (binlog tail → lake ingest).
@@ -43,11 +55,18 @@ import os
 from dataclasses import dataclass
 from typing import Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 from filters_spark.engine.cdc import CDCEngine
+from filters_spark.engine.local import (
+    Collected, _rows_at_most, local_batch_plan, parquet_footers, part_columns,
+)
+from filters_spark.lake.fileio import _scheme, write_parquet_local
 from filters_spark.lake.table import watermark_str
 from filters_spark.session import job_description
 
@@ -301,7 +320,8 @@ def fan_out_debezium(
     ledger and the engines' watermark dedupe.
     """
     slices, report, scratch = _parse_and_gate(
-        raw, routes, value_col, commit_expr, seq_expr, unrouted, track_feed
+        raw, routes, value_col, commit_expr, seq_expr, unrouted, track_feed,
+        audit_in_apply=True,
     )
     try:
         return _apply_routes(slices, routes, report)
@@ -416,27 +436,32 @@ def _parse_and_gate(
     seq_expr: Callable | None,
     unrouted: str,
     track_feed: bool,
+    audit_in_apply: bool = False,
 ):
     """The shared front half of every fan-out flavor: validate the
-    route topology, decode the mixed envelope stream ONCE into a
-    route-partitioned parquet scratch, refuse unorderable envelopes,
-    and count/raise on unrouted tables. Returns ``(slices, report,
-    scratch)``: one frame per route (a read of its ``_route=i``
-    partition) and the report with ``report["tables"]`` empty; the
-    caller removes ``scratch`` after the last apply."""
+    route topology, decode the mixed envelope stream ONCE, refuse
+    unorderable envelopes, and count/raise on unrouted tables. Returns
+    ``(slices, report, scratch)``: per route, a frame (a read of its
+    ``_route=i`` scratch partition) or a :class:`Collected` slice for
+    the driver path, and the report with ``report["tables"]`` empty;
+    the caller removes ``scratch`` after the last apply.
+
+    A parquet input whose footers hold at most the routes' summed
+    ``LOCAL_MAX_ROWS`` is decoded by one ``toArrow()`` that also
+    evaluates each driver-eligible route's native chain parts and
+    identity guards (:func:`_collect_routes`). Any other input is
+    written once to the route-partitioned scratch. ``audit_in_apply``:
+    a route's ``audit_fn`` runs inside its ``apply_batch``, which
+    audits only on the Spark path."""
     if unrouted not in ("count", "raise", "ignore"):
         raise ValueError(
             f"unrouted must be 'count', 'raise' or 'ignore', got {unrouted!r}"
         )
     _check_routes(routes)
     plan = _route_partitioned(raw, routes, value_col, commit_expr, seq_expr)
-    # Barrier = a parquet scratch write, NOT localCheckpoint: block-store
-    # materialization of the payload-bearing frame measured ~1.5x slower
-    # than the columnar write, and the partition directories give each
-    # route's slice its own files (and footer row counts). The gate's
-    # numbers are observed by the same write: NULL-op rows (the parse's
-    # deferred op filter) land in the NULL partition and count nowhere.
-    # The dir lives on the first route's table FileIO (DFS-safe).
+    # The gate's numbers are observed by the decode's one action:
+    # NULL-op rows (the parse's deferred op filter) get a NULL route
+    # and count nowhere.
     kept = F.col("op").isNotNull()
     wm = watermark_str(F.col("commit"), F.col("event_seq"))
     gate = Observation("fanout-gate")
@@ -452,17 +477,77 @@ def _parse_and_gate(
     import uuid as _uuid
 
     io = routes[0].engine.io
+    # The dir lives on the first route's table FileIO (DFS-safe).
     scratch = os.path.join(
         routes[0].engine.table.root, "_staging",
         f"fanout-parse-{_uuid.uuid4().hex}",
     )
-    with job_description(raw.sparkSession, "filters_spark: fan-out parse"):
-        observed.write.partitionBy("_route").parquet(scratch)
+    collected = None
+    if _scheme(scratch) is None and _rows_at_most(
+        parquet_footers(raw), sum(r.engine.LOCAL_MAX_ROWS for r in routes)
+    ):
+        collected = _collect_routes(observed, routes, audit_in_apply)
+    else:
+        # Barrier = a parquet scratch write, NOT localCheckpoint:
+        # block-store materialization of the payload-bearing frame
+        # measured ~1.5x slower than the columnar write, and the
+        # partition directories give each route's slice its own files
+        # (and footer row counts).
+        with job_description(raw.sparkSession, "filters_spark: fan-out parse"):
+            observed.write.partitionBy("_route").parquet(scratch)
     try:
-        return (*_gate(raw, routes, scratch, plan, gate.get, unrouted, track_feed), scratch)
+        return (
+            *_gate(raw, routes, scratch, plan, gate.get, unrouted, track_feed, collected),
+            scratch,
+        )
     except BaseException:
         io.rmtree(scratch)
         raise
+
+
+def _route_columns(r: TableRoute) -> list[str]:
+    return ["commit", "event_seq", "op", *r.fields]
+
+
+def _collect_routes(observed: DataFrame, routes: list[TableRoute], audit_in_apply: bool):
+    """The decoded, gate-observed frame as one Arrow table, plus per
+    route ``(snap, local_batch_plan, part prefixes)``, or None for a
+    route that does not stage on the driver. A part group (of a plan's
+    groups holding the route's ``schema_version``) reads its input on
+    the rows of the routes that share it only (``when(_route IN (...),
+    input)``), or unmasked when every route shares it (the mask costs
+    more than the unrouted rows it skips): routes with equal registries
+    and fields share their cached plan, so the JVM evaluates each group
+    once per row, and the projection stays small enough for the JIT (a
+    method over 8,000 bytecodes runs interpreted). Its columns are
+    named ``__p<k>`` + the part name. ``_route`` is a non-cheap, multiply-referenced alias
+    behind the observation, so the JSON is still lexed once."""
+    fields = {f.name: f for f in observed.schema.fields}
+    plans, shared = [], {}
+    for i, r in enumerate(routes):
+        schema = StructType([fields[c] for c in _route_columns(r)]) \
+            .add("schema_version", IntegerType(), False)
+        snap = r.engine.table.current()
+        lp = None if audit_in_apply and r.audit_fn else local_batch_plan(r.engine, schema, snap)
+        if lp is None:
+            plans.append(None)
+            continue
+        prefixes = []
+        for g in lp[1]:
+            if r.schema_version in g[0]:
+                if id(g) not in shared:
+                    shared[id(g)] = (len(shared), [], g)
+                k, members, _ = shared[id(g)]
+                members.append(i)
+                prefixes.append(f"__p{k}")
+        plans.append((snap, lp, prefixes))
+    parts = [c for k, members, g in shared.values()
+             for c in part_columns(g, F.col("_route").isin(members)
+                                   if len(members) < len(routes) else F.lit(True), f"__p{k}")]
+    frame = observed.select("*", *parts)
+    name = f"filters_spark: fan-out collect {os.path.basename(routes[0].engine.table.root)}"
+    with job_description(frame.sparkSession, name):
+        return frame.toArrow(), plans
 
 
 def _route_partitioned(raw, routes, value_col, commit_expr, seq_expr) -> DataFrame:
@@ -492,11 +577,15 @@ def _route_partitioned(raw, routes, value_col, commit_expr, seq_expr) -> DataFra
     return plan.withColumn("_route", route.otherwise(F.lit(-1)).cast("int"))
 
 
-def _gate(raw, routes, scratch, plan, seen, unrouted, track_feed):
+def _gate(raw, routes, scratch, plan, seen, unrouted, track_feed, collected=None):
     """Act on the observed gate numbers ``seen``; returns the route
     slices and the report. Every route partition is read with the
     parse's schema — an explicit schema, because a route without rows
-    gets an empty directory and a schema-less read of it would fail."""
+    gets an empty directory and a schema-less read of it would fail.
+    ``collected``: the :func:`_collect_routes` result; a route slice
+    then stages on the driver from it, or — an unplanned route or one
+    over its engine's ``LOCAL_MAX_ROWS`` — is written to its partition
+    from it."""
     spark = raw.sparkSession
     schema = StructType([f for f in plan.schema.fields if f.name != "_route"])
     io = routes[0].engine.io
@@ -517,28 +606,44 @@ def _gate(raw, routes, scratch, plan, seen, unrouted, track_feed):
             )
         report["feed_to"] = seen["wm"]  # None on an empty batch
         report["feed_from"] = seen["wm_min"]
+    tbl = None if collected is None else collected[0]
+    route = None if tbl is None else tbl.column("_route")
     if unrouted != "ignore" and seen["n_unrouted"]:
-        misses = part(-1).groupBy("_src_db", "_src_table").count().collect()
-        report["unrouted"] = {
-            f"{row['_src_db'] or ''}.{row['_src_table'] or ''}": row["count"]
-            for row in misses
-        }
+        if tbl is None:
+            misses = map(tuple, part(-1).groupBy("_src_db", "_src_table").count().collect())
+        else:
+            counts = tbl.filter(pc.equal(route, -1)) \
+                .group_by(["_src_db", "_src_table"]).aggregate([([], "count_all")])
+            misses = zip(*(counts.column(c).to_pylist()
+                           for c in ("_src_db", "_src_table", "count_all")))
+        report["unrouted"] = {f"{db or ''}.{t or ''}": n for db, t, n in misses}
         if unrouted == "raise":
             raise ValueError(
                 f"unrouted source tables in the batch: {report['unrouted']} "
                 "— add routes, or pass unrouted='count'/'ignore' if the "
                 "drop is intended"
             )
-    slices = [
-        part(i).select(
-            "commit",
-            "event_seq",
-            "op",
-            *r.fields,
-            F.lit(r.schema_version).alias("schema_version"),
-        )
-        for i, r in enumerate(routes)
-    ]
+    slices = []
+    for i, r in enumerate(routes):
+        if tbl is not None:
+            rows = tbl.filter(pc.equal(route, i))
+            planned = collected[1][i]
+            if planned is not None and rows.num_rows <= r.engine.LOCAL_MAX_ROWS:
+                snap, lp, prefixes = planned
+                out = rows.select(_route_columns(r)).append_column(
+                    "schema_version", pa.array(np.full(rows.num_rows, r.schema_version, np.int32))
+                )
+                for name in rows.column_names:
+                    for p in prefixes:
+                        if name.startswith(p + "__"):
+                            out = out.append_column(name[len(p):], rows.column(name))
+                slices.append(Collected(out, snap, lp))
+                continue
+            if rows.num_rows:
+                write_parquet_local(rows.select(schema.names), os.path.join(scratch, f"_route={i}"))
+        slices.append(part(i).select(
+            *_route_columns(r), F.lit(r.schema_version).alias("schema_version"),
+        ))
     return slices, report
 
 

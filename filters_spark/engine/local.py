@@ -3,15 +3,21 @@
 A small batch spends most of its Spark apply in fixed cost — the
 validate plan's analysis, a staging job, a stats aggregate, a merge
 write — not in work on its rows. Below ``CDCEngine.LOCAL_MAX_ROWS``
-input rows the batch is collected once with ``toArrow()`` and applied
-or staged here on the driver (F1 Query's centralized execution for
-small work) with the same plan, kernels and commit as the Spark path:
+input rows the batch is collected once with ``toArrow()`` (or arrives
+collected, as a :class:`Collected` fan-out route slice) and applied or
+staged here on the driver (F1 Query's centralized execution for small
+work) with the same plan, kernels and commit as the Spark path:
 
 - validation runs the engine's per-version grouping plan
   (``CDCEngine._validation_groups``): a chain with a native form is
   evaluated by the collect with the Spark path's native expressions,
   any other chain through :func:`kernel_runner` — the body of the Spark
-  path's pandas UDF — over its rows handed over with ``to_pandas()``;
+  path's pandas UDF — over its rows handed over with ``to_pandas()``.
+  As on the Spark path (``compile_field``), the collect also evaluates
+  such a chain's identity guard (``compile_identity_guard``), and the
+  kernel runs only on the rows the guard rejects: a row it passes keeps
+  its input, error-free. Each group's parts read its input only on the
+  rows of its versions;
 - ``_bucket`` (:func:`buckets_of`), ``_wm``, watermark survival and the
   batch stats follow the Spark expressions, NULLs included;
 - all bookkeeping around the kernels — merging native and kernel
@@ -51,14 +57,16 @@ import json
 import os
 import threading
 import uuid
+from typing import NamedTuple
 from urllib.parse import unquote
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from filters_spark.lake.fileio import _scheme, write_parquet_local
 from filters_spark.lake.xxh import buckets_of
@@ -164,18 +172,37 @@ def _sources(engine, columns: list[str]) -> list[str]:
     return sorted(used)
 
 
-def local_batch_plan(engine, events: DataFrame, snap: dict) -> tuple | None:
-    """``(staged schema, native part columns)`` of ``events`` when the
-    batch can be applied on the driver, else None. Runs no Spark job:
-    the row count comes from the input files' parquet footers.
+class Collected(NamedTuple):
+    """A batch its caller already collected to the driver (the fan-out
+    front half): ``table`` holds the columns :func:`collect_batch`
+    would, ``plan`` is :func:`local_batch_plan` of its input schema
+    against ``snap``, the snapshot it applies over."""
+
+    table: pa.Table
+    snap: dict
+    plan: tuple
+
+
+def frame_plan(engine, events: DataFrame, snap: dict) -> tuple | None:
+    """:func:`local_batch_plan` of ``events`` when its input files'
+    parquet footers hold at most ``LOCAL_MAX_ROWS`` rows, else None.
+    Runs no Spark job."""
+    if not _rows_at_most(parquet_footers(events), engine.LOCAL_MAX_ROWS):
+        return None
+    return local_batch_plan(engine, events.schema, snap)
+
+
+def local_batch_plan(engine, schema: StructType, snap: dict) -> tuple | None:
+    """``(staged schema, native part columns)`` for a batch of input
+    ``schema`` when it can be applied on the driver, else None. Runs no
+    Spark job; the caller bounds the row count.
 
     Driver-eligible: an engine without ref checks or CHECK constraints,
-    scheme-less table and dead-letter dirs, parquet input of at most
-    ``LOCAL_MAX_ROWS`` rows, a string ``commit``, integral
-    ``schema_version`` (``event_seq`` is integral for every batch: the
-    engine checks it before planning), source columns whose string cast
-    Arrow spells like Spark, and string-typed validated fields (the
-    kernels' output type). Copy-on-write also needs :func:`_cow_fits`."""
+    scheme-less table and dead-letter dirs, a string ``commit``,
+    integral ``event_seq`` and ``schema_version``, source columns whose
+    string cast Arrow spells like Spark, and string-typed validated
+    fields (the kernels' output type). Copy-on-write also needs
+    :func:`_cow_fits`. The parts are :func:`_native_parts`'s."""
     cow = engine.write_mode == "cow"
     if (
         engine.ref_checks
@@ -184,10 +211,11 @@ def local_batch_plan(engine, events: DataFrame, snap: dict) -> tuple | None:
         or _scheme(engine.dead_letter_dir) is not None
     ):
         return None
-    types = {f.name: f.dataType.simpleString() for f in events.schema.fields}
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
     if (
         not set(PASSTHROUGH) <= types.keys()
         or types["commit"] != "string"
+        or types["event_seq"] not in _INTEGRAL
         or types["schema_version"] not in _INTEGRAL
         or any(types[c] not in _CASTABLE for c in _sources(engine, list(types)))
     ):
@@ -196,35 +224,35 @@ def local_batch_plan(engine, events: DataFrame, snap: dict) -> tuple | None:
         for chain in spec.field_specs.values():
             if FieldSpec.of(chain).dtype.split("(")[0].lower() != "string":
                 return None
-    if not _rows_at_most(parquet_footers(events), engine.LOCAL_MAX_ROWS):
-        return None
     if cow and not _cow_fits(engine, snap):
         return None
     # the Spark path's staged schema, analyzed once per (registry,
-    # input schema) in the process: native chains may change a field's
-    # type, and the driver writes exactly the types the Spark path would
+    # input schema) in the process over an empty frame (no job): native
+    # chains may change a field's type, and the driver writes exactly
+    # the types the Spark path would
     reg = engine.registry
     key = json.dumps(
         [reg.canonical_columns,
          [[v, s.field_specs, s.renames] for v, s in sorted(reg.versions.items())],
-         events.schema.json()],
+         schema.json()],
         sort_keys=True, default=repr,
     )
     plan = _PLANS.get(key)
     if plan is None:
-        plan = engine._staged_frame(events, snap).schema, _native_parts(engine, events)
+        empty = engine.spark.createDataFrame([], schema)
+        plan = engine._staged_frame(empty, snap).schema, _native_parts(engine, schema)
         with _PLANS_LOCK:
             if len(_PLANS) >= _PLANS_MAX:
                 _PLANS.pop(next(iter(_PLANS)))
             _PLANS[key] = plan
-    schema = plan[0]
+    staged = plan[0]
     for field, groups in engine._validation_groups(list(types)).items():
-        if schema[field].dataType.simpleString() != "string":
+        if staged[field].dataType.simpleString() != "string":
             return None
         # Spark's CASE coercion types a raw column like its fallback
         # source; the driver casts its strings back only when every
         # source has that type, so the cast is a round trip
-        raw = schema[f"_raw_{field}"].dataType.simpleString()
+        raw = staged[f"_raw_{field}"].dataType.simpleString()
         if raw != "string" and any(
             src is not None and types[src] != raw for _, _, src in groups
         ):
@@ -232,36 +260,60 @@ def local_batch_plan(engine, events: DataFrame, snap: dict) -> tuple | None:
     return plan
 
 
-def _native_parts(engine, events: DataFrame) -> list:
-    """The Spark path's native chain parts — per (field, group), the
-    final transform and the first-error struct — as columns named by
-    :func:`_native_names`, for the collect to evaluate in the JVM: the
-    driver then runs only the chains that need a kernel."""
-    from filters_spark.functions.native import compile_native_chain
+def _native_parts(engine, schema: StructType) -> list[tuple]:
+    """The Spark path's per-row JVM work, per (field, group) with a
+    chain: ``(versions, input, build, built)``, where ``build(col)``
+    gives ``(name, Column)`` pairs named by :func:`_native_names` — a
+    native chain's final transform and first-error struct, or a kernel
+    chain's identity guard (``compile_identity_guard``, as
+    ``compile_field`` applies it) — for the collect to evaluate
+    (:func:`part_columns`, which memoizes them in ``built``). The
+    driver then runs a kernel only over the rows its guard rejects."""
+    from filters_spark.functions.native import compile_identity_guard, compile_native_chain
 
-    types = dict(events.dtypes)
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
     out = []
-    for field, groups in engine._validation_groups(events.columns).items():
-        for gi, (_, chain_spec, src) in enumerate(groups):
-            if chain_spec is None or FieldSpec.of(chain_spec).mode not in ("auto", "native"):
+    for field, groups in engine._validation_groups(list(types)).items():
+        for gi, (versions, chain_spec, src) in enumerate(groups):
+            if chain_spec is None:
                 continue
-            parts = compile_native_chain(
-                field, FieldSpec.of(chain_spec).chain_spec, input_type="string", parts=True
-            )
-            if parts is None:
-                continue
+            spec = FieldSpec.of(chain_spec)
             if src is None:
                 in_col = F.lit(None).cast("string")
             else:
                 in_col = F.col(src) if types[src] == "string" else F.col(src).cast("string")
-            t_name, e_name = _native_names(field, gi)
-            value, err = parts(in_col)
-            out += [value.alias(t_name), err.alias(e_name)]
+            t_name, e_name, g_name = _native_names(field, gi)
+            parts = None
+            if spec.mode in ("auto", "native"):
+                parts = compile_native_chain(
+                    field, spec.chain_spec, input_type="string", parts=True
+                )
+            if parts is not None:
+                out.append((versions, in_col,
+                            lambda c, p=parts, n=(t_name, e_name): list(zip(n, p(c))), {}))
+                continue
+            guard = compile_identity_guard(spec.chain_spec)
+            if guard is not None:
+                out.append((versions, in_col, lambda c, g=guard, n=g_name: [(n, g(c))], {}))
     return out
 
 
-def _native_names(field: str, gi: int) -> tuple[str, str]:
-    return f"__nat_t_{field}_{gi}", f"__nat_e_{field}_{gi}"
+def part_columns(group: tuple, mask: Column, prefix: str = "") -> list[Column]:
+    """The part columns of one :func:`_native_parts` ``group``, named
+    ``prefix`` + part name, reading its input only where ``mask`` holds
+    and NULL elsewhere: :func:`_validate` reads a group's parts on its
+    own rows only, and a NULL costs the JVM next to nothing."""
+    _, in_col, build, built = group
+    # building a chain's columns costs hundreds of JVM calls: once per
+    # distinct mask in the process
+    key = str(mask)
+    if key not in built:
+        built[key] = build(F.when(mask, in_col))
+    return [c.alias(prefix + n) for n, c in built[key]]
+
+
+def _native_names(field: str, gi: int) -> tuple[str, str, str]:
+    return f"__nat_t_{field}_{gi}", f"__nat_e_{field}_{gi}", f"__nat_g_{field}_{gi}"
 
 
 def _validate(engine, tbl: pa.Table, errors_type: pa.DataType) -> dict[str, pa.Array]:
@@ -291,7 +343,7 @@ def _validate(engine, tbl: pa.Table, errors_type: pa.DataType) -> dict[str, pa.A
             if chain_spec is None:  # field not validated in these versions
                 values = pc.if_else(rows, inp, values)
                 continue
-            t_name, e_name = _native_names(field, gi)
+            t_name, e_name, g_name = _native_names(field, gi)
             if e_name in col:
                 err = col[e_name]
                 failed = pc.and_(rows, pc.is_valid(err))
@@ -299,10 +351,15 @@ def _validate(engine, tbl: pa.Table, errors_type: pa.DataType) -> dict[str, pa.A
                 err_rows.append(pc.indices_nonzero(failed))
                 err_items.append(err.filter(failed).cast(error_type))
                 continue
-            res = kernel_runner(field, FieldSpec.of(chain_spec))(inp.filter(rows).to_pandas())
-            values = pc.replace_with_mask(values, rows, pa.array(res["value"], pa.string()))
+            # a row its identity guard passes keeps its input, error-free
+            values = pc.if_else(rows, inp, values)
+            run = rows if g_name not in col else pc.and_(rows, pc.invert(col[g_name]))
+            if not pc.any(run).as_py():
+                continue
+            res = kernel_runner(field, FieldSpec.of(chain_spec))(inp.filter(run).to_pandas())
+            values = pc.replace_with_mask(values, run, pa.array(res["value"], pa.string()))
             found = pa.array(res["errors"], errors_type)
-            err_rows.append(pc.indices_nonzero(rows).take(pc.list_parent_indices(found)))
+            err_rows.append(pc.indices_nonzero(run).take(pc.list_parent_indices(found)))
             err_items.append(pc.list_flatten(found))
         out[field] = values
         out[f"_raw_{field}"] = raws
@@ -350,25 +407,30 @@ def _key_starts(tbl: pa.Table, keys: list[str]) -> pa.Array:
     return pa.concat_arrays([pa.array([True]), new])
 
 
-def _collect(frame: DataFrame, table_root: str) -> pa.Table:
-    """``frame`` as one Arrow table: a ``toArrow()`` job, or none for a
-    frame without input files (a file scan of an empty directory)."""
+def collect_batch(engine, events: DataFrame, plan: tuple) -> pa.Table:
+    """The columns :func:`apply_local` reads of ``events`` — passthrough,
+    sources and the plan's part columns — as one Arrow table: a
+    ``toArrow()`` job, or none for a frame without input files (a file
+    scan of an empty directory)."""
+    sv = F.col("schema_version")
+    frame = events.select(*PASSTHROUGH, *_sources(engine, events.columns),
+                          *[c for g in plan[1] for c in part_columns(g, sv.isin(g[0]))])
     if frame.inputFiles():
-        with job_description(frame.sparkSession,
-                             f"filters_spark: local collect {os.path.basename(table_root)}"):
+        with job_description(frame.sparkSession, "filters_spark: local collect "
+                             f"{os.path.basename(engine.table.root)}"):
             return frame.toArrow()
     return to_arrow_schema(frame.schema).empty_table()
 
 
-def apply_local(engine, events: DataFrame, snap: dict, plan: tuple, t0: float,
+def apply_local(engine, tbl: pa.Table, snap: dict, plan: tuple, t0: float,
                 wap_id: str | None = None):
-    """Apply one driver-eligible batch (``plan``: :func:`local_batch_plan`);
-    the metrics equal ``CDCEngine.apply_batch``'s on the Spark path.
-    With ``wap_id`` the batch is staged instead and the
-    :class:`StagedBatch` equals ``CDCEngine.stage_batch``'s."""
-    schema, native = plan
-    tbl = _collect(events.select(*PASSTHROUGH, *_sources(engine, events.columns), *native),
-                   engine.table.root)
+    """Apply one driver-eligible batch, collected to ``tbl`` with the
+    columns :func:`collect_batch` selects (``plan``:
+    :func:`local_batch_plan` of its input schema); the metrics equal
+    ``CDCEngine.apply_batch``'s on the Spark path. With ``wap_id`` the
+    batch is staged instead and the :class:`StagedBatch` equals
+    ``CDCEngine.stage_batch``'s."""
+    schema = plan[0]
     if tbl.num_rows == 0:
         if wap_id is not None:
             return engine._empty_stage(snap, t0)

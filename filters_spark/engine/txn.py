@@ -31,11 +31,15 @@ in-flight batch; stages share manifests with their parent snapshots
 over the non-atomic path — the merges are the same jobs.
 
 Spark jobs per call: the shared front half (fanout._parse_and_gate)
-writes the decode once, partitioned by route, and observes the feed
-bounds and unrouted count in that write; a route slice of at most
-``CDCEngine.LOCAL_MAX_ROWS`` rows then stages on the driver with one
-``toArrow()`` (engine/local.py). A two-route batch of small slices
-runs three jobs; decide and publish are metadata-only.
+decodes the envelopes once and observes the feed bounds and unrouted
+count in that job. A parquet input of at most the routes' summed
+``CDCEngine.LOCAL_MAX_ROWS`` rows is that one ``toArrow()``, and each
+route slice of at most its engine's ``LOCAL_MAX_ROWS`` rows stages on
+the driver from it (engine/local.py): a two-route batch of small
+slices runs one job. Any other input is written once, partitioned by
+route, and a small slice stages on the driver with one ``toArrow()``
+of its partition (three jobs for two routes). Decide and publish are
+metadata-only.
 
 Assumptions (documented, checked where cheap):
 
@@ -144,9 +148,9 @@ def fan_out_atomic(
         # stage the routes CONCURRENTLY: stages are independent
         # jobs over independent tables (the decision and the publishes
         # stay strictly sequential below). A small route slice stages on
-        # the driver (one toArrow() of its _route=i partition); a large
-        # one runs its Spark stage, whose serial driver phases the
-        # sibling route's stage back-fills.
+        # the driver (from the front half's collect, or one toArrow() of
+        # its _route=i partition); a large one runs its Spark stage,
+        # whose serial driver phases the sibling route's stage back-fills.
         if len(routes) > 1:
             from concurrent.futures import ThreadPoolExecutor
 

@@ -538,28 +538,25 @@ class UnicodeK(Kernel):
             return None, self.err("wrong_encoding", encoding=self.encoding)
 
     def _normalize_vec(self, texts: pd.Series) -> pd.Series:
-        arr = pa.array(texts.tolist(), type=pa.string())
-        arr = pc.replace_substring_regex(arr, pattern=_NPR_RE2, replacement="")
-        arr = pc.replace_substring(arr, pattern="\r\n", replacement="\n")
-        arr = pc.replace_substring(arr, pattern="\r", replacement="\n")
-        # ASCII strings: the RE2 pass above IS the reference semantics
-        # (with \x0b excluded from the deletion class, see _NPR_RE2)
-        # and ASCII is NFC by construction — zero per-element Python on
-        # the code-corpus hot path (str.isascii is a cheap C flag
-        # check). Non-ASCII strings are recomputed from the ORIGINAL
-        # via the scalar reference path: RE2's deletion set diverges
-        # from Python regex outside ASCII in BOTH directions (keeps
-        # unassigned Cn like U+18DF3, deletes NEL U+0085 that the
-        # reference keeps as whitespace), so neither the RE2 output nor
-        # a composed sweep over it is trustworthy there.
-        out = []
-        for orig, fast in zip(texts.tolist(), arr.to_pylist()):
-            if orig is None:
-                out.append(None)
-            elif orig.isascii():
-                out.append(fast)
-            else:
-                out.append(self._normalize_one(orig))
+        # ASCII strings: one RE2 pass IS the reference semantics (with
+        # \x0b excluded from the deletion class, see _NPR_RE2) and ASCII
+        # is NFC by construction — zero per-element Python on the
+        # code-corpus hot path (str.isascii is a cheap C flag check).
+        # Non-ASCII strings take the scalar reference path: RE2's
+        # deletion set diverges from Python regex outside ASCII in BOTH
+        # directions (keeps unassigned Cn like U+18DF3, deletes NEL
+        # U+0085 that the reference keeps as whitespace), so they never
+        # enter the Arrow pass.
+        vals = texts.tolist()
+        at = [i for i, v in enumerate(vals) if v is not None and v.isascii()]
+        out = [None if v is None or v.isascii() else self._normalize_one(v) for v in vals]
+        if at:
+            arr = pa.array([vals[i] for i in at], type=pa.string())
+            arr = pc.replace_substring_regex(arr, pattern=_NPR_RE2, replacement="")
+            arr = pc.replace_substring(arr, pattern="\r\n", replacement="\n")
+            arr = pc.replace_substring(arr, pattern="\r", replacement="\n")
+            for i, v in zip(at, arr.to_pylist()):
+                out[i] = v
         return _obj(out, texts.index)
 
     def _normalize_one(self, s: str) -> str:

@@ -15,11 +15,12 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
 import filters_spark.engine.cdc as cdc
+import filters_spark.engine.fanout as fanout
 import filters_spark.engine.local as local
 from filters_spark.engine.cdc import CDCEngine
 from filters_spark.engine.defaults import default_registry
 from filters_spark.engine.evolution import VersionSpec
-from filters_spark.engine.fanout import TableRoute, fan_out_debezium, feed_positions
+from filters_spark.engine.fanout import TableRoute, fan_out_debezium, feed_positions, route_key
 from filters_spark.engine.txn import fan_out_atomic
 from filters_spark.lake.table import LakeTable
 from filters_spark.sources.datagen import gen_events
@@ -228,6 +229,34 @@ def test_datagen_unicode_hazards(spark, tmp_path, counted):
     ]
     got = assert_parity(spark, str(tmp_path), batches, counted)
     assert got["dead"] and got["read"]
+
+
+def test_identity_guard_edges_reach_the_kernel(spark, tmp_path, monkeypatch, counted):
+    """The content chain's identity guard (non-empty printable ASCII,
+    tab and newline) decides which rows the driver hands the kernel,
+    as it does on the Spark path: values on both sides of each guard
+    edge land the same through both paths, and the kernel sees exactly
+    the values the guard rejects."""
+    edges = ["plain", "tab\there", "nl\nhere", "cr\rhere", "crlf\r\nhere", "vt\x0bhere",
+             "del\x7fhere", "nel\u0085here", "nbsp\u00a0here", "e\u0301", "", None]
+    guarded = {"plain", "tab\there", "nl\nhere"}
+    seen = []
+    real = local.kernel_runner
+
+    def spy(field, spec):
+        run = real(field, spec)
+
+        def counted_run(vals):
+            seen.extend(vals.tolist())
+            return run(vals)
+
+        return counted_run
+
+    monkeypatch.setattr(local, "kernel_runner", spy)
+    rows = [ev(1, i, "r1", f"p{i}.py", content=v) for i, v in enumerate(edges)]
+    got = assert_parity(spark, str(tmp_path), [rows], counted)
+    assert sorted(seen, key=repr) == sorted((v for v in edges if v not in guarded), key=repr)
+    assert got["metrics"][0]["applied"] + got["metrics"][0]["dead_lettered"] == len(edges)
 
 
 def test_mixed_dead_letters_read_and_retry_as_one_table(spark, tmp_path, counted):
@@ -499,6 +528,195 @@ def test_fan_out_atomic_runs_at_most_three_jobs(spark, tmp_path, counted):
     assert rep["txn"] == "committed" and rep["feed_to"] is not None
     assert len(counted) == 2
     assert jobs <= 1 + len(routes), jobs
+
+
+def _dbz(db, table, file_no, pos, repo, path, op="c", content="x = 1", lang="py") -> str:
+    """One Debezium envelope (schemas disabled) as its JSON string."""
+    image = {"repo": repo, "path": path, "lang": lang, "content": content}
+    return json.dumps({
+        "before": image if op == "d" else None,
+        "after": None if op == "d" else image,
+        "source": {"db": db, "table": table, "file": f"mysql-bin.{file_no:06d}",
+                   "pos": pos, "row": 0},
+        "op": op,
+    })
+
+
+def _feed(n, table, db="d", file_no=1) -> list[str]:
+    """``n`` envelopes of one table: inserts, updates and deletes over
+    a few keys, one dead letter (``cobol``) in nine."""
+    return [
+        _dbz(db, table, file_no, i, f"r{i % 5}", f"p{i % 11}.py",
+             op="cud"[i % 3] if i > 2 else "c", content=f"{table} v{i}",
+             lang="cobol" if i % 9 == 4 else "py")
+        for i in range(n)
+    ]
+
+
+def _wire(spark, tmp, name, values):
+    """``values`` as one parquet file of envelope strings (``value``)."""
+    path = os.path.join(tmp, "wire", name)
+    os.makedirs(path)
+    pq.write_table(pa.table({"value": pa.array(values, pa.string())}),
+                   os.path.join(path, "part-0.parquet"))
+    return spark.read.parquet(path)
+
+
+def _front_halves(spark, tmp, raw, spec, counted, monkeypatch, flavor="plain",
+                  unrouted="count", local_caps=()):
+    """Applies the envelope batch ``raw`` (a frame, or one per path)
+    through both fan-out front halves to twin tables — the one-collect
+    front half with driver stages (``local``) and the scratch write with
+    Spark stages (``LOCAL_MAX_ROWS = 0`` twins) — and asserts that
+    everything a caller can observe is equal: the report or the error,
+    the tables, dead letters, lineage and feed ledgers. ``spec``: one
+    ``(table, db, write mode)`` per route; ``local_caps``: per route, a
+    ``LOCAL_MAX_ROWS`` for the local twin (None keeps the default).
+    Returns each twin's observations, with ``collects`` (front halves
+    that collected) and ``driver_stages``."""
+    collects = []
+    real = fanout._collect_routes
+    monkeypatch.setattr(fanout, "_collect_routes",
+                        lambda *a: collects.append(1) or real(*a))
+    eng = [twins(spark, os.path.join(tmp, f"{t}-{k}"), mode=mode)
+           for k, (t, _, mode) in enumerate(spec)]
+    got = {}
+    for path in ("spark", "local"):
+        engines = [e[path] for e in eng]
+        for e, cap in zip(engines, local_caps):
+            if path == "local" and cap is not None:
+                e.LOCAL_MAX_ROWS = cap
+        routes = [TableRoute(t, e, db=db) for (t, db, _), e in zip(spec, engines)]
+        frame = raw[path] if isinstance(raw, dict) else raw
+        c0, s0 = len(collects), len(counted)
+        try:
+            if flavor == "plain":
+                rep, err = fan_out_debezium(frame, routes, unrouted=unrouted), None
+            else:
+                rep, err = fan_out_atomic(frame, routes, os.path.join(tmp, f"txn-{path}"),
+                                          unrouted=unrouted, txn_id="t1"), None
+        except ValueError as exc:
+            rep, err = {"tables": {}}, str(exc)
+        tables = rep.pop("tables")
+        got[path] = {
+            "error": err,
+            "report": rep,
+            "feeds": [feed_positions(e.table) for e in engines],
+            "tables": [observe(e, [tables[route_key(r)]] if tables else [])
+                       for r, e in zip(routes, engines)],
+            "collects": len(collects) - c0,
+            "driver_stages": len(counted) - s0,
+        }
+    assert got["spark"]["collects"] == 0
+    for k in ("error", "report", "feeds", "tables"):
+        assert got["local"][k] == got["spark"][k], k
+    return got
+
+
+@pytest.mark.parametrize("flavor", ["plain", "atomic"])
+def test_front_halves_route_dbs_unrouted_and_malformed(spark, tmp_path, monkeypatch,
+                                                      counted, flavor):
+    """db-qualified and db-less routes of one table name, an unrouted
+    table (counted), NULL-op and malformed envelopes and NULL values:
+    the collect front half lands what the scratch write does."""
+    tmp = str(tmp_path)
+    values = (
+        _feed(20, "repos", db="d1") + _feed(15, "repos", db="d2", file_no=2)
+        + _feed(12, "users") + _feed(4, "orders", file_no=3)
+        + [_dbz("d", "users", 4, 1, "r1", "t.py", op="t"),   # truncate: NULL op
+           _dbz("d", "users", 4, 2, "r1", "m.py", op="m"),   # message: NULL op
+           "not json", '{"foo": 1}', '{"op": null}', None]
+    )
+    spec = [("repos", "d1", "mor"), ("repos", None, "cow"), ("users", None, "mor")]
+    both = _front_halves(spark, tmp, _wire(spark, tmp, "mixed", values), spec, counted,
+                         monkeypatch, flavor=flavor)
+    got = both["local"]
+    assert both["spark"]["driver_stages"] == 0
+    assert got["collects"] == 1 and got["driver_stages"] == 3
+    assert got["report"]["unrouted"] == {"d.orders": 4}
+    assert all(t["read"] and t["dead"] for t in got["tables"])
+
+
+def test_front_halves_refuse_the_same_batches(spark, tmp_path, monkeypatch, counted):
+    """``unrouted="raise"`` and an envelope without a derivable
+    ordering fail the same way on both front halves, before any table
+    is touched."""
+    tmp = str(tmp_path)
+    spec = [("repos", None, "mor")]
+    unrouted = _wire(spark, tmp, "unrouted", _feed(6, "repos") + _feed(2, "orders"))
+    got = _front_halves(spark, tmp, unrouted, spec, counted, monkeypatch,
+                        unrouted="raise")["local"]
+    assert "unrouted source tables" in got["error"] and got["collects"] == 1
+    unordered = json.loads(_dbz("d", "repos", 1, 9, "r9", "x.py"))
+    del unordered["source"]["pos"]
+    bad = _wire(spark, tmp, "unordered", _feed(6, "repos") + [json.dumps(unordered)])
+    got = _front_halves(spark, os.path.join(tmp, "b"), bad, spec, counted, monkeypatch,
+                        flavor="atomic")["local"]
+    assert "1 of 7 envelopes have no derivable" in got["error"]
+    assert got["tables"][0]["snapshot"] == 0 and got["driver_stages"] == 0
+
+
+def test_front_halves_empty_batch_and_slice_over_local_max_rows(spark, tmp_path,
+                                                                 monkeypatch, counted):
+    """An empty batch commits trivially on both front halves. A route
+    slice over its engine's LOCAL_MAX_ROWS is written to its scratch
+    partition from the collected table and stages through Spark, while
+    its sibling stages on the driver; unrouted="ignore" counts nothing."""
+    tmp = str(tmp_path)
+    spec = [("repos", None, "mor"), ("users", None, "cow")]
+    empty = {"spark": spark.createDataFrame([], "value string"),
+             "local": _wire(spark, tmp, "empty", [])}
+    got = _front_halves(spark, tmp, empty, spec, counted, monkeypatch, flavor="atomic")["local"]
+    assert got["report"]["txn"] == "committed" and got["report"]["feed_to"] is None
+    assert got["collects"] == 1 and got["driver_stages"] == 2
+    raw = _wire(spark, tmp, "mixed", _feed(20, "repos") + _feed(8, "users", file_no=2)
+                + _feed(3, "orders", file_no=3))
+    both = _front_halves(spark, os.path.join(tmp, "b"), raw, spec, counted, monkeypatch,
+                         flavor="atomic", unrouted="ignore", local_caps=(5, None))
+    got = both["local"]
+    assert both["spark"]["driver_stages"] == 0
+    assert got["collects"] == 1 and got["driver_stages"] == 1
+    assert got["report"]["unrouted"] == {}
+    assert got["tables"][0]["read"] and got["tables"][1]["read"]
+
+
+@pytest.mark.parametrize("flavor", ["plain", "atomic"])
+def test_small_parquet_fan_out_runs_one_job_and_lexes_once(spark, tmp_path, monkeypatch,
+                                                           counted, flavor):
+    """A two-route parquet envelope input under the routes' summed
+    LOCAL_MAX_ROWS: one named Spark job per call — the collect, which
+    also observes the gate — whose plan decodes each envelope once."""
+    tmp = str(tmp_path)
+    raw = _wire(spark, tmp, "mixed", _feed(40, "repos") + _feed(30, "users", file_no=2))
+    routes = [
+        TableRoute(t, CDCEngine(spark, LakeTable.create(
+            spark, os.path.join(tmp, t), key_cols=["repo", "path"], num_buckets=4,
+        ), default_registry(), write_mode="mor"))
+        for t in ("repos", "users")
+    ]
+    named, plans = [], []
+    real_name, real_arrow = fanout.job_description, type(raw).toArrow
+
+    def naming(spark, text):
+        named.append(text)
+        return real_name(spark, text)
+
+    def to_arrow(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_arrow(df)
+
+    monkeypatch.setattr(fanout, "job_description", naming)
+    monkeypatch.setattr(type(raw), "toArrow", to_arrow)
+    if flavor == "plain":
+        rep, jobs = _jobs(spark, lambda: fan_out_debezium(raw, routes))
+    else:
+        rep, jobs = _jobs(spark, lambda: fan_out_atomic(raw, routes, os.path.join(tmp, "txn")))
+        assert rep["txn"] == "committed"
+    assert jobs == 1, jobs
+    assert named == ["filters_spark: fan-out collect repos"]
+    assert len(plans) == 1
+    assert plans[0].count("from_json") + plans[0].count("JsonToStructs") == 1
+    assert len(counted) == 2 and rep["feed_to"] is not None
 
 
 # --- paths, watermark edge cases, file layout, job names -------------------
