@@ -700,12 +700,15 @@ class CDCEngine:
         staging — same results, one Spark job (engine/local.py).
 
         ``events`` may also be a :class:`~filters_spark.engine.local.Collected`
-        batch without ``audit_fn``: one the fan-out front half already
-        collected to the driver, applied there as is.
+        batch: one the fan-out front half already collected to the
+        driver, applied there as is. The driver path does not audit, so
+        a ``Collected`` batch with ``audit_fn`` raises ``ValueError``.
 
         Raises ``ValueError`` for a non-integral ``event_seq``."""
         t0 = time.time()
         if isinstance(events, Collected):
+            if audit_fn is not None:
+                raise ValueError("a Collected batch cannot be audited: pass the events as a DataFrame")
             return apply_local(self, events.table, events.snap, events.plan, t0)
         _check_event_seq(events)
         snap = self.table.current()

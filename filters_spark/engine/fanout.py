@@ -515,8 +515,7 @@ def _collect_routes(observed: DataFrame, routes: list[TableRoute], audit_in_appl
     route that does not stage on the driver. A part group (of a plan's
     groups holding the route's ``schema_version``) reads its input on
     the rows of the routes that share it only (``when(_route IN (...),
-    input)``), or unmasked when every route shares it (the mask costs
-    more than the unrouted rows it skips): routes with equal registries
+    input)``), so unrouted rows skip it: routes with equal registries
     and fields share their cached plan, so the JVM evaluates each group
     once per row, and the projection stays small enough for the JIT (a
     method over 8,000 bytecodes runs interpreted). Its columns are
@@ -542,8 +541,7 @@ def _collect_routes(observed: DataFrame, routes: list[TableRoute], audit_in_appl
                 prefixes.append(f"__p{k}")
         plans.append((snap, lp, prefixes))
     parts = [c for k, members, g in shared.values()
-             for c in part_columns(g, F.col("_route").isin(members)
-                                   if len(members) < len(routes) else F.lit(True), f"__p{k}")]
+             for c in part_columns(g, F.col("_route").isin(members), f"__p{k}")]
     frame = observed.select("*", *parts)
     name = f"filters_spark: fan-out collect {os.path.basename(routes[0].engine.table.root)}"
     with job_description(frame.sparkSession, name):

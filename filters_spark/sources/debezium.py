@@ -42,7 +42,6 @@ instead.
 
 from __future__ import annotations
 
-import functools
 from typing import Mapping
 
 import pyspark.sql.functions as F
@@ -90,55 +89,6 @@ def default_seq_expr(source: Column) -> Column:
     return (
         source["pos"] * F.lit(65536) + F.coalesce(source["row"], F.lit(0))
     ).cast("long")
-
-
-@functools.lru_cache(maxsize=64)
-def _decode_columns(value_col, fields, schema_version, commit_expr, seq_expr, include_source):
-    """``parse_debezium``'s two projections: the envelope parse and the
-    event columns over it. Building them costs hundreds of JVM calls,
-    so each distinct argument tuple builds them once in the process
-    (``commit_expr`` / ``seq_expr`` compare by identity)."""
-    env = F.col("_env")
-    # schemas-enabled vs schemas-disabled: prefer the payload wrapper,
-    # fall back to the bare top-level fields
-    p = F.when(env["payload"].isNotNull(), env["payload"]).otherwise(
-        F.struct(
-            env["before"].alias("before"),
-            env["after"].alias("after"),
-            env["source"].alias("source"),
-            env["op"].alias("op"),
-            env["ts_ms"].alias("ts_ms"),
-        )
-    )
-    op = p["op"]
-    engine_op = None
-    for dbz, eng in _OP_MAP.items():
-        cond = op == dbz
-        engine_op = (
-            F.when(cond, F.lit(eng))
-            if engine_op is None
-            else engine_op.when(cond, F.lit(eng))
-        )
-    image = F.when(op == "d", p["before"]).otherwise(
-        F.coalesce(p["after"], p["before"])
-    )
-    src = p["source"]
-    commit = (commit_expr or default_commit_expr)(src)
-    seq = (seq_expr or default_seq_expr)(src)
-    cols = [
-        commit.alias("commit"),
-        seq.alias("event_seq"),
-        engine_op.alias("op"),
-        *[F.element_at(image, f).alias(f) for f in fields],
-        F.lit(schema_version).alias("schema_version"),
-    ]
-    if include_source:
-        cols += [
-            src["db"].alias("_src_db"),
-            src["table"].alias("_src_table"),
-            src["ts_ms"].alias("_src_ts_ms"),
-        ]
-    return F.from_json(F.col(value_col), ENVELOPE_DDL).alias("_env"), tuple(cols)
 
 
 def parse_debezium(
@@ -196,10 +146,47 @@ def parse_debezium(
     # The alias is non-cheap and multiply-referenced, so CollapseProject
     # keeps the projection apart and the parse runs once (plus, for
     # non-deferred callers, the pushed op filter's pruned copy).
-    parsed_col, cols = _decode_columns(
-        value_col, tuple(fields), schema_version, commit_expr, seq_expr, include_source
+    parsed = df.select(F.from_json(F.col(value_col), ENVELOPE_DDL).alias("_env"))
+    env = F.col("_env")
+    # schemas-enabled vs schemas-disabled: prefer the payload wrapper,
+    # fall back to the bare top-level fields
+    p = F.when(env["payload"].isNotNull(), env["payload"]).otherwise(
+        F.struct(
+            env["before"].alias("before"),
+            env["after"].alias("after"),
+            env["source"].alias("source"),
+            env["op"].alias("op"),
+            env["ts_ms"].alias("ts_ms"),
+        )
     )
-    parsed = df.select(parsed_col)
+    op = p["op"]
+    engine_op = None
+    for dbz, eng in _OP_MAP.items():
+        cond = op == dbz
+        engine_op = (
+            F.when(cond, F.lit(eng))
+            if engine_op is None
+            else engine_op.when(cond, F.lit(eng))
+        )
+    image = F.when(op == "d", p["before"]).otherwise(
+        F.coalesce(p["after"], p["before"])
+    )
+    src = p["source"]
+    commit = (commit_expr or default_commit_expr)(src)
+    seq = (seq_expr or default_seq_expr)(src)
+    cols = [
+        commit.alias("commit"),
+        seq.alias("event_seq"),
+        engine_op.alias("op"),
+        *[F.element_at(image, f).alias(f) for f in fields],
+        F.lit(schema_version).alias("schema_version"),
+    ]
+    if include_source:
+        cols += [
+            src["db"].alias("_src_db"),
+            src["table"].alias("_src_table"),
+            src["ts_ms"].alias("_src_ts_ms"),
+        ]
     out = parsed.select(*cols)
     if _defer_op_filter:
         return out

@@ -563,7 +563,7 @@ def _wire(spark, tmp, name, values):
 
 
 def _front_halves(spark, tmp, raw, spec, counted, monkeypatch, flavor="plain",
-                  unrouted="count", local_caps=()):
+                  unrouted="count", local_caps=(), audits=()):
     """Applies the envelope batch ``raw`` (a frame, or one per path)
     through both fan-out front halves to twin tables — the one-collect
     front half with driver stages (``local``) and the scratch write with
@@ -571,8 +571,8 @@ def _front_halves(spark, tmp, raw, spec, counted, monkeypatch, flavor="plain",
     everything a caller can observe is equal: the report or the error,
     the tables, dead letters, lineage and feed ledgers. ``spec``: one
     ``(table, db, write mode)`` per route; ``local_caps``: per route, a
-    ``LOCAL_MAX_ROWS`` for the local twin (None keeps the default).
-    Returns each twin's observations, with ``collects`` (front halves
+    ``LOCAL_MAX_ROWS`` for the local twin (None keeps the default);
+    ``audits``: per route, an ``audit_fn`` for both twins. Returns each twin's observations, with ``collects`` (front halves
     that collected) and ``driver_stages``."""
     collects = []
     real = fanout._collect_routes
@@ -586,7 +586,9 @@ def _front_halves(spark, tmp, raw, spec, counted, monkeypatch, flavor="plain",
         for e, cap in zip(engines, local_caps):
             if path == "local" and cap is not None:
                 e.LOCAL_MAX_ROWS = cap
-        routes = [TableRoute(t, e, db=db) for (t, db, _), e in zip(spec, engines)]
+        fns = list(audits) + [None] * (len(spec) - len(audits))
+        routes = [TableRoute(t, e, db=db, audit_fn=a)
+                  for (t, db, _), e, a in zip(spec, engines, fns)]
         frame = raw[path] if isinstance(raw, dict) else raw
         c0, s0 = len(collects), len(counted)
         try:
@@ -678,6 +680,37 @@ def test_front_halves_empty_batch_and_slice_over_local_max_rows(spark, tmp_path,
     assert got["collects"] == 1 and got["driver_stages"] == 1
     assert got["report"]["unrouted"] == {}
     assert got["tables"][0]["read"] and got["tables"][1]["read"]
+
+
+def test_front_halves_audited_route_stages_through_spark(spark, tmp_path, monkeypatch,
+                                                          counted):
+    """Under fan_out_debezium a route's audit_fn runs inside its
+    apply_batch, which the driver path does not audit: the collect
+    front half writes that route's slice to its scratch partition and
+    stages it through Spark, so a rejecting audit leaves its table and
+    feed ledger untouched, while the unaudited sibling stages on the
+    driver. A Collected batch handed to apply_batch with an audit_fn
+    is refused."""
+    tmp = str(tmp_path)
+    audited = []
+
+    def reject(table, wap_id):
+        audited.append(table.read(wap_id=wap_id).count())
+        return False
+
+    spec = [("repos", None, "mor"), ("users", None, "cow")]
+    raw = _wire(spark, tmp, "mixed", _feed(20, "repos") + _feed(8, "users", file_no=2))
+    both = _front_halves(spark, tmp, raw, spec, counted, monkeypatch, audits=(reject,))
+    got = both["local"]
+    assert got["collects"] == 1 and got["driver_stages"] == 1
+    assert len(audited) == 2 and audited[0] == audited[1] > 0
+    rejected, kept = got["tables"]
+    assert rejected["metrics"][0]["audit"] == "rejected"
+    assert rejected["snapshot"] == 0 and rejected["read"] == [] and rejected["dead"] == []
+    assert got["feeds"][0] == [] and kept["read"] and got["feeds"][1]
+    eng = twins(spark, os.path.join(tmp, "direct"))["local"]
+    with pytest.raises(ValueError, match="cannot be audited"):
+        eng.apply_batch(local.Collected(pa.table({}), None, None), audit_fn=reject)
 
 
 @pytest.mark.parametrize("flavor", ["plain", "atomic"])
