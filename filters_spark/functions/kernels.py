@@ -489,14 +489,16 @@ class RoundK(Kernel):
 # Non-printable class: everything in Unicode category C except whitespace
 # (double negative keeps \n etc.), string.py:687-697.
 _NPR = _regex.compile(r"[^\P{C}\s]+", _regex.UNICODE)
-# RE2 twin for the ASCII fast path. NOT the same deletion set in
-# general: RE2's \s is [\t\n\f\r ] (no \x0b, no \x85) and its \p{C}
-# misses unassigned codepoints (Cn) — hypothesis-found divergences vs
-# the reference's Python-regex semantics. Within ASCII the only gap is
-# \x0b (vertical tab: White_Space in Python regex, plain Cc in RE2),
-# excluded here explicitly; non-ASCII strings bypass RE2 entirely
+# The ASCII members of _NPR as an RE2 class: Cc minus the whitespace
+# \t \n \x0b \f \r. RE2's own \p{C} and \s are NOT _NPR's sets: its \s
+# is [\t\n\f\r ] (no \x0b, no \x85) and its \p{C} misses unassigned
+# codepoints (Cn) — hypothesis-found divergences vs the reference's
+# Python-regex semantics — so no non-ASCII codepoint is deleted by RE2
 # (see UnicodeK._normalize_vec).
-_NPR_RE2 = r"[^\P{C}\s\x0b]+"
+_NPR_ASCII = r"[\x00-\x08\x0e-\x1f\x7f]+"
+# UnicodeK._normalize_vec's head length, in codepoints: generated and
+# code-corpus text carries its non-ASCII hazards in a short head.
+_HEAD = 64
 
 
 def _is_all_strings(sub: pd.Series) -> bool:
@@ -508,9 +510,9 @@ class UnicodeK(Kernel):
     NFC form, strip non-printables, unix newlines.
 
     Fast path: when the batch is all-``str`` (the CDC hot path), the
-    normalize pipeline runs fully vectorized in pyarrow C++ —
-    ``replace_substring_regex`` (RE2) + ``utf8_normalize`` — with zero
-    per-element Python.
+    normalize pipeline runs vectorized in pyarrow C++ (RE2), with
+    per-element Python only over the head of a non-ASCII string
+    (:meth:`_normalize_vec`).
     """
 
     name = "unicode"
@@ -538,24 +540,42 @@ class UnicodeK(Kernel):
             return None, self.err("wrong_encoding", encoding=self.encoding)
 
     def _normalize_vec(self, texts: pd.Series) -> pd.Series:
-        # ASCII strings: one RE2 pass IS the reference semantics (with
-        # \x0b excluded from the deletion class, see _NPR_RE2) and ASCII
-        # is NFC by construction — zero per-element Python on the
-        # code-corpus hot path (str.isascii is a cheap C flag check).
-        # Non-ASCII strings take the scalar reference path: RE2's
-        # deletion set diverges from Python regex outside ASCII in BOTH
-        # directions (keeps unassigned Cn like U+18DF3, deletes NEL
-        # U+0085 that the reference keeps as whitespace), so they never
-        # enter the Arrow pass.
+        # ASCII strings: one RE2 pass (with the CRLF rewrite) IS the
+        # reference, ASCII being NFC by construction. A non-ASCII string
+        # whose tail past _HEAD codepoints is ASCII takes the scalar
+        # reference on its head only and the RE2 pass on its tail: the
+        # deletion is per codepoint, and NFC never reaches across an
+        # ASCII codepoint (ccc=0, NFC_QC=Yes, composes with nothing
+        # before it). CRLF runs after the halves are joined, as a
+        # deletion can join \r and \n. Other non-ASCII strings take
+        # the scalar reference whole.
         vals = texts.tolist()
-        at = [i for i, v in enumerate(vals) if v is not None and v.isascii()]
-        out = [None if v is None or v.isascii() else self._normalize_one(v) for v in vals]
-        if at:
-            arr = pa.array([vals[i] for i in at], type=pa.string())
-            arr = pc.replace_substring_regex(arr, pattern=_NPR_RE2, replacement="")
+        out = [None] * len(vals)
+        fast, tails, split, heads = [], [], [], []
+        for i, v in enumerate(vals):
+            if v is None:
+                continue
+            if v.isascii():
+                fast.append(i)
+                tails.append(v)
+                split.append(False)
+            elif (tail := v[_HEAD:]) and tail.isascii():
+                fast.append(i)
+                tails.append(tail)
+                split.append(True)
+                heads.append(unicodedata.normalize("NFC", _NPR.sub("", v[:_HEAD])))
+            else:
+                out[i] = self._normalize_one(v)
+        if fast:
+            arr = pc.replace_substring_regex(pa.array(tails, type=pa.string()),
+                                             pattern=_NPR_ASCII, replacement="")
+            if heads:
+                split = pa.array(split)
+                arr = pc.replace_with_mask(arr, split, pc.binary_join_element_wise(
+                    pa.array(heads, type=pa.string()), arr.filter(split), ""))
             arr = pc.replace_substring(arr, pattern="\r\n", replacement="\n")
             arr = pc.replace_substring(arr, pattern="\r", replacement="\n")
-            for i, v in zip(at, arr.to_pylist()):
+            for i, v in zip(fast, arr.to_numpy(zero_copy_only=False)):
                 out[i] = v
         return _obj(out, texts.index)
 

@@ -59,6 +59,25 @@ class TestUnicode:
         passes(["unicode"], None, None)
 
 
+    def test_vectorized_head_split_matches_scalar_on_every_codepoint(self):
+        # the vectorized normalize takes the scalar reference on a
+        # string's first 64 codepoints when the rest is ASCII: every
+        # non-ASCII codepoint between an 'e' and a combining acute at
+        # the end of that head, and after an 'e' just past it, over
+        # ASCII text with \r / \n / control-char seams
+        import pandas as pd
+
+        from filters_spark.functions.kernels import UnicodeK
+
+        u = UnicodeK(normalize=True)
+        cps = [chr(c) for c in range(0x80, 0x20000) if not 0xD800 <= c < 0xE000]
+        body = "x\r\x00\n" * 20
+        batch = ["a" * 61 + "e" + c + "\u0301" + body for c in cps] \
+            + ["a" * 63 + "e" + c + body for c in cps]
+        got = u._normalize_vec(pd.Series(batch, dtype=object)).tolist()
+        assert got == [u._normalize_one(v) for v in batch]
+
+
 class TestByteString:
     def test_str_to_bytes(self):
         passes(["byte_string"], "héllo", "héllo".encode("utf-8"))

@@ -109,6 +109,26 @@ class TestStringKernelProperties:
         u = UnicodeK(normalize=True)
         assert u._normalize_vec(pd.Series([s]))[0] == u._normalize_one(s)
 
+    @given(st.lists(st.tuples(
+        st.text(alphabet="ab \r\n\x00\x0b\x7f\x85\xa0\u3000\u200b\u0378\U00018df3\u0301\xe9\uac00",
+                max_size=80),
+        st.text(alphabet="ab \t\r\n\x00\x1f\x7f", min_size=64, max_size=300),
+        st.text(alphabet="ab\r\x85\u0301\u0378\U00018df3", max_size=4),
+    ), min_size=1, max_size=8))
+    @settings(max_examples=200, deadline=None)
+    def test_unicode_vec_head_and_tail_match_scalar_reference(self, parts):
+        # long strings, one batch: non-ASCII hazards in a head shorter
+        # or longer than the vectorized path's 64-codepoint head, over
+        # an ASCII body, and sometimes a non-ASCII tail
+        import pandas as pd
+
+        from filters_spark.functions.kernels import UnicodeK
+
+        u = UnicodeK(normalize=True)
+        batch = ["".join(p) for p in parts]
+        got = u._normalize_vec(pd.Series(batch, dtype=object)).tolist()
+        assert got == [u._normalize_one(v) for v in batch]
+
 
 class TestIdentifierKernelProperties:
     @given(st.uuids())
